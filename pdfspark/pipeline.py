@@ -12,9 +12,13 @@ zero row-wise ``udf()``); a document never crosses a partition boundary
 mid-parse.
 
 Scale notes (100 TB / 1000-executor framing):
-- Salting: ``part_key = pmod(xxhash64(url), P)`` randomizes giant-PDF
+- Salting: the salt ``pmod(xxhash64(url), P)`` randomizes giant-PDF
   placement so no partition accumulates the skew tail; P should be chosen
-  ≈ 2-4× total cores. AQE handles residual skew on the relational side.
+  ≈ 2-4× total cores. Rows are placed on partition ``salt`` directly
+  (``repartitionById``): a hash-repartition on the salt would hash it a
+  second time, and the P salt values then collide onto fewer than P
+  partitions (8 salts on 4 of 8), which doubles the slowest task. AQE
+  handles residual skew on the relational side.
 - The kernel bounds memory per task: one Arrow batch at a time
   (``spark.sql.execution.arrow.maxRecordsPerBatch``) + a per-document
   decode-size guard in the kernel (document.py ``_MAX_DECODED_STREAM``).
@@ -67,6 +71,9 @@ def build_session(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
+        # pyspark.daemon with a cheap per-task importlib.invalidate_caches()
+        # (pdfspark/worker_daemon.py); the daemon imports it from REPO_ROOT
+        .config("spark.python.daemon.module", "pdfspark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():
@@ -361,11 +368,11 @@ def extract_pages(
     pages = pages.select("url", "html")
     if resalt:
         nsalt = nsalt or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        # giant-PDF skew: hash-salt on url spreads the size tail uniformly;
-        # one doc = one row, so partition cost ≈ sum of its doc sizes
-        pages = pages.withColumn(
-            "salt", F.pmod(F.xxhash64("url"), F.lit(nsalt))
-        ).repartition(nsalt, "salt").drop("salt")
+        # giant-PDF skew: the url hash spreads the size tail uniformly;
+        # one doc = one row, so partition cost ≈ sum of its doc sizes.
+        # The salt IS the partition id (placed directly, no re-hash)
+        pages = pages.repartitionById(
+            nsalt, F.pmod(F.xxhash64("url"), F.lit(nsalt)).cast("int"))
     return pages.mapInPandas(_extract_batches, EXTRACT_SCHEMA)
 
 
@@ -575,6 +582,9 @@ def extract_pages_skew_aware(
       so with a realistic <1% big-doc fraction each bucket holds ~one
       giant doc and a straggler is bounded by a single document)
 
+    Each salt value is its own partition (``repartitionById``), so a
+    small-tier bucket never shares a task with a giant-doc bucket.
+
     At 100 TB the cutoff is tuned so the big tier is <1% of rows but
     would otherwise dominate tail latency (crawl PDF sizes are log-normal
     with a heavy tail).
@@ -583,16 +593,12 @@ def extract_pages_skew_aware(
     nsalt = nsalt or int(spark.conf.get("spark.sql.shuffle.partitions"))
     nbig = nsalt * big_buckets_factor
     pdf = filter_pdf_rows(pages).select("url", "html")
-    salted = pdf.withColumn(
-        "salt",
-        F.when(
-            F.length("html") <= big_cutoff_bytes,
-            F.pmod(F.xxhash64("url"), F.lit(nsalt)),
-        ).otherwise(nsalt + F.pmod(F.xxhash64("url"), F.lit(nbig))),
-    )
+    salt = F.when(
+        F.length("html") <= big_cutoff_bytes,
+        F.pmod(F.xxhash64("url"), F.lit(nsalt)),
+    ).otherwise(nsalt + F.pmod(F.xxhash64("url"), F.lit(nbig)))
     return (
-        salted.repartition(nsalt + nbig, "salt")
-        .drop("salt")
+        pdf.repartitionById(nsalt + nbig, salt.cast("int"))
         .mapInPandas(_extract_batches, EXTRACT_SCHEMA)
     )
 

@@ -5998,108 +5998,92 @@ def doc_length_percentile_buckets(spark, sf_dir):
 # history cede their slots (they remain registered, locally gated, and
 # fully oracled). Every name must stay registered in QUERIES.
 DRIVER_PRIORITY = [
-    # -- r8 rotation (VERDICT r7 next #1, pure transcription of the
-    # pre-verified r7 plan): the 25 FORCED names lead — the r5-cohort
-    # leftovers absent from BOTH CORRECTNESS_r06 and _r07 (their
-    # latest verdict is r5 and would age past 2 rounds otherwise;
-    # incl. shard_pack_token_budget, which ceded its r7 slot to the
-    # late-r7 text_longest_repeat registration) — followed by the 25
-    # pre-picked fill names: the alphabetical first half of the r6
-    # cohort (CORRECTNESS_r06's 50 names; the other half is forced at
-    # r9). The r7 window (50 green in CORRECTNESS_r07) cedes its
-    # slots; it stays registered and locally oracle-gated at two SFs.
-    # The r8 registrations dedup_gram_takedown (#126, VERDICT r7 next
-    # #4), ann_index_takedown (#127, the batch face of the late-r8
-    # IVF index family) and dedup_digest_takedown (#128, the batch
-    # face of the late-r8 digest index family) lead the window (new
-    # registrations need a first verdict — r3 window rule) and
-    # displace pdf_extract_stats, pdf_bidi_reading_order and
-    # html_table_spans from the fill into the r9 forced set (all
-    # r6-green, age 2 at r8 — legal outside the window today, forced
-    # at r9; bidi's r8 bracket-mirroring change is output-neutral,
-    # see text_to_pdf_bidi's docstring).
-    # r9 PLAN (keep rotation mechanical): the r9 FORCED set is the
-    # alphabetical second half of the r6 cohort PLUS the displaced
-    # pdf_extract_stats, pdf_bidi_reading_order and html_table_spans
-    # (28 names, latest verdict r6) — html_table_spans,
-    # pdf_bidi_reading_order,
-    # pdf_extract_stats, pdf_magic_filter, pdf_rtl_reading_order, pdf_spans,
-    # pdf_table_colspan, pdf_table_header_flag, pdf_table_multipage,
-    # pdf_table_ragged, pdf_table_sparse, pdf_vertical_reading_order,
-    # q1_pricing_summary, q3_top_open_orders, range_join_events_windows,
-    # sample_match_distribution, semi_join_active_customers,
-    # session_window_agg, shard_pack_sections, text_compression_ratio,
-    # text_lang_id, text_quality_score, text_winnowing_neardup,
-    # top_orders_global, unpivot_order_year_counts,
-    # url_blocklist_filter, window_running_sum, window_topk_per_group
-    # (age-3 at r9 unless checked) — fill r9's remaining 22 slots from
-    # the r7 cohort (green in CORRECTNESS_r07, ages out at r10),
-    # alphabetical first half, computed at r9 rotation time from
-    # CORRECTNESS_r07/r08.
-    # -- r9 rotation (pure transcription of the pre-verified r9 PLAN
-    # above, executed at round 9 start): the 28 FORCED names lead —
-    # the alphabetical second half of the r6 cohort plus the three
-    # names displaced from the r8 fill by the late-r8 registrations
-    # (all with latest verdict r6, which ages past 2 rounds now that
-    # CORRECTNESS_r08.json is the newest ledger; verified: these 28
-    # are exactly the registered names absent from BOTH
-    # CORRECTNESS_r07 and _r08) — followed by the 22 fill names: the
-    # alphabetical first half of the r7 cohort (CORRECTNESS_r07's 50
-    # names, which age out at r10). The r8 window (50 green in
-    # CORRECTNESS_r08) cedes its slots; it stays registered and
-    # locally oracle-gated at two SFs.
-    # -- forced: r6-cohort second half + 3 displaced (latest verdict r6) --
-    "html_table_spans",
-    "pdf_bidi_reading_order",
-    "pdf_extract_stats",
-    "pdf_magic_filter",
-    "pdf_rtl_reading_order",
-    "pdf_spans",
-    "pdf_table_colspan",
-    "pdf_table_header_flag",
-    "pdf_table_multipage",
-    "pdf_table_ragged",
-    "pdf_table_sparse",
-    "pdf_vertical_reading_order",
-    "q1_pricing_summary",
-    "q3_top_open_orders",
-    "range_join_events_windows",
-    "sample_match_distribution",
-    "semi_join_active_customers",
-    "session_window_agg",
-    "shard_pack_sections",
-    "text_compression_ratio",
-    "text_lang_id",
-    "text_quality_score",
-    "text_winnowing_neardup",
-    "top_orders_global",
-    "unpivot_order_year_counts",
-    "url_blocklist_filter",
-    "window_running_sum",
-    "window_topk_per_group",
-    # -- fill: alphabetical first half of the r7 cohort --
-    "agg_cube",
-    "agg_grouping_sets",
-    "ann_ivf_recall",
-    "ann_numpy_topk",
-    "ann_signlsh_topk",
-    "approx_distinct_urls",
-    "asof_join_last_click",
-    "boilerplate_line_removal",
-    "correlated_subquery_above_avg",
-    "decontaminate_ngram_overlap",
-    "dedup_incremental_minhash",
-    "dedup_ngram_jaccard",
-    "dedup_simhash_pairs",
-    "events_funnel",
-    "exists_subquery_multi_item_orders",
-    "html_extract_roundtrip",
-    "mixed_corpus_extract",
-    "multimodal_feature_extract",
-    "multimodal_meta",
-    "orders_monthly_growth",
-    "pdf_annots_text",
-    "pdf_attachments",
+    # Rotation is mechanical: each round, the names whose latest
+    # verdict would age past 2 rounds are FORCED to the front, and the
+    # remaining slots take the alphabetical first half of the oldest
+    # cohort still in the ledgers (r8 and r9 rotations: see git history).
+    # -- r10 rotation (pure transcription of the r9 PLAN): the 28 FORCED
+    # names lead — the alphabetical second half of the r7 cohort
+    # (CORRECTNESS_r07's names not filled at r9; latest verdict r7, age
+    # past 2 rounds at r10) — followed by the 22 fill names: the
+    # alphabetical first half of the r8 cohort (CORRECTNESS_r08's 50
+    # names, which age out at r11). The r9 window cedes its slots; it
+    # stays registered and locally oracle-gated at two SFs.
+    # NOTE: CORRECTNESS_r09.json is byte-identical to _r08 (last
+    # round's names are re-checked first, VERDICT r9), not the r9
+    # window. Read literally, the two newest ledgers then cover only 50
+    # of 128 names and the 78 others cannot fit a 50-slot window, so
+    # test_driver_window_curation stays red under ANY rotation until a
+    # ledger records a different window.
+    # r11 PLAN (keep rotation mechanical): the r11 FORCED set is the
+    # alphabetical second half of the r8 cohort (28 names, latest
+    # verdict r8) — embedding_cosine_neardup, embedding_norms,
+    # events_daily_rollup, events_json_extract, events_sessionization,
+    # filter_pushdown_scan, grouped_stats_apply_in_pandas,
+    # html_doc_titles, html_heading_outline, html_link_density_blocks,
+    # html_list_items, html_section_chunks, html_table_cells,
+    # multimodal_audio_meta, multimodal_frame_sample,
+    # multimodal_image_meta, multimodal_resize, multimodal_video_meta,
+    # pdf_extract_skew_aware, pdf_multipage_roundtrip,
+    # quality_classifier_linear, sample_stratified, shard_materialize,
+    # shard_pack_token_budget, source_mixture_weights,
+    # text_repetition_signals, text_unigram_commonness,
+    # token_count_pandas_udf — then fill r11's remaining 22 slots from
+    # the r9 cohort (the names CORRECTNESS_r09 records; they age out at
+    # r12), alphabetical first half, computed at r11 rotation time from
+    # CORRECTNESS_r09/r10.
+    # -- forced: r7-cohort second half (latest verdict r7) --
+    "pdf_cjk_embedded_widths",
+    "pdf_columns_reading_order",
+    "pdf_density_columns",
+    "pdf_doc_metadata",
+    "pdf_error_rows",
+    "pdf_extract_roundtrip",
+    "pdf_kerned_wordbreak",
+    "pdf_layout_mix_extract",
+    "pdf_link_uris",
+    "pdf_multipage_spans",
+    "pdf_outlines",
+    "pdf_post_glyph_names",
+    "pdf_regression_join",
+    "pdf_struct_reading_order",
+    "pdf_table_cells",
+    "percentiles_exact",
+    "pivot_status_by_priority",
+    "q5_region_revenue",
+    "set_except_custkeys",
+    "set_intersect_custkeys",
+    "set_union_distinct",
+    "text_char_entropy",
+    "text_fingerprint",
+    "text_gopher_quality",
+    "text_longest_repeat",
+    "text_pii_scrub",
+    "text_token_count",
+    "window_range_interval_frame",
+    # -- fill: alphabetical first half of the r8 cohort --
+    "agg_rollup",
+    "ann_bruteforce_topk",
+    "ann_index_takedown",
+    "ann_ivf_bucketed",
+    "ann_numpy_ivf",
+    "anti_join_inactive_customers",
+    "corpus_quality_filter",
+    "curation_pipeline",
+    "decontaminate_exact_substring",
+    "decontaminate_span_excise",
+    "dedup_canonical_url",
+    "dedup_components",
+    "dedup_digest_takedown",
+    "dedup_exact",
+    "dedup_gram_takedown",
+    "dedup_keeplist",
+    "dedup_minhash_lsh",
+    "dedup_paragraph_exact",
+    "dedup_simhash",
+    "dedup_substring_spans",
+    "distinct_customers_exact",
+    "doc_length_percentile_buckets",
 ]
 
 

@@ -48,11 +48,32 @@ def test_extraction_no_shuffle_when_presalted(spark):
 
 
 def test_extraction_salting_is_single_exchange(spark):
-    from pdfspark.pipeline import extract_pages, pages_from_fixtures
+    """Salting is ONE exchange that places each row on its salt directly:
+    a hash-repartition on the salt hashes it again and collides the salts
+    onto fewer partitions (8 salts on 4 of 8)."""
+    from pdfspark.pipeline import (extract_pages, extract_pages_skew_aware,
+                                   pages_from_fixtures)
 
     pages = pages_from_fixtures(spark)
     plan = plan_of(extract_pages(pages, resalt=True, nsalt=8))
     assert plan.count("Exchange") == 1, plan
+    assert "shufflepartitionidpassthrough" in plan.lower(), plan
+
+    pages = pages_from_fixtures(spark, copies=2)
+    parts = {r.part_id for r in
+             extract_pages(pages, nsalt=8).select("part_id").collect()}
+    assert len(parts) == 8, parts
+
+    # two-tier path: a small-tier bucket never shares a partition with a
+    # giant-doc bucket
+    cutoff = 2000
+    tiers: dict = {}
+    for r in extract_pages_skew_aware(
+            pages, nsalt=8, big_cutoff_bytes=cutoff).select(
+            "part_id", "pdf_bytes").collect():
+        tiers.setdefault(r.part_id, set()).add(r.pdf_bytes > cutoff)
+    assert {True} in tiers.values() and {False} in tiers.values(), tiers
+    assert all(len(t) == 1 for t in tiers.values()), tiers
 
 
 def test_roundtrip_is_single_fused_python_stage(spark):

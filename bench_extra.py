@@ -3,9 +3,9 @@
 FROZEN for the driver; this file hosts the round's working measurements.
 
 Usage: python3 bench_extra.py [query ...] [--reps N]
-Defaults to the bench headline set, 4 reps per query, min + all samples
+Defaults to bench.py's headline set, 4 reps per query, min + all samples
 reported as one JSON line. Same env contract as bench.py
-(SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS), same taskset pinning.
+(SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS) and bench.py's own taskset pinning.
 """
 from __future__ import annotations
 
@@ -17,34 +17,7 @@ import time
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO_ROOT)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-HEADLINE = [
-    "pdf_extract_roundtrip",
-    "html_extract_roundtrip",
-    "q1_pricing_summary",
-    "q5_region_revenue",
-    "window_running_sum",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "ann_bruteforce_topk",
-    "text_token_count",
-]
-
-
-def _pin_affinity() -> None:
-    if os.environ.get("PDFSPARK_BENCH_PINNED") == "1":
-        return
-    if not os.path.exists("/usr/bin/taskset"):
-        return
-    os.environ["PDFSPARK_BENCH_PINNED"] = "1"
-    ncpu = os.cpu_count() or CPUS
-    os.execvp(
-        "/usr/bin/taskset",
-        ["taskset", "-c", f"0-{min(CPUS, ncpu) - 1}", sys.executable]
-        + sys.argv,
-    )
+from bench import BENCH_QUERIES, CPUS, SF_DIR, _pin_affinity  # noqa: E402
 
 
 def main() -> None:
@@ -55,7 +28,7 @@ def main() -> None:
         i = args.index("--reps")
         reps = int(args[i + 1])
         args = args[:i] + args[i + 2:]
-    names = args or HEADLINE
+    names = args or BENCH_QUERIES
 
     from pdfspark.pipeline import build_session
     from pdfspark.queries import QUERIES

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import os
 import time
-from typing import Iterator, Optional
+from typing import Iterator, Optional, Tuple
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -181,52 +181,47 @@ def _parse_bytes_conf(v: str) -> int:
         return 128 * 1024 * 1024
 
 
-def _parquet_scan_width(path: str, max_partition_bytes: int) -> int:
-    """Scan-width probe from parquet FOOTERS (no Spark job — replaces
-    the ``df.rdd.getNumPartitions()`` handle, VERDICT r3 wrong #3).
+def _parquet_footer_probe(spark: SparkSession,
+                          path: str) -> Optional[Tuple[int, int]]:
+    """``(scan_width, num_rows)`` of a parquet file or directory, read
+    from the FOOTERS alone (no Spark job — never
+    ``df.rdd.getNumPartitions()`` in a per-invocation path, VERDICT r3
+    wrong #3).
 
-    Spark splits a file into ceil(bytes / maxPartitionBytes) byte
-    ranges, but a parquet task only yields rows for row groups whose
-    midpoint falls in its range — so the EFFECTIVE width is
-    min(row_groups, byte_splits) per file (64 tiny row groups in a
-    10 MB file still scan ~1-wide; one giant row group in a 1 GB file
-    also scans 1-wide). Summed across files. Unknown/unreadable layout
-    returns 0 (→ repartition, the safe side)."""
+    One recursive walk reads every ``*.parquet`` footer below ``path``, so
+    hive-partitioned ``k=v/`` directories count like flat ones. Spark
+    splits a file into ceil(bytes / maxPartitionBytes) byte ranges (the
+    session's ``spark.sql.files.maxPartitionBytes``), but a
+    parquet task only yields rows for row groups whose midpoint falls in
+    its range — so the EFFECTIVE width is min(row_groups, byte_splits) per
+    file (64 tiny row groups in a 10 MB file still scan ~1-wide; one giant
+    row group in a 1 GB file also scans 1-wide), summed across files.
+
+    ``None`` = unknown layout (no file found, or a footer unreadable).
+    Every caller maps it to its scale-safe side: treat the scan as narrow
+    (widen it) and the table as large."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    def one(f: str) -> int:
-        meta = pq.ParquetFile(f).metadata
-        byte_splits = max(
-            1, -(-os.path.getsize(f) // max_partition_bytes))
-        return min(meta.num_row_groups, byte_splits)
-
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = [os.path.join(d, f) for d, _, names in os.walk(path)
+                 for f in names if f.endswith(".parquet")]
+    if not files:
+        return None
+    mpb = _parse_bytes_conf(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+    width = rows = 0
     try:
-        if os.path.isdir(path):
-            return sum(
-                one(os.path.join(path, f))
-                for f in os.listdir(path) if f.endswith(".parquet")
-            )
-        return one(path)
-    except Exception:
-        return 0
-
-
-def _parquet_num_rows(path: str) -> int:
-    """Row count from parquet FOOTERS (no Spark job — same probe
-    discipline as ``_parquet_scan_width``). Unknown/unreadable layout
-    returns -1, which callers must treat as "assume large" (the
-    scale-safe side)."""
-    import pyarrow.parquet as pq
-
-    try:
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path) if f.endswith(".parquet")
-            )
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return -1
+        for f in files:
+            meta = pq.ParquetFile(f).metadata
+            byte_splits = max(1, -(-os.path.getsize(f) // mpb))
+            width += min(meta.num_row_groups, byte_splits)
+            rows += meta.num_rows
+    except (OSError, pa.ArrowException):
+        return None
+    return width, rows
 
 
 def _table_repartitioned(spark: SparkSession, sf_dir: str, name: str,
@@ -241,9 +236,8 @@ def _table_repartitioned(spark: SparkSession, sf_dir: str, name: str,
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    mpb = _parse_bytes_conf(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    if _parquet_scan_width(path, mpb) < nparts:
+    probe = _parquet_footer_probe(spark, path)
+    if probe is None or probe[0] < nparts:
         df = df.repartition(nparts, key)
     return df
 
@@ -256,45 +250,11 @@ def _documents_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------------- kernel
 
-def _append_extract_row(cols: dict, url, buf: bytes, part_id: int,
-                        extract_document) -> None:
-    """Columnar accumulation shared by the extraction mapInPandas bodies:
-    building one list per column beats per-row dicts when pandas assembles the
-    Arrow batch (profiled ~8% on the distributed path)."""
-    import time
-
-    t0 = time.perf_counter()
-    r = extract_document(buf)
-    elapsed = (time.perf_counter() - t0) * 1000.0
-    cols["url"].append(url)
-    cols["text"].append(r.text)
-    cols["spans"].append(
-        [{"page": s.page, "start": s.start, "end": s.end} for s in r.spans]
-    )
-    cols["n_pages"].append(r.n_pages)
-    cols["error"].append(r.error)
-    cols["doc_lang"].append(r.lang)
-    cols["doc_title"].append(r.title)
-    cols["created"].append(r.created)
-    cols["annots_text"].append(r.annots)
-    cols["outlines_text"].append(r.outlines)
-    cols["n_chars"].append(len(r.text) if r.text is not None else 0)
-    cols["pdf_bytes"].append(len(buf))
-    cols["kernel_ms"].append(elapsed)
-    cols["part_id"].append(part_id)
-    cols["links_uri"].append(r.links)
-    cols["attachments"].append(r.attachments)
-    cols["page_labels"].append(r.page_labels)
-    cols["outline_pages"].append(r.outline_pages)
-
-
 def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
     """mapInPandas body: Arrow batches of (url, html) in, extraction rows
-    out. Imports inside so the closure is self-contained on workers."""
-    import sys
-
-    if REPO_ROOT not in sys.path:  # worker bootstrap
-        sys.path.insert(0, REPO_ROOT)
+    out. Rows accumulate one list per column: that beats per-row dicts
+    when pandas assembles the Arrow batch (profiled ~8% on the
+    distributed path)."""
     import pandas as pd
     from pyspark import TaskContext
 
@@ -307,7 +267,30 @@ def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
         cols = {name: [] for name in col_names}
         for url, html in zip(pdf_batch["url"], pdf_batch["html"]):
             buf = bytes(html) if html is not None else b""
-            _append_extract_row(cols, url, buf, part_id, extract_document)
+            t0 = time.perf_counter()
+            r = extract_document(buf)
+            elapsed = (time.perf_counter() - t0) * 1000.0
+            cols["url"].append(url)
+            cols["text"].append(r.text)
+            cols["spans"].append(
+                [{"page": s.page, "start": s.start, "end": s.end}
+                 for s in r.spans]
+            )
+            cols["n_pages"].append(r.n_pages)
+            cols["error"].append(r.error)
+            cols["doc_lang"].append(r.lang)
+            cols["doc_title"].append(r.title)
+            cols["created"].append(r.created)
+            cols["annots_text"].append(r.annots)
+            cols["outlines_text"].append(r.outlines)
+            cols["n_chars"].append(len(r.text) if r.text is not None else 0)
+            cols["pdf_bytes"].append(len(buf))
+            cols["kernel_ms"].append(elapsed)
+            cols["part_id"].append(part_id)
+            cols["links_uri"].append(r.links)
+            cols["attachments"].append(r.attachments)
+            cols["page_labels"].append(r.page_labels)
+            cols["outline_pages"].append(r.outline_pages)
         yield pd.DataFrame(cols, columns=col_names)
 
 
@@ -564,11 +547,14 @@ def table_cells_extract(spark: SparkSession, sf_dir: str,
     return docs.mapInPandas(run, schema)
 
 
+# big-tier key space of extract_pages_skew_aware, in multiples of nsalt
+_BIG_BUCKETS_FACTOR = 8
+
+
 def extract_pages_skew_aware(
     pages: DataFrame,
     nsalt: Optional[int] = None,
     big_cutoff_bytes: int = 4 << 20,
-    big_buckets_factor: int = 8,
 ) -> DataFrame:
     """Size-aware salting for giant PDFs (SURVEY.md §2B salting row).
 
@@ -591,7 +577,7 @@ def extract_pages_skew_aware(
     """
     spark = pages.sparkSession
     nsalt = nsalt or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nbig = nsalt * big_buckets_factor
+    nbig = nsalt * _BIG_BUCKETS_FACTOR
     pdf = filter_pdf_rows(pages).select("url", "html")
     salt = F.when(
         F.length("html") <= big_cutoff_bytes,
@@ -905,7 +891,7 @@ def _synth_page(i: int, text: str, lang, fmt: str,
 
 
 def roundtrip_extract(spark: SparkSession, sf_dir: str,
-                      fmt: str = "pdf", light: bool = False) -> DataFrame:
+                      fmt: str = "pdf") -> DataFrame:
     """FUSED synth→extract for the roundtrip harness queries.
 
     ``pages_from_documents → extract_pages`` is the production shape (the
@@ -920,61 +906,34 @@ def roundtrip_extract(spark: SparkSession, sf_dir: str,
     pdf_spans / pdf_error_rows / pdf_multipage_* / pdf_extract_skew_aware
     and scripts/submit_extract.py.
 
-    ``light=True`` emits only (url, text): the roundtrip queries project
-    everything else away anyway, but mapInPandas is opaque to Catalyst so
-    without this the Python side still assembled all 18 columns —
+    Emits only (url, text): the roundtrip queries project everything
+    else away anyway, but mapInPandas is opaque to Catalyst, so a full
+    extraction schema would still be assembled on the Python side —
     including the array<struct> spans column, the slowest pandas→Arrow
     conversion of the batch (guide §4.1; measured ~14% of the flagship
-    wall at sf1.0). The full-schema path is unchanged for callers that
-    need the metrics columns."""
+    wall at sf1.0)."""
     docs = _documents_repartitioned(spark, sf_dir)
 
-    if light:
-        def gen_light(batches):
-            import sys
-
-            if REPO_ROOT not in sys.path:
-                sys.path.insert(0, REPO_ROOT)
-            import pandas as pd
-
-            from pdfspark.kernel.extract import extract_document
-
-            for b in batches:
-                urls, texts = [], []
-                for doc_id, text, lang in zip(b["doc_id"], b["text"],
-                                              b["lang"]):
-                    i = int(doc_id)
-                    url, buf = _synth_page(i, text, lang, fmt, 0)
-                    urls.append(url)
-                    texts.append(extract_document(buf).text)
-                yield pd.DataFrame({"url": urls, "text": texts},
-                                   columns=["url", "text"])
-
-        return docs.mapInPandas(gen_light, "url string, text string")
-
-    def gen_extract(batches):
+    def gen(batches):
         import sys
 
         if REPO_ROOT not in sys.path:
             sys.path.insert(0, REPO_ROOT)
         import pandas as pd
-        from pyspark import TaskContext
 
         from pdfspark.kernel.extract import extract_document
 
-        tc = TaskContext.get()
-        part_id = tc.partitionId() if tc is not None else -1
-        col_names = [f.name for f in EXTRACT_SCHEMA.fields]
         for b in batches:
-            cols = {name: [] for name in col_names}
+            urls, texts = [], []
             for doc_id, text, lang in zip(b["doc_id"], b["text"], b["lang"]):
                 i = int(doc_id)
                 url, buf = _synth_page(i, text, lang, fmt, 0)
-                _append_extract_row(cols, url, buf, part_id,
-                                    extract_document)
-            yield pd.DataFrame(cols, columns=col_names)
+                urls.append(url)
+                texts.append(extract_document(buf).text)
+            yield pd.DataFrame({"url": urls, "text": texts},
+                               columns=["url", "text"])
 
-    return docs.mapInPandas(gen_extract, EXTRACT_SCHEMA)
+    return docs.mapInPandas(gen, "url string, text string")
 
 
 def pages_from_fixtures(spark: SparkSession, copies: int = 1) -> DataFrame:

@@ -48,6 +48,30 @@ def _load(spark: SparkSession, sf_dir: str, *names: str) -> None:
             .createOrReplaceTempView(n)
 
 
+_LIVE_CACHES: Dict[str, DataFrame] = {}
+
+
+def _persist_one_live(key: str, df: DataFrame) -> DataFrame:
+    """``df.persist()``, first evicting the DataFrame this ``key``
+    persisted on its previous call.
+
+    For a multi-consumer intermediate (persisted so Spark does not
+    recompute it once per consumer) inside a query that returns a LAZY
+    DataFrame. The cache cannot be dropped at return: the caller's
+    action, which reads it, runs after the return, and Spark gives the
+    query no hook on that action finishing. Evicting it on the key's
+    next call instead bounds live caches to one per key across
+    benchmark reps and repeated runs of the query."""
+    old = _LIVE_CACHES.pop(key, None)
+    if old is not None:
+        try:
+            old.unpersist(blocking=False)
+        except Exception:
+            pass
+    _LIVE_CACHES[key] = df = df.persist()
+    return df
+
+
 # =========================================================================
 # PDF extraction queries (the kernel itself under the correctness gate:
 # extraction is an exact roundtrip of documents.text, so DuckDB can act as
@@ -68,7 +92,7 @@ def pdf_extract_roundtrip(spark, sf_dir):
     pdf_error_rows, pdf_multipage_* and pdf_extract_skew_aware."""
     from pdfspark.pipeline import roundtrip_extract
 
-    ext = roundtrip_extract(spark, sf_dir, light=True)
+    ext = roundtrip_extract(spark, sf_dir)
     return ext.select(
         F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
         "text",
@@ -702,9 +726,6 @@ def _minhash_incr_duck_sql(cap: int) -> str:
     )
 
 
-_INCR_BANDS_LIVE: list = []
-
-
 @register("dedup_incremental_minhash", oracle=_minhash_incr_duck_sql(cap=300))
 def dedup_incremental_minhash(spark, sf_dir):
     """Incremental crawl dedup: each NEW document keeps or drops by
@@ -724,17 +745,10 @@ def dedup_incremental_minhash(spark, sf_dir):
     )
     # materialize the band table once (the production shape: the band
     # index is a precomputed table) — without it Spark re-runs the
-    # minhash kernel for each of the four consumers below. A lazy DF is
-    # returned, so this invocation's cache cannot be dropped here;
-    # instead each call evicts the PREVIOUS one, bounding live caches
-    # to one across bench reps / repeated driver runs.
-    while _INCR_BANDS_LIVE:
-        try:
-            _INCR_BANDS_LIVE.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-    bands = docs.mapInPandas(_minhash_band_batches, _BANDS_SCHEMA).persist()
-    _INCR_BANDS_LIVE.append(bands)
+    # minhash kernel for each of the four consumers below
+    bands = _persist_one_live(
+        "dedup_incremental_minhash.bands",
+        docs.mapInPandas(_minhash_band_batches, _BANDS_SCHEMA))
     hist = bands.filter(F.col("doc_id") < 1000000).alias("h")
     new = bands.filter(F.col("doc_id") >= 1000000).alias("n")
     hist_sized = (
@@ -2122,7 +2136,6 @@ def text_token_count(spark, sf_dir):
 # offset, so the whole operator reduces to a global prefix sum.
 _SHARD_BUDGET = 2000
 _SHARD_BLOCK = 64
-_SHARD_TOK_LIVE: list = []
 
 _SHARD_PACK_DUCK = f"""
 WITH tok AS (
@@ -2163,19 +2176,12 @@ def _two_pass_shard_ids(spark, tok):
 
     ``tok`` has THREE consumers (count, block sums, final join) and in
     curation_pipeline its lineage is the whole quality+dedup pipeline
-    — so it is persisted for the invocation (the CLAUDE.md r3
-    multi-consumer rule; same one-live-cache eviction pattern as
-    dedup_incremental_minhash — nothing survives across invocations,
-    every call rebuilds from the parquet inputs)."""
+    — so it is persisted for the invocation (the r3
+    multi-consumer rule, via ``_persist_one_live`` — nothing survives
+    across invocations, every call rebuilds from the parquet inputs)."""
     from pyspark.sql import Window
 
-    while _SHARD_TOK_LIVE:
-        try:
-            _SHARD_TOK_LIVE.pop().unpersist(blocking=False)
-        except Exception:
-            pass
-    tok = tok.persist()
-    _SHARD_TOK_LIVE.append(tok)
+    tok = _persist_one_live("_two_pass_shard_ids.tok", tok)
     n_docs = tok.count()
     block_sz = max(_SHARD_BLOCK, -(-n_docs // 100_000))
     tok = tok.withColumn(
@@ -2480,14 +2486,15 @@ def percentiles_exact(spark, sf_dir):
     """Exact interpolated percentiles (Spark percentile == DuckDB
     quantile_cont; approx variants stay rows-only).
 
-    Two regimes, ONE result (r9; bit-identical pre-ROUND at every
-    tested input incl. duplicate/integral-position/N=1 corners —
-    scripts/proto_percentiles*.py):
+    Two regimes, ONE result (r9; identical rows at every tested input
+    incl. duplicate/integral-position/N=1 corners — tests/test_plans.py::
+    test_percentiles_exact_rank_branch_is_conditional_and_identical):
 
     - footer probe ≤ ``SPARK_GRAFT_PCT_SINGLE_BUFFER_ROWS`` (default
       400k): the single-buffer ``percentile()`` aggregate — cheapest
       at toy size (interleaved A/B at sf0.1: 0.602 vs 0.709 s).
-    - above (production always lands here): exact-rank two-pass —
+    - above, or when the probe cannot read the layout (production
+      always lands here): exact-rank two-pass —
       range-exchange the value column, per-partition counts give each
       partition's global rank offset, row_number ranks ONLY the 1-4
       partitions holding a target rank, then Percentile.getPercentile's
@@ -2497,13 +2504,14 @@ def percentiles_exact(spark, sf_dir):
       Interleaved A/B on 1.5M rows (single row group, like the driver
       layout): 6.427 → 1.427 s.
     """
-    from pdfspark.pipeline import _parquet_num_rows
+    from pdfspark.pipeline import _parquet_footer_probe
 
     _load(spark, sf_dir, "orders")
-    n_rows = _parquet_num_rows(os.path.join(sf_dir, "orders.parquet"))
+    probe = _parquet_footer_probe(
+        spark, os.path.join(sf_dir, "orders.parquet"))
     cutover = int(os.environ.get(
         "SPARK_GRAFT_PCT_SINGLE_BUFFER_ROWS", "400000"))
-    if 0 <= n_rows <= cutover:
+    if probe is not None and probe[1] <= cutover:
         return spark.sql(
             "SELECT CAST(ROUND(percentile(o_totalprice, 0.5), 2) AS DOUBLE)"
             " AS p50,"
@@ -2651,7 +2659,7 @@ def html_extract_roundtrip(spark, sf_dir):
     PDF flagship; the unfused path is covered by mixed_corpus_extract."""
     from pdfspark.pipeline import roundtrip_extract
 
-    ext = roundtrip_extract(spark, sf_dir, fmt="html", light=True)
+    ext = roundtrip_extract(spark, sf_dir, fmt="html")
     return ext.select(
         F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
         "text",
@@ -2977,7 +2985,7 @@ def pdf_post_glyph_names(spark, sf_dir):
     pdf_extract_roundtrip."""
     from pdfspark.pipeline import roundtrip_extract
 
-    ext = roundtrip_extract(spark, sf_dir, fmt="pdf_post", light=True)
+    ext = roundtrip_extract(spark, sf_dir, fmt="pdf_post")
     return ext.select(
         F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
         "text",

@@ -4,9 +4,10 @@
 Usage: python3 scripts/dump_plans.py <tag> <when> [query ...]
   tag   e.g. r09  (output dir plans/r09/)
   when  'before' or 'after'
-  query names default to the bench headline set.
+  query names default to bench.py's headline set.
 
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
+read by bench.py.
 """
 from __future__ import annotations
 
@@ -16,42 +17,30 @@ import sys
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
-HEADLINE = [
-    "pdf_extract_roundtrip",
-    "html_extract_roundtrip",
-    "q1_pricing_summary",
-    "q5_region_revenue",
-    "window_running_sum",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "ann_bruteforce_topk",
-    "text_token_count",
-]
+from bench import BENCH_QUERIES, CPUS, SF_DIR  # noqa: E402
 
 
 def main() -> None:
     tag, when = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:] or HEADLINE
+    names = sys.argv[3:] or BENCH_QUERIES
     out_dir = os.path.join(REPO_ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
     from pdfspark.pipeline import build_session
     from pdfspark.queries import QUERIES
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(cores=cpus, shuffle_partitions=cpus,
+    spark = build_session(cores=CPUS, shuffle_partitions=CPUS,
                           app="pdfspark-plans")
     try:
         for name in names:
-            df = QUERIES[name](spark, sf_dir)
+            df = QUERIES[name](spark, SF_DIR)
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
                 .fromString("formatted")
             )
             path = os.path.join(out_dir, f"{name}_{when}.txt")
             with open(path, "w") as f:
-                f.write(f"# {name} ({when}) sf_dir={sf_dir}\n")
+                f.write(f"# {name} ({when}) sf_dir={SF_DIR}\n")
                 f.write(plan)
             print(f"wrote {path}")
     finally:

@@ -219,27 +219,69 @@ def test_extract_pages_positions_distributed(spark):
     pages.unpersist()
 
 
-def test_parquet_scan_width_proxy(spark, tmp_path):
-    """The repartition guard's footer probe must model Spark's actual
-    parallelism: min(row_groups, byte_splits) per file — many tiny row
-    groups in a small file still scan ~1-wide (review r4 finding #1),
-    and one giant row group can't split either."""
+def test_parquet_scan_width_proxy(spark, tmp_path, monkeypatch):
+    """The footer probe must model Spark's actual parallelism:
+    min(row_groups, byte_splits) per file — many tiny row groups in a
+    small file still scan ~1-wide (review r4 finding #1), and one giant
+    row group can't split either. It walks directories recursively, and
+    an unknown layout is None, which every caller maps to its scale-safe
+    side (widen the scan, assume a large table)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from pdfspark.pipeline import _parquet_scan_width
+    from pdfspark.pipeline import _parquet_footer_probe
+    from pdfspark.queries import QUERIES
 
+    # many tiny row groups: 64 row groups, one 128MB byte split → width 1
     p = str(tmp_path / "many_rg.parquet")
     t = pa.table({"doc_id": list(range(640)),
                   "text": ["x" * 100] * 640})
-    pq.write_table(t, p, row_group_size=10)  # 64 row groups, tiny file
+    pq.write_table(t, p, row_group_size=10)
     assert pq.ParquetFile(p).metadata.num_row_groups == 64
-    # 64 row groups but one 128MB byte split → effective width 1
-    assert _parquet_scan_width(p, 128 * 1024 * 1024) == 1
-    # with a 4KB split size the row-group count becomes the limiter
-    assert 1 < _parquet_scan_width(p, 4096) <= 64
-    # unreadable → 0 (repartition, the safe side)
-    assert _parquet_scan_width(str(tmp_path / "nope.parquet"), 1) == 0
+    mpb_key = "spark.sql.files.maxPartitionBytes"
+    mpb = spark.conf.get(mpb_key)
+    spark.conf.set(mpb_key, str(128 * 1024 * 1024))
+    try:
+        assert _parquet_footer_probe(spark, p) == (1, 640)
+        # with a 4KB split size the row-group count becomes the limiter
+        spark.conf.set(mpb_key, "4096")
+        width, rows = _parquet_footer_probe(spark, p)
+        assert 1 < width <= 64 and rows == 640
+        # ... but one giant row group cannot split: width 1
+        one_rg = str(tmp_path / "one_rg.parquet")
+        pq.write_table(pa.table({"v": [i * 1.37 for i in range(20000)]}),
+                       one_rg)
+        assert os.path.getsize(one_rg) > 10 * 4096
+        assert _parquet_footer_probe(spark, one_rg) == (1, 20000)
+    finally:
+        spark.conf.set(mpb_key, mpb)
+
+    # no file found → unknown
+    assert _parquet_footer_probe(spark, str(tmp_path / "nope.parquet")) is None
+    empty = tmp_path / "empty.parquet"
+    empty.mkdir()
+    assert _parquet_footer_probe(spark, str(empty)) is None
+
+    # hive-partitioned k=v/ directory: every nested footer counts
+    hive = tmp_path / "hive" / "orders.parquet"
+    for k in range(2):
+        (hive / f"k={k}").mkdir(parents=True)
+        pq.write_table(
+            pa.table({"o_totalprice": [float(k * 400 + i)
+                                       for i in range(400)]}),
+            str(hive / f"k={k}" / "part-0.parquet"))
+    assert _parquet_footer_probe(spark, str(hive)) == (2, 800)
+    # ... so percentiles_exact sees 800 rows above the cutover and plans
+    # the exact-rank regime (a flat-only probe counted 0 rows here)
+    monkeypatch.setenv("SPARK_GRAFT_PCT_SINGLE_BUFFER_ROWS", "500")
+    plan = QUERIES["percentiles_exact"](spark, str(hive.parent)) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" in plan, plan
+
+    # one unreadable footer → the whole layout is unknown
+    (hive / "k=2").mkdir()
+    (hive / "k=2" / "part-0.parquet").write_bytes(b"not a parquet file")
+    assert _parquet_footer_probe(spark, str(hive)) is None
 
 
 def test_parse_bytes_conf_suffixes():

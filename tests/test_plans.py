@@ -2,6 +2,8 @@
 ones we'd want at 100 TB — filters pushed to the scan, column pruning,
 broadcast joins for dims, no stray exchanges on the no-shuffle paths."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -752,8 +754,25 @@ def test_ivf_recenter_refuses_short_centroid(spark):
     assert ivf_recenter_seeds(empty, seeds) == [(0, [1, 2, 3])]
 
 
+# adversarial percentile corpora: duplicates, integral positions, N=1/2,
+# equal neighbours, wide random values (one seeded draw, in this order)
+_rng = random.Random(7)
+_PCT_EDGE_CORPORA = {
+    "n1": [42.0],
+    "n2": [1.0, 2.0],
+    "n21_integral": [float(i) for i in range(21)],
+    "all_equal": [5.5] * 100,
+    "dups_heavy": [float(_rng.choice([1, 2, 2, 2, 3])) for _ in range(997)],
+    "two_vals": [0.1] * 50 + [0.3] * 50,
+    "rand_money": [round(_rng.uniform(1, 500000), 2) for _ in range(12345)],
+    "neg_and_pos": [_rng.uniform(-1e6, 1e6) for _ in range(333)],
+    "dups_n21_integral": [5.5] * 9 + [7.25] * 7 + [9.0] * 5,
+}
+
+
+@pytest.mark.parametrize("corpus", ["sf0.001", *_PCT_EDGE_CORPORA])
 def test_percentiles_exact_rank_branch_is_conditional_and_identical(
-        spark, tmp_path, monkeypatch):
+        spark, tmp_path, monkeypatch, corpus):
     """r9: percentiles_exact has two regimes, one result. At toy size
     the single-buffer percentile() aggregate stays (cheapest measured);
     above the footer-probe cutover the exact-rank two-pass plan takes
@@ -761,25 +780,26 @@ def test_percentiles_exact_rank_branch_is_conditional_and_identical(
     buffer — and the rows must be identical (the interpolation mirrors
     Percentile.getPercentile including its integral-position and
     equal-neighbour fast paths)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from pdfspark.queries import QUERIES
 
-    small = QUERIES["percentiles_exact"](spark, SF_DIR)
-    assert "percentile" in plan_of(small), plan_of(small)
+    d = SF_DIR
+    if corpus in _PCT_EDGE_CORPORA:
+        d = str(tmp_path)
+        pq.write_table(
+            pa.table({"o_totalprice": pa.array(_PCT_EDGE_CORPORA[corpus],
+                                               pa.float64())}),
+            f"{d}/orders.parquet")
+
+    # "percentile(" is the aggregate; the word alone is in the tmp path
+    small = QUERIES["percentiles_exact"](spark, d)
+    assert "percentile(" in plan_of(small), plan_of(small)
 
     monkeypatch.setenv("SPARK_GRAFT_PCT_SINGLE_BUFFER_ROWS", "0")
-    big = QUERIES["percentiles_exact"](spark, SF_DIR)
+    big = QUERIES["percentiles_exact"](spark, d)
     big_plan = plan_of(big)
     assert "rangepartitioning" in big_plan, big_plan
-    assert "percentile" not in big_plan, big_plan
+    assert "percentile(" not in big_plan, big_plan
     assert small.collect() == big.collect()
-
-    # duplicate-heavy corpus with an integral median position (N=21):
-    # both regimes must still agree bit-for-bit
-    d = str(tmp_path / "dup")
-    vals = [5.5] * 9 + [7.25] * 7 + [9.0] * 5
-    spark.createDataFrame([(v,) for v in vals], "o_totalprice double") \
-        .coalesce(1).write.parquet(f"{d}/orders.parquet")
-    forced = QUERIES["percentiles_exact"](spark, d).collect()
-    monkeypatch.delenv("SPARK_GRAFT_PCT_SINGLE_BUFFER_ROWS")
-    buffered = QUERIES["percentiles_exact"](spark, d).collect()
-    assert forced == buffered

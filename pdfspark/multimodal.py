@@ -15,12 +15,9 @@ binary), whose driver-pinned oracles depend on its arithmetic.
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
+from pyspark.sql import DataFrame, types as T
 
-from pyspark.sql import DataFrame, functions as F, types as T
-
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from pdfspark.pipeline import map_rows
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -68,30 +65,12 @@ def decode_image_meta(df: DataFrame) -> DataFrame:
     Arrow-batched mapInPandas stage. One batch at a time bounds memory for
     giant payloads; binary never round-trips through Python rows."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import sys
+    def meta_row(doc_id, p):
+        return [(doc_id, *_decode_image_stub(bytes(p) if p is not None
+                                             else b""))]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import _decode_image_stub
-
-        for b in batches:
-            metas = [
-                _decode_image_stub(bytes(p) if p is not None else b"")
-                for p in b["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": b["doc_id"].astype("int64"),
-                    "width": [m[0] for m in metas],
-                    "height": [m[1] for m in metas],
-                    "n_frames": [m[2] for m in metas],
-                }
-            )
-
-    return df.mapInPandas(run, IMAGE_META_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), meta_row,
+                    IMAGE_META_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every: int = 4) -> DataFrame:
@@ -99,32 +78,16 @@ def sample_frames(df: DataFrame, every: int = 4) -> DataFrame:
     'frame' (deterministic byte slices). Shows the 1→N mapInPandas shape a
     video pipeline needs (output rows ≠ input rows)."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import sys
+    def frame_rows(doc_id, p):
+        payload = bytes(p) if p is not None else b""
+        n_frames = _decode_image_stub(payload)[2]
+        rows = []
+        for idx in range(0, n_frames, every):
+            lo = (idx * 17) % max(len(payload), 1)
+            rows.append((doc_id, idx, payload[lo : lo + 16]))
+        return rows
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import _decode_image_stub
-
-        for b in batches:
-            rows = []
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                payload = bytes(p) if p is not None else b""
-                n_frames = _decode_image_stub(payload)[2]
-                for idx in range(0, n_frames, every):
-                    lo = (idx * 17) % max(len(payload), 1)
-                    rows.append(
-                        {
-                            "doc_id": int(doc_id),
-                            "frame_idx": idx,
-                            "frame_bytes": payload[lo : lo + 16],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame_bytes"])
-
-    return df.mapInPandas(run, FRAME_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), frame_rows, FRAME_SCHEMA)
 
 
 FEATURES_SCHEMA = T.StructType(
@@ -140,31 +103,18 @@ def extract_byte_histogram(df: DataFrame, bins: int = 16) -> DataFrame:
     byte histogram per document via numpy bincount — the codec-free
     stand-in with the exact shape (Arrow in, fixed-length feature vector
     out) a real image/audio embedder stage has."""
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import sys
+    width = 256 // bins
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import numpy as np
-        import pandas as pd
+    def histogram_row(doc_id, p):
+        buf = np.frombuffer(bytes(p) if p is not None else b"",
+                            dtype=np.uint8)
+        return [(doc_id, np.bincount(buf // width, minlength=bins)[:bins]
+                 .astype("int64").tolist())]
 
-        width = 256 // bins
-        for b in batches:
-            feats = []
-            for p in b["payload"]:
-                buf = np.frombuffer(
-                    bytes(p) if p is not None else b"", dtype=np.uint8
-                )
-                feats.append(
-                    np.bincount(buf // width, minlength=bins)[:bins]
-                    .astype("int64").tolist()
-                )
-            yield pd.DataFrame(
-                {"doc_id": b["doc_id"].astype("int64"), "features": feats}
-            )
-
-    return df.mapInPandas(run, FEATURES_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), histogram_row,
+                    FEATURES_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -185,37 +135,20 @@ def resize_images(df: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
     real resize contract (fixed output dims, binary out, Arrow batch
     in) while the interpolating decoder stays one function swap away
     (decode_image_pixels gates on Pillow)."""
+    import numpy as np
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import sys
+    size = out_w * out_h
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import numpy as np
-        import pandas as pd
+    def resized_row(doc_id, p):
+        buf = np.frombuffer(bytes(p) if p is not None else b"",
+                            dtype=np.uint8)
+        if len(buf) == 0:
+            return [(doc_id, out_w, out_h, bytes(size))]
+        idx = (np.arange(size) * len(buf)) // size
+        return [(doc_id, out_w, out_h, buf[idx].tobytes())]
 
-        size = out_w * out_h
-        for b in batches:
-            out = []
-            for p in b["payload"]:
-                buf = np.frombuffer(
-                    bytes(p) if p is not None else b"", dtype=np.uint8
-                )
-                if len(buf) == 0:
-                    out.append(bytes(size))
-                    continue
-                idx = (np.arange(size) * len(buf)) // size
-                out.append(buf[idx].tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": b["doc_id"].astype("int64"),
-                    "out_w": out_w,
-                    "out_h": out_h,
-                    "resized": out,
-                }
-            )
-
-    return df.mapInPandas(run, RESIZED_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), resized_row,
+                    RESIZED_SCHEMA)
 
 
 # ------------------------------------------------------------------- audio
@@ -291,19 +224,14 @@ def parse_wav_header(payload: bytes):
     return channels, sample_rate, bits, n_samples, duration_ms
 
 
-def wav_meta_row(doc_id: int, meta) -> dict:
+def wav_meta_row(doc_id: int, meta) -> tuple:
     """One AUDIO_META_SCHEMA row from a parse_wav_header result — the
     SINGLE construction site shared by decode_audio_meta and the fused
     harness (queries._audio_meta_impl), so the 'bad-wav' code and the
     column set can never drift between the two paths."""
     if meta is None:
-        return {"doc_id": doc_id, "channels": None, "sample_rate": None,
-                "bits": None, "n_samples": None, "duration_ms": None,
-                "error": "bad-wav"}
-    ch, sr, bits, ns, ms = meta
-    return {"doc_id": doc_id, "channels": ch, "sample_rate": sr,
-            "bits": bits, "n_samples": ns, "duration_ms": ms,
-            "error": None}
+        return (doc_id, None, None, None, None, None, "bad-wav")
+    return (doc_id, *meta, None)
 
 
 def decode_audio_meta(df: DataFrame) -> DataFrame:
@@ -311,28 +239,16 @@ def decode_audio_meta(df: DataFrame) -> DataFrame:
     Arrow-batched mapInPandas stage; malformed payloads yield an error
     row, never an exception."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import sys
+    def meta_row(doc_id, p):
+        # per-row guard: one bad document never kills the job
+        try:
+            meta = parse_wav_header(bytes(p) if p is not None else b"")
+        except Exception:
+            meta = None
+        return [wav_meta_row(doc_id, meta)]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import parse_wav_header, wav_meta_row
-
-        cols = [f.name for f in AUDIO_META_SCHEMA.fields]
-        for b in batches:
-            rows = []
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                try:
-                    meta = parse_wav_header(
-                        bytes(p) if p is not None else b"")
-                except Exception:
-                    meta = None
-                rows.append(wav_meta_row(int(doc_id), meta))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(run, AUDIO_META_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), meta_row,
+                    AUDIO_META_SCHEMA)
 
 
 # ------------------------------------------------------------------- video
@@ -435,18 +351,6 @@ def parse_mp4_header(payload: bytes):
     if timescale == 0:
         return None
     return brand, timescale, duration, duration * 1000 // timescale
-
-
-def mp4_meta_row(doc_id: int, meta) -> dict:
-    """Single construction site for VIDEO_META_SCHEMA rows (same
-    anti-drift role as wav_meta_row)."""
-    if meta is None:
-        return {"doc_id": doc_id, "brand": None, "timescale": None,
-                "duration_units": None, "duration_ms": None,
-                "error": "bad-mp4"}
-    brand, ts, du, ms = meta
-    return {"doc_id": doc_id, "brand": brand, "timescale": ts,
-            "duration_units": du, "duration_ms": ms, "error": None}
 
 
 # ------------------------------------------------------------------- image
@@ -677,74 +581,3 @@ def parse_image_header(payload: bytes):
             return "webp", w, h, 8, 4 if alpha else 3
         return None
     return None
-
-
-def image_meta_row(doc_id: int, meta) -> dict:
-    """Single construction site for IMAGE_HEADER_SCHEMA rows (same
-    anti-drift role as wav_meta_row / mp4_meta_row)."""
-    if meta is None:
-        return {"doc_id": doc_id, "fmt": None, "width": None,
-                "height": None, "bit_depth": None, "channels": None,
-                "error": "bad-image"}
-    fmt, w, h, depth, ch = meta
-    return {"doc_id": doc_id, "fmt": fmt, "width": w, "height": h,
-            "bit_depth": depth, "channels": ch, "error": None}
-
-
-def decode_image_header(df: DataFrame) -> DataFrame:
-    """(doc_id, payload:binary) → typed image metadata via one
-    Arrow-batched mapInPandas stage; malformed payloads yield an error
-    row, never an exception. The production image-modality metadata
-    path (the plumbing-shape decode_image_meta keeps the pinned
-    stub)."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import image_meta_row, parse_image_header
-
-        cols = [f.name for f in IMAGE_HEADER_SCHEMA.fields]
-        for b in batches:
-            rows = []
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                try:
-                    meta = parse_image_header(
-                        bytes(p) if p is not None else b"")
-                except Exception:
-                    meta = None
-                rows.append(image_meta_row(int(doc_id), meta))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(run, IMAGE_HEADER_SCHEMA)
-
-
-def decode_video_meta(df: DataFrame) -> DataFrame:
-    """(doc_id, payload:binary) → typed video metadata, one Arrow
-    stage; malformed payloads are error rows."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import mp4_meta_row, parse_mp4_header
-
-        cols = [f.name for f in VIDEO_META_SCHEMA.fields]
-        for b in batches:
-            rows = []
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                try:
-                    meta = parse_mp4_header(
-                        bytes(p) if p is not None else b"")
-                except Exception:
-                    meta = None
-                rows.append(mp4_meta_row(int(doc_id), meta))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(run, VIDEO_META_SCHEMA)

@@ -28,9 +28,10 @@ Scale notes (100 TB / 1000-executor framing):
 
 from __future__ import annotations
 
+import functools
 import os
 import time
-from typing import Iterator, Optional, Tuple
+from typing import Callable, Iterable, Iterator, Optional, Tuple, Union
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -248,6 +249,36 @@ def _documents_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _table_repartitioned(spark, sf_dir, "documents", "doc_id")
 
 
+# ------------------------------------------------------------ row-map stage
+
+def _map_rows_batches(fn, names, batches):
+    """mapInPandas body of map_rows. Module-level, so it is pickled by
+    reference: the worker imports this module (and with it ``pdfspark``)
+    before the body runs, and ``fn`` needs no ``sys.path`` set-up."""
+    import pandas as pd
+
+    for b in batches:
+        records = [out for row in b.itertuples(index=False, name=None)
+                   for out in fn(*row)]
+        yield pd.DataFrame(records, columns=names)
+
+
+def map_rows(df: DataFrame, fn: Callable[..., Iterable[tuple]],
+             schema: Union[T.StructType, str]) -> DataFrame:
+    """The one row-wise Python stage: a single ``mapInPandas`` that calls
+    ``fn(*values)`` once per input row, values in ``df.columns`` order.
+    ``fn`` returns an iterable of output tuples in ``schema`` order, so
+    one input row gives 0, 1 or N output rows; each Arrow batch is built
+    from those records in one ``pd.DataFrame(records, columns=names)``."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    body = functools.partial(_map_rows_batches, fn,
+                             [f.name for f in schema.fields])
+    # the plan names the stage after fn, not after the partial
+    body.__name__ = fn.__name__
+    return df.mapInPandas(body, schema)
+
+
 # ------------------------------------------------------------------- kernel
 
 def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -296,11 +327,10 @@ def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
 
 def filter_pdf_rows(pages: DataFrame) -> DataFrame:
     """Magic-byte prefilter — pushed to the scan by Catalyst so non-PDF
-    rows are dropped before the kernel sees them (SURVEY.md §2B row 2)."""
-    return pages.filter(
-        F.col("html").isNotNull()
-        & (F.expr("substring(html, 1, 5)") == F.lit(b"%PDF-"))
-    )
+    rows are dropped before the kernel sees them (SURVEY.md §2B row 2).
+    The ``pdf`` modality of filter_supported_rows: ``%PDF-`` anywhere in
+    the first 1 KB, so a PDF behind web-crawl dirt reaches the kernel."""
+    return filter_supported_rows(pages, "pdf")
 
 
 # SQL twin of kernel.html_extract.looks_like_html + extract_document's
@@ -368,31 +398,15 @@ def extract_pages_struct(pages: DataFrame) -> DataFrame:
     """Opt-in Tagged-PDF extraction: content-order text PLUS the
     structure-order linearization (struct_text, None for untagged docs).
     Same zero-extra-shuffle mapInPandas shape as extract_pages."""
-    pages = filter_pdf_rows(pages).select("url", "html")
+    from pdfspark.kernel.extract import extract_text
 
-    def run(batches):
-        import sys
+    def struct_row(url, html):
+        r = extract_text(bytes(html) if html is not None else b"",
+                         structure=True)
+        return [(url, r.text, r.struct_text)]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.kernel.extract import extract_text
-
-        for b in batches:
-            urls, texts, struct_texts = [], [], []
-            for url, html in zip(b["url"], b["html"]):
-                r = extract_text(bytes(html) if html is not None else b"",
-                                 structure=True)
-                urls.append(url)
-                texts.append(r.text)
-                struct_texts.append(r.struct_text)
-            yield pd.DataFrame(
-                {"url": urls, "text": texts, "struct_text": struct_texts}
-            )
-
-    return pages.mapInPandas(
-        run, "url string, text string, struct_text string")
+    return map_rows(filter_pdf_rows(pages).select("url", "html"), struct_row,
+                    "url string, text string, struct_text string")
 
 
 def extract_pages_positions(pages: DataFrame) -> DataFrame:
@@ -401,36 +415,16 @@ def extract_pages_positions(pages: DataFrame) -> DataFrame:
     the kernel's per-glyph path (≈2.4× the batched decode cost), so it is
     a SEPARATE operator rather than a column on the hot extraction path;
     same zero-extra-shuffle mapInPandas shape as extract_pages."""
-    pages = filter_pdf_rows(pages).select("url", "html")
+    from pdfspark.kernel.extract import extract_text
 
-    def run(batches):
-        import sys
+    def glyph_rows(url, html):
+        r = extract_text(bytes(html) if html is not None else b"",
+                         positions=True)
+        return [(url, gp.page, gp.offset, gp.x, gp.y, gp.w)
+                for gp in r.glyph_positions or []]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.kernel.extract import extract_text
-
-        for b in batches:
-            urls, pgs, offs, xs, ys, ws = [], [], [], [], [], []
-            for url, html in zip(b["url"], b["html"]):
-                r = extract_text(bytes(html) if html is not None else b"",
-                                 positions=True)
-                for gp in r.glyph_positions or []:
-                    urls.append(url)
-                    pgs.append(gp.page)
-                    offs.append(gp.offset)
-                    xs.append(gp.x)
-                    ys.append(gp.y)
-                    ws.append(gp.w)
-            yield pd.DataFrame(
-                {"url": urls, "page": pgs, "offset": offs,
-                 "x": xs, "y": ys, "w": ws},
-                columns=["url", "page", "offset", "x", "y", "w"],
-            )
-
-    return pages.mapInPandas(run, POSITIONS_SCHEMA)
+    return map_rows(filter_pdf_rows(pages).select("url", "html"), glyph_rows,
+                    POSITIONS_SCHEMA)
 
 
 def columns_reading_order_extract(spark: SparkSession, sf_dir: str,
@@ -446,30 +440,17 @@ def columns_reading_order_extract(spark: SparkSession, sf_dir: str,
     roundtrip_extract; output is (url, text) where text must be
     byte-identical to the source — a full byte-identity oracle for
     geometry-aware reading order."""
-    docs = _documents_repartitioned(spark, sf_dir)
+    from pdfspark.kernel.extract import extract_text
+    from pdfspark.kernel.layout import reading_order_text
 
-    def run(batches):
-        import sys
+    def reading_order_row(doc_id, text, lang):
+        url, buf = _synth_page(int(doc_id), text, lang, fmt, 0)
+        r = extract_text(buf, positions=True)
+        return [(url, reading_order_text(r, layout=layout))]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.kernel.extract import extract_text
-        from pdfspark.kernel.layout import reading_order_text
-
-        for b in batches:
-            urls, texts = [], []
-            for doc_id, text, lang in zip(b["doc_id"], b["text"], b["lang"]):
-                i = int(doc_id)
-                url, buf = _synth_page(i, text, lang, fmt, 0)
-                r = extract_text(buf, positions=True)
-                urls.append(url)
-                texts.append(reading_order_text(r, layout=layout))
-            yield pd.DataFrame({"url": urls, "text": texts},
-                               columns=["url", "text"])
-
-    return docs.mapInPandas(run, "url string, text string")
+    return map_rows(_documents_repartitioned(spark, sf_dir)
+                    .select("doc_id", "text", "lang"),
+                    reading_order_row, "url string, text string")
 
 
 def table_cells_extract(spark: SparkSession, sf_dir: str,
@@ -496,55 +477,32 @@ def table_cells_extract(spark: SparkSession, sf_dir: str,
     across pages (layout.table_cells_continued, tier 5c): row_idx
     continues across page boundaries; not combinable with
     flagged/spanned (the paginated fmt is the plain grid)."""
-    docs = _documents_repartitioned(spark, sf_dir)
+    from pdfspark.kernel.extract import extract_text
+    from pdfspark.kernel.layout import _table_cells_full, table_cells_continued
 
-    def run(batches):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.kernel.extract import extract_text
-        from pdfspark.kernel.layout import (_table_cells_full,
-                                            table_cells_continued)
-
-        for b in batches:
-            urls, rows_, cols_, texts, hdrs, spans = [], [], [], [], [], []
-            for doc_id, text, lang in zip(b["doc_id"], b["text"], b["lang"]):
-                i = int(doc_id)
-                url, buf = _synth_page(i, text, lang, fmt, 0)
-                r = extract_text(buf, positions=True)
-                # table_cells is the full surface minus the flag/span
-                # columns — one loop serves all three shapes, unused
-                # columns are simply dropped (review r6.1 #5); the
-                # continued shape swaps in the cross-page row offsets
-                cells = (
-                    [t + (False, 1) for t in table_cells_continued(r)]
-                    if continued else _table_cells_full(r)
-                )
-                for (_pg, row_idx, col_idx, cell, is_hdr,
-                     col_span) in cells:
-                    urls.append(url)
-                    rows_.append(row_idx)
-                    cols_.append(col_idx)
-                    texts.append(cell)
-                    hdrs.append(int(is_hdr))
-                    spans.append(col_span)
-            data = {"url": urls, "row_idx": rows_, "col_idx": cols_,
-                    "cell_text": texts}
-            if flagged:
-                data["is_header"] = hdrs
-            if spanned:
-                data["col_span"] = spans
-            yield pd.DataFrame(data, columns=list(data))
+    def cell_rows(doc_id, text, lang):
+        url, buf = _synth_page(int(doc_id), text, lang, fmt, 0)
+        r = extract_text(buf, positions=True)
+        # table_cells is the full surface minus the flag/span columns —
+        # one loop serves all three shapes, unused columns are simply
+        # dropped (review r6.1 #5); the continued shape swaps in the
+        # cross-page row offsets
+        cells = (
+            [t + (False, 1) for t in table_cells_continued(r)]
+            if continued else _table_cells_full(r)
+        )
+        return [(url, row_idx, col_idx, cell)
+                + ((int(is_hdr),) if flagged else ())
+                + ((col_span,) if spanned else ())
+                for _pg, row_idx, col_idx, cell, is_hdr, col_span in cells]
 
     schema = "url string, row_idx long, col_idx long, cell_text string"
     if flagged:
         schema += ", is_header long"
     if spanned:
         schema += ", col_span long"
-    return docs.mapInPandas(run, schema)
+    return map_rows(_documents_repartitioned(spark, sf_dir)
+                    .select("doc_id", "text", "lang"), cell_rows, schema)
 
 
 # big-tier key space of extract_pages_skew_aware, in multiples of nsalt
@@ -731,34 +689,18 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
     kernel parallelize — the shuffle moves only (doc_id, text) rows, never
     PDF bytes, and the output is already salt-distributed so callers pass
     ``extract_pages(..., resalt=False)``."""
-    docs = _documents_repartitioned(spark, sf_dir)
+    import datetime
 
-    def gen(batches):
-        import sys
+    epoch = datetime.datetime(2025, 1, 1)
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import datetime
+    def page_row(doc_id, text, lang):
+        i = int(doc_id)
+        url, html = _synth_page(i, text, lang, fmt, non_pdf_every)
+        return [(url, epoch + datetime.timedelta(hours=i % 8760), html, "",
+                 lang)]
 
-        import pandas as pd
-
-        epoch = datetime.datetime(2025, 1, 1)
-        for b in batches:
-            urls, tss, htmls, langs = [], [], [], []
-            for doc_id, text, lang in zip(b["doc_id"], b["text"], b["lang"]):
-                i = int(doc_id)
-                url, html = _synth_page(i, text, lang, fmt, non_pdf_every)
-                urls.append(url)
-                tss.append(epoch + datetime.timedelta(hours=i % 8760))
-                htmls.append(html)
-                langs.append(lang)
-            yield pd.DataFrame(
-                {"url": urls, "warc_ts": tss, "html": htmls,
-                 "text": [""] * len(urls), "lang": langs},
-                columns=["url", "warc_ts", "html", "text", "lang"],
-            )
-
-    return docs.mapInPandas(gen, PAGES_SCHEMA)
+    return map_rows(_documents_repartitioned(spark, sf_dir)
+                    .select("doc_id", "text", "lang"), page_row, PAGES_SCHEMA)
 
 
 def _synth_page(i: int, text: str, lang, fmt: str,
@@ -912,28 +854,15 @@ def roundtrip_extract(spark: SparkSession, sf_dir: str,
     including the array<struct> spans column, the slowest pandas→Arrow
     conversion of the batch (guide §4.1; measured ~14% of the flagship
     wall at sf1.0)."""
-    docs = _documents_repartitioned(spark, sf_dir)
+    from pdfspark.kernel.extract import extract_document
 
-    def gen(batches):
-        import sys
+    def roundtrip_row(doc_id, text, lang):
+        url, buf = _synth_page(int(doc_id), text, lang, fmt, 0)
+        return [(url, extract_document(buf).text)]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.kernel.extract import extract_document
-
-        for b in batches:
-            urls, texts = [], []
-            for doc_id, text, lang in zip(b["doc_id"], b["text"], b["lang"]):
-                i = int(doc_id)
-                url, buf = _synth_page(i, text, lang, fmt, 0)
-                urls.append(url)
-                texts.append(extract_document(buf).text)
-            yield pd.DataFrame({"url": urls, "text": texts},
-                               columns=["url", "text"])
-
-    return docs.mapInPandas(gen, "url string, text string")
+    return map_rows(_documents_repartitioned(spark, sf_dir)
+                    .select("doc_id", "text", "lang"),
+                    roundtrip_row, "url string, text string")
 
 
 def pages_from_fixtures(spark: SparkSession, copies: int = 1) -> DataFrame:

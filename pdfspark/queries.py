@@ -21,12 +21,14 @@ sf-scaled but the plans are the ones we'd want on a 1000-executor cluster.
 
 from __future__ import annotations
 
+import math
 import os
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pdfspark.pipeline import REPO_ROOT
+from pdfspark.pipeline import REPO_ROOT, _documents_repartitioned, map_rows
+from pdfspark.textops import minhash_band_sigs
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -622,32 +624,15 @@ _MINHASH_DUCK = _minhash_duck_sql(cap=300)
 _BANDS_SCHEMA = "doc_id long, band int, sig string"
 
 
-def _minhash_band_batches(batches):
-    """mapInPandas body: (doc_id, text) → (doc_id, band, sig) rows for the
-    doc AND its synthesized 80%-prefix near-copy (doc_id+1000000, every
-    3rd doc) — the same corpus the oracle CTE builds in SQL."""
-    import math
-    import sys
-
-    if REPO_ROOT not in sys.path:
-        sys.path.insert(0, REPO_ROOT)
-    import pandas as pd
-
-    from pdfspark.textops import minhash_band_sigs
-
-    for b in batches:
-        rows = []
-        for doc_id, text in zip(b["doc_id"], b["text"]):
-            i = int(doc_id)
-            variants = [(i, text)]
-            if i % 3 == 0:
-                variants.append(
-                    (i + 1000000, text[: math.floor(len(text) * 0.8)])
-                )
-            for did, t in variants:
-                for band, sig in minhash_band_sigs(t):
-                    rows.append({"doc_id": did, "band": band, "sig": sig})
-        yield pd.DataFrame(rows, columns=["doc_id", "band", "sig"])
+def _minhash_band_rows(doc_id, text):
+    """map_rows fn: (doc_id, text) → (doc_id, band, sig) rows for the doc
+    AND its synthesized 80%-prefix near-copy (doc_id+1000000, every 3rd
+    doc) — the same corpus the oracle CTE builds in SQL."""
+    variants = [(doc_id, text)]
+    if doc_id % 3 == 0:
+        variants.append((doc_id + 1000000, text[: math.floor(len(text) * 0.8)]))
+    return [(did, band, sig) for did, t in variants
+            for band, sig in minhash_band_sigs(t)]
 
 
 def _dedup_minhash_impl(spark, sf_dir, cap: int):
@@ -661,7 +646,7 @@ def _dedup_minhash_impl(spark, sf_dir, cap: int):
         .filter(F.col("doc_id") < cap)
         .select("doc_id", "text")
     )
-    bands = docs.mapInPandas(_minhash_band_batches, _BANDS_SCHEMA)
+    bands = map_rows(docs, _minhash_band_rows, _BANDS_SCHEMA)
     buckets = (
         bands.groupBy("band", "sig")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
@@ -748,7 +733,7 @@ def dedup_incremental_minhash(spark, sf_dir):
     # minhash kernel for each of the four consumers below
     bands = _persist_one_live(
         "dedup_incremental_minhash.bands",
-        docs.mapInPandas(_minhash_band_batches, _BANDS_SCHEMA))
+        map_rows(docs, _minhash_band_rows, _BANDS_SCHEMA))
     hist = bands.filter(F.col("doc_id") < 1000000).alias("h")
     new = bands.filter(F.col("doc_id") >= 1000000).alias("n")
     hist_sized = (
@@ -1015,37 +1000,18 @@ def _audio_meta_impl(spark, sf_dir):
     roundtrip_extract shape): every doc_id becomes a deterministic PCM
     WAV container whose header the REAL parser must read back exactly.
     Parity-pinned by tests/test_oracle.py::test_audio_meta_parity."""
-    from pdfspark.multimodal import AUDIO_META_SCHEMA
+    from pdfspark.multimodal import (AUDIO_META_SCHEMA, parse_wav_header,
+                                     synth_wav, wav_meta_row)
 
     _load(spark, sf_dir, "documents")
     # r9: widened scan — the synth+parse kernel otherwise runs in the
     # single-row-group scan task (conditional, see _table_repartitioned)
-    from pdfspark.pipeline import _documents_repartitioned
     docs = _documents_repartitioned(spark, sf_dir).select("doc_id")
 
-    def run(batches):
-        import sys
+    def meta_row(doc_id):
+        return [wav_meta_row(doc_id, parse_wav_header(synth_wav(doc_id)))]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import (
-            parse_wav_header,
-            synth_wav,
-            wav_meta_row,
-        )
-
-        cols = [f.name for f in AUDIO_META_SCHEMA.fields]
-        for b in batches:
-            rows = [
-                wav_meta_row(int(doc_id),
-                             parse_wav_header(synth_wav(int(doc_id))))
-                for doc_id in b["doc_id"]
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(run, AUDIO_META_SCHEMA)
+    return map_rows(docs, meta_row, AUDIO_META_SCHEMA)
 
 
 # Video modality twin of the audio harness: REAL ISO-BMFF (MP4) box
@@ -1070,37 +1036,21 @@ FROM documents
 def _video_meta_impl(spark, sf_dir):
     """Fused synth→parse MP4 metadata (registered r5;
     parity-pinned by tests/test_oracle.py::test_video_meta_parity)."""
-    from pdfspark.multimodal import VIDEO_META_SCHEMA
+    from pdfspark.multimodal import (VIDEO_META_SCHEMA, parse_mp4_header,
+                                     synth_mp4)
 
     _load(spark, sf_dir, "documents")
     # r9: widened scan — the synth+parse kernel otherwise runs in the
     # single-row-group scan task (conditional, see _table_repartitioned)
-    from pdfspark.pipeline import _documents_repartitioned
     docs = _documents_repartitioned(spark, sf_dir).select("doc_id")
 
-    def run(batches):
-        import sys
+    def meta_row(doc_id):
+        meta = parse_mp4_header(synth_mp4(doc_id))
+        if meta is None:
+            return [(doc_id, None, None, None, None, "bad-mp4")]
+        return [(doc_id, *meta, None)]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import (
-            mp4_meta_row,
-            parse_mp4_header,
-            synth_mp4,
-        )
-
-        cols = [f.name for f in VIDEO_META_SCHEMA.fields]
-        for b in batches:
-            rows = [
-                mp4_meta_row(int(doc_id),
-                             parse_mp4_header(synth_mp4(int(doc_id))))
-                for doc_id in b["doc_id"]
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(run, VIDEO_META_SCHEMA)
+    return map_rows(docs, meta_row, VIDEO_META_SCHEMA)
 
 
 # Image modality (VERDICT r4 next #2): REAL header parsing — PNG IHDR,
@@ -1136,37 +1086,21 @@ def _image_meta_impl(spark, sf_dir):
     doc_id becomes a deterministic PNG/JPEG/BMP whose header the REAL
     parser must read back exactly. Parity-pinned by
     tests/test_oracle.py::test_image_meta_parity."""
-    from pdfspark.multimodal import IMAGE_HEADER_SCHEMA
+    from pdfspark.multimodal import (IMAGE_HEADER_SCHEMA, parse_image_header,
+                                     synth_image)
 
     _load(spark, sf_dir, "documents")
     # r9: widened scan — the synth+parse kernel otherwise runs in the
     # single-row-group scan task (conditional, see _table_repartitioned)
-    from pdfspark.pipeline import _documents_repartitioned
     docs = _documents_repartitioned(spark, sf_dir).select("doc_id")
 
-    def run(batches):
-        import sys
+    def meta_row(doc_id):
+        meta = parse_image_header(synth_image(doc_id))
+        if meta is None:
+            return [(doc_id, None, None, None, None, None, "bad-image")]
+        return [(doc_id, *meta, None)]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import (
-            image_meta_row,
-            parse_image_header,
-            synth_image,
-        )
-
-        cols = [f.name for f in IMAGE_HEADER_SCHEMA.fields]
-        for b in batches:
-            rows = [
-                image_meta_row(int(doc_id),
-                               parse_image_header(synth_image(int(doc_id))))
-                for doc_id in b["doc_id"]
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(run, IMAGE_HEADER_SCHEMA)
+    return map_rows(docs, meta_row, IMAGE_HEADER_SCHEMA)
 
 
 # Exact-substring decontamination (ROADMAP r4 #7): the stricter sibling
@@ -1339,37 +1273,17 @@ def html_link_density_blocks(spark, sf_dir):
     farms dropped, paragraphs byte-identical, dense re-indexing. Scale
     shape: pure map (synth + parse + filter inside the Arrow batch),
     zero shuffles before the driver's collect."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_linkfarm
+    from pdfspark.kernel.html_extract import extract_html_content_blocks
 
-    docs = _documents_repartitioned(spark, sf_dir)
+    def block_rows(doc_id, text):
+        return [(doc_id, idx, blk) for idx, blk in
+                extract_html_content_blocks(text_to_html_linkfarm(text, doc_id))]
 
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_linkfarm
-        from pdfspark.kernel.html_extract import extract_html_content_blocks
-
-        for b in batches:
-            ids, idxs, texts = [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for idx, blk in extract_html_content_blocks(
-                        text_to_html_linkfarm(text, i)):
-                    ids.append(i)
-                    idxs.append(idx)
-                    texts.append(blk)
-            yield pd.DataFrame(
-                {"doc_id": ids, "block_idx": idxs, "block_text": texts},
-                columns=["doc_id", "block_idx", "block_text"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, block_idx long, block_text string"
-    )
+    return map_rows(
+        _documents_repartitioned(spark, sf_dir).select("doc_id", "text"),
+        block_rows,
+        "doc_id long, block_idx long, block_text string")
 
 
 # Span-excision decontamination: the REMOVAL tier above flagging —
@@ -3283,39 +3197,17 @@ def _html_table_cells_impl(spark, sf_dir):
     the SAME word-pair cell arithmetic, so _TABLE_CELLS_SQL is the
     oracle for both modalities. One fused map stage; surrounding
     nav/footer chrome proves the extractor scopes to table content."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_table
+    from pdfspark.kernel.html_extract import extract_html_table_cells
 
-    docs = _documents_repartitioned(spark, sf_dir)
+    def cell_rows(doc_id, text):
+        return [(doc_id, row_idx, col_idx, cell) for _t, row_idx, col_idx, cell
+                in extract_html_table_cells(text_to_html_table(text, doc_id))]
 
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_table
-        from pdfspark.kernel.html_extract import extract_html_table_cells
-
-        for b in batches:
-            ids, rows_, cols_, texts = [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for _t, row_idx, col_idx, cell in extract_html_table_cells(
-                        text_to_html_table(text, i)):
-                    ids.append(i)
-                    rows_.append(row_idx)
-                    cols_.append(col_idx)
-                    texts.append(cell)
-            yield pd.DataFrame(
-                {"doc_id": ids, "row_idx": rows_, "col_idx": cols_,
-                 "cell_text": texts},
-                columns=["doc_id", "row_idx", "col_idx", "cell_text"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, row_idx long, col_idx long, cell_text string"
-    )
+    return map_rows(
+        _documents_repartitioned(spark, sf_dir).select("doc_id", "text"),
+        cell_rows,
+        "doc_id long, row_idx long, col_idx long, cell_text string")
 
 
 # Grid-resolved HTML table twin (layout 4a/4b on the HTML modality):
@@ -3377,43 +3269,19 @@ def _html_table_spans_impl(spark, sf_dir):
     single-Python-stage shape as html_table_cells; the sequential
     surface stays pinned and untouched. Exceeds the reference, which
     has no DOM table model at all."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_spantable
+    from pdfspark.kernel.html_extract import extract_html_table_grid
 
-    docs = _documents_repartitioned(spark, sf_dir)
+    def grid_rows(doc_id, text):
+        return [(doc_id, row_idx, col_idx, cell, int(is_hdr))
+                for _t, row_idx, col_idx, cell, is_hdr in
+                extract_html_table_grid(text_to_html_spantable(text, doc_id))]
 
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_spantable
-        from pdfspark.kernel.html_extract import extract_html_table_grid
-
-        for b in batches:
-            ids, rows_, cols_, texts, hdrs = [], [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for (_t, row_idx, col_idx, cell,
-                     is_hdr) in extract_html_table_grid(
-                        text_to_html_spantable(text, i)):
-                    ids.append(i)
-                    rows_.append(row_idx)
-                    cols_.append(col_idx)
-                    texts.append(cell)
-                    hdrs.append(int(is_hdr))
-            yield pd.DataFrame(
-                {"doc_id": ids, "row_idx": rows_, "col_idx": cols_,
-                 "cell_text": texts, "is_header": hdrs},
-                columns=["doc_id", "row_idx", "col_idx", "cell_text",
-                         "is_header"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, row_idx long, col_idx long, cell_text string,"
-             " is_header long"
-    )
+    return map_rows(
+        _documents_repartitioned(spark, sf_dir).select("doc_id", "text"),
+        grid_rows,
+        "doc_id long, row_idx long, col_idx long, cell_text string,"
+        " is_header long")
 
 
 # Heading-outline twin: group k of 8 words is a heading iff k%4==0,
@@ -3446,40 +3314,18 @@ def _html_heading_outline_impl(spark, sf_dir):
     into heading text. Byte-exact against the closed-form oracle over
     the 8-word-group generator. Same fused single-Python-stage shape
     as the other HTML modality queries."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_outline
+    from pdfspark.kernel.html_extract import extract_html_outline
 
-    docs = _documents_repartitioned(spark, sf_dir)
+    def heading_rows(doc_id, text):
+        return [(doc_id, *h) for h in
+                extract_html_outline(text_to_html_outline(text, doc_id))]
 
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_outline
-        from pdfspark.kernel.html_extract import extract_html_outline
-
-        for b in batches:
-            ids, ords, lvls, texts = [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for ord_idx, level, htext in extract_html_outline(
-                        text_to_html_outline(text, i)):
-                    ids.append(i)
-                    ords.append(ord_idx)
-                    lvls.append(level)
-                    texts.append(htext)
-            yield pd.DataFrame(
-                {"doc_id": ids, "heading_ord": ords, "level": lvls,
-                 "heading_text": texts},
-                columns=["doc_id", "heading_ord", "level", "heading_text"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, heading_ord long, level long,"
-             " heading_text string"
-    )
+    return map_rows(
+        _documents_repartitioned(spark, sf_dir).select("doc_id", "text"),
+        heading_rows,
+        "doc_id long, heading_ord long, level long,"
+        " heading_text string")
 
 
 # Section twin over the SAME outline generator: heading ord o sits at
@@ -3517,42 +3363,18 @@ def _html_section_chunks_impl(spark, sf_dir):
     start nor break sections). Byte-exact headings AND sections
     against the clamped-slice oracle; same fused single-stage
     shape."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_outline
+    from pdfspark.kernel.html_extract import extract_html_sections
 
-    docs = _documents_repartitioned(spark, sf_dir)
+    def section_rows(doc_id, text):
+        return [(doc_id, *sec) for sec in
+                extract_html_sections(text_to_html_outline(text, doc_id))]
 
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_outline
-        from pdfspark.kernel.html_extract import extract_html_sections
-
-        for b in batches:
-            ids, ords, lvls, hts, sts = [], [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for ord_idx, level, htext, stext in extract_html_sections(
-                        text_to_html_outline(text, i)):
-                    ids.append(i)
-                    ords.append(ord_idx)
-                    lvls.append(level)
-                    hts.append(htext)
-                    sts.append(stext)
-            yield pd.DataFrame(
-                {"doc_id": ids, "heading_ord": ords, "level": lvls,
-                 "heading_text": hts, "section_text": sts},
-                columns=["doc_id", "heading_ord", "level",
-                         "heading_text", "section_text"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, heading_ord long, level long,"
-             " heading_text string, section_text string"
-    )
+    return map_rows(
+        _documents_repartitioned(spark, sf_dir).select("doc_id", "text"),
+        section_rows,
+        "doc_id long, heading_ord long, level long,"
+        " heading_text string, section_text string")
 
 
 # List-structure twin: the generator packs consecutive 3-word groups
@@ -3592,43 +3414,18 @@ def _html_list_items_impl(spark, sf_dir):
     nav/footer/anchor-chrome which must vanish. Same fused
     single-Python-stage shape as the other HTML modality queries —
     one mapInPandas, no shuffle."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_lists
+    from pdfspark.kernel.html_extract import extract_html_list_items
 
-    docs = _documents_repartitioned(spark, sf_dir)
+    def item_rows(doc_id, text):
+        return [(doc_id, *item) for item in
+                extract_html_list_items(text_to_html_lists(text, doc_id))]
 
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_lists
-        from pdfspark.kernel.html_extract import extract_html_list_items
-
-        for b in batches:
-            ids, lists, items, ords, texts = [], [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for list_idx, item_idx, ordered, itext in (
-                        extract_html_list_items(
-                            text_to_html_lists(text, i))):
-                    ids.append(i)
-                    lists.append(list_idx)
-                    items.append(item_idx)
-                    ords.append(ordered)
-                    texts.append(itext)
-            yield pd.DataFrame(
-                {"doc_id": ids, "list_idx": lists, "item_idx": items,
-                 "ordered": ords, "item_text": texts},
-                columns=["doc_id", "list_idx", "item_idx", "ordered",
-                         "item_text"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, list_idx long, item_idx long, ordered long,"
-             " item_text string"
-    )
+    return map_rows(
+        _documents_repartitioned(spark, sf_dir).select("doc_id", "text"),
+        item_rows,
+        "doc_id long, list_idx long, item_idx long, ordered long,"
+        " item_text string")
 
 
 # Section-aware shard packing (ROADMAP r6 #3b): the pack unit is the
@@ -3813,6 +3610,8 @@ def text_winnowing_neardup(spark, sf_dir):
     not rows-only."""
     from pyspark.sql import types as T
 
+    from pdfspark.textops import winnow
+
     _load(spark, sf_dir, "documents")
     docs = spark.table("documents").select("doc_id", "text")
     # deterministic near-copies, same construction as the SQL dedup suite
@@ -3827,23 +3626,10 @@ def text_winnowing_neardup(spark, sf_dir):
         T.StructField("fp", T.LongType()),
     ])
 
-    def fingerprints(batches):
-        import sys
+    def fingerprint_rows(doc_id, text):
+        return [(doc_id, fp) for fp in set(winnow(text or "", k=8, w=6))]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.textops import winnow
-
-        for b in batches:
-            rows = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                for fp in set(winnow(text or "", k=8, w=6)):
-                    rows.append({"doc_id": int(doc_id), "fp": fp})
-            yield pd.DataFrame(rows, columns=["doc_id", "fp"])
-
-    fps = corpus.mapInPandas(fingerprints, schema)
+    fps = map_rows(corpus, fingerprint_rows, schema)
     a = fps.alias("a")
     b = fps.alias("b")
     return (
@@ -3890,6 +3676,8 @@ def text_longest_repeat(spark, sf_dir):
     agreement is pinned against brute force in tests."""
     from pyspark.sql import types as T
 
+    from pdfspark.textops import longest_repeat_len
+
     _load(spark, sf_dir, "documents")
     docs = spark.table("documents").select("doc_id", "text")
     schema = T.StructType([
@@ -3897,31 +3685,16 @@ def text_longest_repeat(spark, sf_dir):
         T.StructField("lr_len", T.LongType()),
     ])
 
-    def run(batches):
-        import sys
+    def repeat_row(doc_id, text):
+        # base capped at 100k unique codepoints (chr() range safety for
+        # pathological word counts) — the closed form is unaffected:
+        # L ≤ 17 ≪ the cap, so min(n_eff, L) == min(n, L) always
+        n = min(len((text or "").split(" ")), 100_000)
+        L = min(n, doc_id % 17 + 1)
+        probe = "".join(chr(0x4E00 + i) for i in range(n))
+        return [(doc_id, int(longest_repeat_len(probe + probe[:L])))]
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.textops import longest_repeat_len
-
-        for b in batches:
-            ids, lens = [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                # base capped at 100k unique codepoints (chr() range
-                # safety for pathological word counts) — the closed
-                # form is unaffected: L ≤ 17 ≪ the cap, so
-                # min(n_eff, L) == min(n, L) always
-                n = min(len((text or "").split(" ")), 100_000)
-                L = min(n, int(doc_id) % 17 + 1)
-                probe = "".join(chr(0x4E00 + i) for i in range(n))
-                ids.append(int(doc_id))
-                lens.append(int(longest_repeat_len(probe + probe[:L])))
-            yield pd.DataFrame({"doc_id": ids, "lr_len": lens},
-                               columns=["doc_id", "lr_len"])
-
-    return docs.mapInPandas(run, schema)
+    return map_rows(docs, repeat_row, schema)
 
 
 # broadcast-side bound for ann_numpy_topk: 100k × 64 dims × 8 B ≈ 50 MB
@@ -5137,30 +4910,14 @@ def text_compression_ratio(spark, sf_dir):
     themselves are pinned by the local determinism test."""
     from pyspark.sql import types as T
 
+    from pdfspark.textops import compression_ratio_bp
+
     _load(spark, sf_dir, "documents")
 
-    def run(batches):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.textops import compression_ratio_bp
-
-        for b in batches:
-            bps = [compression_ratio_bp(t or "") for t in b["text"]]
-            expect = b["expect_bp"]
-            yield pd.DataFrame({
-                "doc_id": b["doc_id"].astype("int64"),
-                "raw_len": [
-                    len((t or "").encode("utf-8")) for t in b["text"]
-                ],
-                "bp_ok": [
-                    (bp == e) if e >= 0 else (1 <= bp <= 30000)
-                    for bp, e in zip(bps, expect)
-                ],
-            })
+    def ratio_row(doc_id, text, expect_bp):
+        bp = compression_ratio_bp(text or "")
+        return [(doc_id, len((text or "").encode("utf-8")),
+                 (bp == expect_bp) if expect_bp >= 0 else (1 <= bp <= 30000))]
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -5174,7 +4931,7 @@ def text_compression_ratio(spark, sf_dir):
     corpus = spark.table("documents").select(
         "doc_id", "text", F.lit(-1).cast("long").alias("expect_bp")
     ).unionByName(spots)
-    return corpus.mapInPandas(run, schema)
+    return map_rows(corpus, ratio_row, schema)
 
 
 @register(

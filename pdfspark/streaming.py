@@ -18,7 +18,9 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pdfspark.pipeline import EXTRACT_SCHEMA, PAGES_SCHEMA, _extract_batches, filter_pdf_rows
+from pdfspark.pipeline import (EXTRACT_SCHEMA, PAGES_SCHEMA, _extract_batches,
+                               filter_pdf_rows, map_rows)
+from pdfspark.textops import minhash_band_sigs
 
 
 def read_pages_stream(
@@ -383,27 +385,11 @@ _STREAM_BANDS_SCHEMA = "doc_id long, band int, sig string"
 _BAND_INDEX_SCHEMA = "hist_id long, band int, sig string"
 
 
-def _plain_band_batches(batches):
-    """mapInPandas body: (doc_id, text) → (doc_id, band, sig) — the SAME
-    Arrow minhash kernel as the batch LSH queries (textops), without the
-    batch harness's synthesized mutants (a stream carries real rows)."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if repo not in sys.path:
-        sys.path.insert(0, repo)
-    import pandas as pd
-
-    from pdfspark.textops import minhash_band_sigs
-
-    for b in batches:
-        rows = []
-        for doc_id, text in zip(b["doc_id"], b["text"]):
-            for band, sig in minhash_band_sigs(str(text)):
-                rows.append({"doc_id": int(doc_id), "band": band,
-                             "sig": sig})
-        yield pd.DataFrame(rows, columns=["doc_id", "band", "sig"])
+def _plain_band_rows(doc_id, text):
+    """map_rows fn: (doc_id, text) → (doc_id, band, sig) — the SAME Arrow
+    minhash kernel as the batch LSH queries (textops), without the batch
+    harness's synthesized mutants (a stream carries real rows)."""
+    return [(doc_id, band, sig) for band, sig in minhash_band_sigs(str(text))]
 
 
 def build_band_index(docs: DataFrame) -> DataFrame:
@@ -411,8 +397,8 @@ def build_band_index(docs: DataFrame) -> DataFrame:
     hist_id) rows — the precomputed table the incremental/stream dedup
     topologies join against. At 10^12 scale this is written bucketed by
     (band, sig) once per corpus rebuild."""
-    return docs.mapInPandas(
-        _plain_band_batches, _STREAM_BANDS_SCHEMA
+    return map_rows(
+        docs.select("doc_id", "text"), _plain_band_rows, _STREAM_BANDS_SCHEMA
     ).withColumnRenamed("doc_id", "hist_id")
 
 
@@ -450,9 +436,8 @@ def minhash_dedup_decisions(batch_docs: DataFrame,
     parquet-backed index re-reads instead, and callers draining a
     stream should pass a precomputed ``hist_sized`` so the aggregation
     doesn't rerun per micro-batch."""
-    bands = batch_docs.select("doc_id", "text").mapInPandas(
-        _plain_band_batches, _STREAM_BANDS_SCHEMA
-    )
+    bands = map_rows(batch_docs.select("doc_id", "text"), _plain_band_rows,
+                     _STREAM_BANDS_SCHEMA)
     if hist_sized is None:
         hist_sized = sized_bands(band_index)
     hits = (
@@ -1754,8 +1739,9 @@ def run_band_index_append_stream_once(
     bounded by the compaction cadence, not the crawl cadence."""
 
     def append(batch_df: DataFrame, batch_id: int) -> None:
-        bands = batch_df.select("doc_id", "text").mapInPandas(
-            _plain_band_batches, _STREAM_BANDS_SCHEMA
+        bands = map_rows(
+            batch_df.select("doc_id", "text"), _plain_band_rows,
+            _STREAM_BANDS_SCHEMA,
         ).withColumnRenamed("doc_id", "hist_id")
         bands.write.mode("overwrite").parquet(
             f"{index_dir}/delta/batch_id={batch_id}"

@@ -11,6 +11,11 @@ given SF and sweeps for scale-killers:
   FlatMapGroupsInPandas) and Exchange counts per query, so a future
   regression that doubles a query's shuffles is visible in the diff.
 
+A conditional plan is audited in BOTH regimes: after the sweep,
+percentiles_exact is planned once more with
+SPARK_GRAFT_PCT_SINGLE_BUFFER_ROWS=0, which forces the exact-rank regime
+that any input above the cutover (every production table) takes.
+
 Prints one JSON line; non-zero exit if a hard violation is found.
 
 Usage: python3 scripts/plan_audit.py [--sf-dir /root/testdata/sf0.001]
@@ -53,6 +58,28 @@ _BNLJ_EXPECTED = {
     "doc_length_percentile_buckets",
 }
 
+# The at-scale regime of a conditional query, planned with its env knob
+# forced, against its OWN pinned BNLJ set (the sweep above plans the toy
+# SF's regime). percentiles_exact's exact-rank regime crosses the
+# per-partition counts, the ranked rows and the final aggregate with the
+# broadcast 1-row target-rank frame (``tgt``): bounded at any input
+# size, so its BNLJs are legal there.
+_FORCED_REGIMES = {
+    "percentiles_exact[exact_rank]": (
+        "percentiles_exact", "SPARK_GRAFT_PCT_SINGLE_BUFFER_ROWS", "0"),
+}
+_BNLJ_EXPECTED_FORCED = {"percentiles_exact[exact_rank]"}
+
+
+def _plan_checks(plan: str) -> list:
+    """Hard violations any plan must not carry."""
+    found = []
+    if "BatchEvalPython" in plan:
+        found.append("row-wise Python UDF")
+    if "CartesianProduct" in plan:
+        found.append("CartesianProduct")
+    return found
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -67,6 +94,7 @@ def main() -> None:
                           shuffle_partitions=args.cores * 2,
                           app="plan-audit")
     hard, summary, bnlj_seen = [], {}, set()
+    forced_planned, forced_bnlj = set(), set()
     try:
         for name, fn in QUERIES.items():
             try:
@@ -75,10 +103,7 @@ def main() -> None:
             except Exception as e:  # a query that cannot even plan
                 hard.append((name, f"plan-failed: {e}"))
                 continue
-            if "BatchEvalPython" in plan:
-                hard.append((name, "row-wise Python UDF"))
-            if "CartesianProduct" in plan:
-                hard.append((name, "CartesianProduct"))
+            hard.extend((name, v) for v in _plan_checks(plan))
             if "BroadcastNestedLoopJoin" in plan:
                 bnlj_seen.add(name)
             summary[name] = {
@@ -87,14 +112,35 @@ def main() -> None:
                                  ("ArrowEvalPython", "MapInPandas",
                                   "FlatMapGroupsInPandas")),
             }
+        for label, (name, knob, value) in _FORCED_REGIMES.items():
+            saved = os.environ.get(knob)
+            os.environ[knob] = value
+            try:
+                plan = (QUERIES[name](spark, args.sf_dir)._jdf
+                        .queryExecution().executedPlan().toString())
+            except Exception as e:
+                hard.append((label, f"plan-failed: {e}"))
+                continue
+            finally:
+                if saved is None:
+                    del os.environ[knob]
+                else:
+                    os.environ[knob] = saved
+            forced_planned.add(label)
+            hard.extend((label, v) for v in _plan_checks(plan))
+            if "BroadcastNestedLoopJoin" in plan:
+                forced_bnlj.add(label)
     finally:
         spark.stop()
 
-    for name in sorted(bnlj_seen - _BNLJ_EXPECTED):
-        hard.append((name, "BNLJ not in the adjudicated set"))
-    for name in sorted(_BNLJ_EXPECTED - bnlj_seen):
-        if name in summary:  # lost its pinned BNLJ — shape changed
-            hard.append((name, "pinned BNLJ disappeared"))
+    for seen, expected, planned in (
+            (bnlj_seen, _BNLJ_EXPECTED, summary),
+            (forced_bnlj, _BNLJ_EXPECTED_FORCED, forced_planned)):
+        for name in sorted(seen - expected):
+            hard.append((name, "BNLJ not in the adjudicated set"))
+        for name in sorted(expected - seen):
+            if name in planned:  # lost its pinned BNLJ — shape changed
+                hard.append((name, "pinned BNLJ disappeared"))
     worst = sorted(summary.items(), key=lambda kv: -kv[1]["exchanges"])[:5]
     print(json.dumps({
         "n_queries": len(summary),

@@ -569,12 +569,6 @@ def _cjk_codec_for(name: str) -> Optional[str]:
         return _CJK_CODEC_CMAPS.get(name[:-2])
     return None
 
-_PREDEFINED_CJK = re.compile(
-    r"^(GB|GBK|GBpc|GBT|B5|B5pc|CNS|ETen|ETHK|HK|UniGB|UniCNS|UniJIS|UniKS|"
-    r"90ms|90pv|83pv|Add|EUC|Ext|H|V|Identity|Katakana|Hiragana|KSC|KSCms|"
-    r"KSCpc|Roman|WP)"
-)
-
 
 class Glyph:
     __slots__ = ("code", "text", "advance", "is_space", "v_advance")

@@ -23,7 +23,6 @@ _REGULAR_RUN = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
 _NUMBER_RUN = re.compile(rb"[+-]?(?:\d+\.?\d*|\.\d+)")
 _STRING_SPECIAL = re.compile(rb"[\\()\r]")
 _IS_WS = bytes(1 if i in WHITESPACE else 0 for i in range(256))
-_IS_DELIM = bytes(1 if i in DELIMITERS else 0 for i in range(256))
 _IS_REGULAR = bytes(
     0 if (i in WHITESPACE or i in DELIMITERS) else 1 for i in range(256)
 )

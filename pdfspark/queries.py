@@ -21,13 +21,15 @@ sf-scaled but the plans are the ones we'd want on a 1000-executor cluster.
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pdfspark.pipeline import REPO_ROOT, _documents_repartitioned, map_rows
+from pdfspark.pipeline import (_documents_repartitioned, _table_repartitioned,
+                               map_rows)
 from pdfspark.textops import minhash_band_sigs
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -485,8 +487,6 @@ def events_json_extract(spark, sf_dir):
     single-row-group scan task (interleaved A/B at sf1.0: 1.93 s
     narrow → 0.66 s widened; the repartition is conditional on a
     narrow scan, see pipeline._table_repartitioned)."""
-    from pdfspark.pipeline import _table_repartitioned
-
     _load(spark, sf_dir, "events")
     return _table_repartitioned(spark, sf_dir, "events", "event_id") \
         .groupBy("event_type").agg(
@@ -1580,10 +1580,9 @@ def ann_bruteforce_topk(spark, sf_dir):
     recomputed per PAIR inside the cross join — 2 of the 3 array folds
     per pair were per-vector invariants, guide §1.2 step 2), and the
     single-row-group embeddings scan is widened so the interpreted
-    higher-order-function work runs on every core instead of one."""
-    _load(spark, sf_dir, "embeddings")
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    spark.table("embeddings").repartition(nparts, "vec_id") \
+    higher-order-function work runs on every core instead of one
+    (conditional, see pipeline._table_repartitioned)."""
+    _table_repartitioned(spark, sf_dir, "embeddings", "vec_id") \
         .createOrReplaceTempView("embeddings_wide")
     return spark.sql(_ANN_SPARK)
 
@@ -1676,6 +1675,20 @@ WHERE dot / (SQRT(na) * SQRT(nb)) >= 0.30
 """
 
 
+def _neardup_cell(pdf):
+    """applyInPandas body of embedding_cosine_neardup: one IVF cell's
+    pairs with cosine ≥ 0.30."""
+    import numpy as np
+    import pandas as pd
+
+    from pdfspark.textops import cell_pairs, round_half_up
+
+    a, b, cos = cell_pairs(pdf["vec_id"].to_numpy(),
+                           np.array(list(pdf["qv"]), dtype=np.float64), 0.30)
+    return pd.DataFrame({"vec_a": a, "vec_b": b,
+                         "cosine": round_half_up(cos, 6)})
+
+
 @register(
     "embedding_cosine_neardup",
     oracle=_V_DUCK + _NEARDUP_EMB_TAIL.format(
@@ -1690,18 +1703,19 @@ def embedding_cosine_neardup(spark, sf_dir):
     the SAME IVF cell assignment as ann_ivf_bucketed: pairs only form
     WITHIN a bucket, never all-pairs, and no id cap — the shape that
     scales to the full table (VERDICT r1 wrong #4). At 100 TB the
-    per-cell pair count (and the new per-task Gram matrix) is bounded by
-    the cell size the centroid count controls.
+    per-cell pair count is bounded by the cell size the centroid count
+    controls.
 
     r9: the pair stage moved from an interpreted higher-order-function
     self-join (~25M per-pair zip_with folds at sf1.0 — measured 427 s)
-    into ONE NumPy Gram matmul per cell via applyInPandas, the
-    ann_numpy_ivf pattern (guide §4.2). Numerically identical: integer
-    dots and norms are ≤ ~6e8 so float64 matmul is exact, and the
-    cosine is formed with the same IEEE op order the SQL used
-    (dot / (sqrt(na)·sqrt(nb))); rounding uses the vectorized twin of
-    textops.round_half_up. Assignment SQL is unchanged (shared
-    _ASSIGN_SELECT CTE, 8-row seed broadcast)."""
+    into NumPy per cell via applyInPandas, the ann_numpy_ivf pattern
+    (guide §4.2): textops.cell_pairs tiles the cell's Gram matrix, so
+    per-task memory is O(_BLOCK²) at any cell size. Numerically
+    identical: integer dots and norms are ≤ ~6e8 so float64 matmul is
+    exact, and the cosine is formed with the same IEEE op order the SQL
+    used (dot / (sqrt(na)·sqrt(nb))), rounded by textops.round_half_up.
+    Assignment SQL is unchanged (shared _ASSIGN_SELECT CTE, 8-row seed
+    broadcast)."""
     from pyspark.sql import types as T
 
     _load(spark, sf_dir, "embeddings")
@@ -1716,32 +1730,7 @@ def embedding_cosine_neardup(spark, sf_dir):
         T.StructField("vec_b", T.LongType()),
         T.StructField("cosine", T.DoubleType()),
     ])
-
-    def cell_pairs(pdf):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import numpy as np
-        import pandas as pd
-
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)  # ids unique ⇒ triu (i<j) == vec_a < vec_b
-        ids = ids[order]
-        mat = np.array(list(pdf["qv"]), dtype=np.float64)[order]
-        n = np.sqrt((mat * mat).sum(axis=1))
-        cos = (mat @ mat.T) / np.outer(n, n)
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = cos[iu, ju] >= 0.30
-        c = cos[iu[keep], ju[keep]]
-        rounded = np.copysign(np.floor(np.abs(c) * 1e6 + 0.5), c) / 1e6
-        return pd.DataFrame({
-            "vec_a": ids[iu[keep]].astype("int64"),
-            "vec_b": ids[ju[keep]].astype("int64"),
-            "cosine": rounded,
-        })
-
-    return base.groupBy("bucket").applyInPandas(cell_pairs, schema)
+    return base.groupBy("bucket").applyInPandas(_neardup_cell, schema)
 
 
 # Takedown-aware ANN over a MAINTAINED index (late r8, the batch face
@@ -3707,13 +3696,13 @@ _ANN_BASE_CAP = 100_000
 @register("ann_numpy_topk", oracle=_ANN_DUCK)
 def ann_numpy_topk(spark, sf_dir):
     """Same ANN contract as ann_bruteforce_topk but through the vectorized
-    NumPy path: base matrix broadcast to workers, one matmul per Arrow
-    batch of queries. Integer quantization keeps it bit-identical to the
-    SQL/DuckDB oracle. At scale: queries shard across tasks; the base is
-    a SIZE-BOUNDED broadcast (_ANN_BASE_CAP rows — VERDICT r1 wrong #3);
-    a larger base must go through per-IVF-cell broadcasts instead."""
+    NumPy path: base matrix broadcast to workers, one tiled
+    textops.cell_topk per query row (a map_rows stage). Integer
+    quantization keeps it bit-identical to the SQL/DuckDB oracle. At
+    scale: queries shard across tasks; the base is a SIZE-BOUNDED
+    broadcast (_ANN_BASE_CAP rows — VERDICT r1 wrong #3); a larger base
+    must go through per-IVF-cell broadcasts instead."""
     import numpy as np
-    from pyspark.sql import types as T
 
     _load(spark, sf_dir, "embeddings")
     emb = spark.table("embeddings").select("vec_id", "embedding")
@@ -3724,65 +3713,26 @@ def ann_numpy_topk(spark, sf_dir):
             f"({_ANN_BASE_CAP} rows); compose per-IVF-cell broadcasts "
             f"(ann_ivf_bucketed shape) instead of one global base"
         )
-    base_ids = np.array([r.vec_id for r in base_rows], dtype=np.int64)
     from pdfspark.textops import quantize_milli
 
-    base_mat = quantize_milli(
-        np.array([r.embedding for r in base_rows], dtype=np.float64)
-    )
     sc = spark.sparkContext
-    b_ids = sc.broadcast(base_ids)
-    b_mat = sc.broadcast(base_mat)
+    b_ids = sc.broadcast(
+        np.array([r.vec_id for r in base_rows], dtype=np.int64))
+    b_mat = sc.broadcast(quantize_milli(
+        np.array([r.embedding for r in base_rows], dtype=np.float64)))
 
-    schema = T.StructType([
-        T.StructField("qid", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-        T.StructField("rnk", T.IntegerType()),
-    ])
+    def topk_row(vec_id, embedding):
+        from pdfspark.textops import cell_topk, round_half_up
 
-    def topk(batches):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import numpy as _np
-        import pandas as pd
-
-        from pdfspark.textops import cosine_matrix, quantize_milli, round_half_up
-
-        ids = b_ids.value
-        mat = b_mat.value
-        for batch in batches:
-            if not len(batch):
-                continue
-            qids = batch["vec_id"].to_numpy()
-            qmat = quantize_milli(
-                _np.array(list(batch["embedding"]), dtype=_np.float64)
-            )
-            cos = cosine_matrix(qmat, mat)
-            rows = []
-            for qi, qid in enumerate(qids):
-                scores = cos[qi]
-                order = _np.lexsort((ids, -scores))
-                rank = 0
-                for j in order:
-                    if ids[j] == qid:
-                        continue
-                    rank += 1
-                    if rank > 10:
-                        break
-                    rows.append({
-                        "qid": int(qid),
-                        "neighbor_id": int(ids[j]),
-                        "cosine": round_half_up(float(scores[j]), 6),
-                        "rnk": rank,
-                    })
-            yield pd.DataFrame(rows, columns=["qid", "neighbor_id",
-                                              "cosine", "rnk"])
+        _, rnk, nid, cos = cell_topk(
+            [vec_id], quantize_milli([embedding]), b_ids.value, b_mat.value,
+            10, cosine=True, skip_self=True)
+        return zip([vec_id] * len(nid), nid.tolist(),
+                   round_half_up(cos, 6).tolist(), rnk.tolist())
 
     queries_df = emb.filter("vec_id < 5").repartition(2)
-    return queries_df.mapInPandas(topk, schema)
+    return map_rows(queries_df, topk_row,
+                    "qid long, neighbor_id long, cosine double, rnk int")
 
 
 @register(
@@ -4140,15 +4090,34 @@ SELECT a.vec_id, a.bucket, v.qv FROM assign a JOIN v ON v.vec_id = a.vec_id
 """
 
 
+def _ivf_cell_topk(bq, pdf):
+    """applyInPandas body of ann_numpy_ivf: the top-5 cosine neighbours,
+    self excluded, of the broadcast queries (``bq``: bucket → [(qid,
+    qv)]) that fall in this IVF cell."""
+    import numpy as np
+    import pandas as pd
+
+    from pdfspark.textops import cell_topk, round_half_up
+
+    qs = bq.value.get(int(pdf["bucket"].iloc[0]), [])
+    qid, rnk, nid, cos = cell_topk(
+        [q for q, _ in qs], [v for _, v in qs], pdf["vec_id"].to_numpy(),
+        np.array(list(pdf["qv"]), dtype=np.float64), 5, cosine=True,
+        skip_self=True)
+    return pd.DataFrame({"qid": qid, "neighbor_id": nid,
+                         "cosine": round_half_up(cos, 6), "rnk": rnk})
+
+
 @register("ann_numpy_ivf", oracle=_IVF_DUCK)
 def ann_numpy_ivf(spark, sf_dir):
     """The PRODUCTION ANN shape past the global-broadcast cap: IVF cell
     assignment in SQL (same CTE as ann_ivf_bucketed), then a vectorized
     NumPy top-k INSIDE each cell via applyInPandas — the base matrix a
     task sees is one cell, never the table, so nothing is collected to
-    the driver and per-task memory is bounded by the cell size the
-    centroid count controls. Queries (tiny) broadcast by bucket. Exact
-    same results as the pure-SQL IVF query, checked by the same oracle."""
+    the driver, and textops.cell_topk tiles the cell, so per-task memory
+    is O(_BLOCK²) at any cell size. Queries (tiny) broadcast by bucket.
+    Exact same results as the pure-SQL IVF query, checked by the same
+    oracle."""
     import numpy as np
     from pyspark.sql import types as T
 
@@ -4173,45 +4142,9 @@ def ann_numpy_ivf(spark, sf_dir):
         T.StructField("cosine", T.DoubleType()),
         T.StructField("rnk", T.IntegerType()),
     ])
-
-    def cell_topk(pdf):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import numpy as _np
-        import pandas as pd
-
-        from pdfspark.textops import round_half_up
-
-        out = []
-        qs = bq.value.get(int(pdf["bucket"].iloc[0]), [])
-        if qs:
-            ids = pdf["vec_id"].to_numpy()
-            mat = _np.array(list(pdf["qv"]), dtype=_np.float64)
-            vn = _np.sqrt((mat * mat).sum(axis=1))
-            for qid, qv in qs:
-                cos = (mat @ qv) / (_np.sqrt(qv @ qv) * vn)
-                order = _np.lexsort((ids, -cos))
-                rnk = 0
-                for j in order:
-                    if int(ids[j]) == qid:
-                        continue
-                    rnk += 1
-                    if rnk > 5:
-                        break
-                    out.append({
-                        "qid": qid,
-                        "neighbor_id": int(ids[j]),
-                        "cosine": round_half_up(float(cos[j]), 6),
-                        "rnk": rnk,
-                    })
-        return pd.DataFrame(out, columns=["qid", "neighbor_id",
-                                          "cosine", "rnk"])
-
-    import pandas as pd  # noqa: F401  (applyInPandas return type)
-
-    return base.groupBy("bucket").applyInPandas(cell_topk, schema)
+    body = functools.partial(_ivf_cell_topk, bq)
+    body.__name__ = "ivf_cell_topk"  # the plan names the stage after it
+    return base.groupBy("bucket").applyInPandas(body, schema)
 
 
 _GOPHER = """
@@ -4754,6 +4687,9 @@ def ann_ivf_recall(spark, sf_dir):
     pipelines run inside one SQL statement; the recall number itself is
     deterministic and oracle-checked."""
     _load(spark, sf_dir, "embeddings")
+    # _ANN_SPARK reads the view ann_bruteforce_topk registers
+    _table_repartitioned(spark, sf_dir, "embeddings", "vec_id") \
+        .createOrReplaceTempView("embeddings_wide")
     return spark.sql(
         _RECALL_SQL.format(
             bf=_ANN_SPARK, ivf=_IVF_SPARK.replace("rnk <= 5", "rnk <= 10")

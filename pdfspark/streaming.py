@@ -13,6 +13,7 @@ stopped — the streaming twin of the batch manifest.
 
 from __future__ import annotations
 
+import functools
 import os
 from typing import Optional
 
@@ -1293,6 +1294,23 @@ def compact_ivf_index(spark: SparkSession, index_dir: str,
     return spark.read.parquet(os.path.join(out_dir, "base")).count()
 
 
+def _ivf_decisions_cell(k, qpdf, lpdf):
+    """Cogrouped applyInPandas body of ivf_topk_decisions: one cell's
+    top-``k`` live rows per query by exact int64 dot, self kept."""
+    import numpy as np
+    import pandas as pd
+
+    from pdfspark.textops import cell_topk
+
+    qid, rank, vid, dot = cell_topk(
+        qpdf["query_id"].to_numpy(),
+        np.array(list(qpdf["q_qv"]), dtype=np.int64),
+        lpdf["vec_id"].to_numpy(), np.array(list(lpdf["qv"]), dtype=np.int64),
+        k, cosine=False, skip_self=False)
+    return pd.DataFrame({"query_id": qid, "rank": rank, "vec_id": vid,
+                         "dot": dot})
+
+
 def ivf_topk_decisions(query_embs: DataFrame, live_index: DataFrame,
                        seeds, k: int = 1) -> DataFrame:
     """Top-k most-similar index vectors (integer dot product over the
@@ -1303,14 +1321,13 @@ def ivf_topk_decisions(query_embs: DataFrame, live_index: DataFrame,
     ann_ivf_bucketed contract). Ties break to the smaller vec_id.
     Returns (query_id, rank, vec_id, dot).
 
-    r9 (guide §4.2): scoring + ranking run as ONE exact int64 NumPy
-    matmul per cell via cogrouped applyInPandas, replacing the former
-    per-pair interpreted zip_with fold + per-query window — measured
-    ~20× on the sf1.0 sweep (ann_index_takedown 53 s → seconds) with
-    identical output (int64 dots are exact, lexsort reproduces the
-    (dot DESC, vec_id ASC) tie-break). Per-task memory is one cell's
-    Q×L dot matrix — bounded by the cell size the centroid count
-    controls, same knob as before."""
+    r9 (guide §4.2): scoring + ranking run as exact int64 NumPy per
+    cell via cogrouped applyInPandas, replacing the former per-pair
+    interpreted zip_with fold + per-query window — measured ~20× on the
+    sf1.0 sweep (ann_index_takedown 53 s → seconds) with identical
+    output (int64 dots are exact; textops.cell_topk's lexsort reproduces
+    the (dot DESC, vec_id ASC) tie-break). cell_topk tiles queries and
+    index rows, so per-task memory is O(_BLOCK²) at any cell size."""
     from pyspark.sql import types as T
 
     q = query_embs.select(
@@ -1325,36 +1342,11 @@ def ivf_topk_decisions(query_embs: DataFrame, live_index: DataFrame,
         T.StructField("vec_id", T.LongType()),
         T.StructField("dot", T.LongType()),
     ])
-    kk = int(k)
-
-    def cell_topk(qpdf, lpdf):
-        import numpy as np
-        import pandas as pd
-
-        cols = ["query_id", "rank", "vec_id", "dot"]
-        if len(qpdf) == 0 or len(lpdf) == 0:
-            return pd.DataFrame({c: [] for c in cols}, columns=cols)
-        qm = np.array(list(qpdf["q_qv"]), dtype=np.int64)
-        lm = np.array(list(lpdf["qv"]), dtype=np.int64)
-        qid = qpdf["query_id"].to_numpy()
-        lid = lpdf["vec_id"].to_numpy()
-        dots = qm @ lm.T  # int64 matmul: exact at any magnitude
-        out_q, out_r, out_v, out_d = [], [], [], []
-        for i in range(len(qid)):
-            row = dots[i]
-            order = np.lexsort((lid, -row))[:kk]
-            for r, j in enumerate(order, start=1):
-                out_q.append(int(qid[i]))
-                out_r.append(r)
-                out_v.append(int(lid[j]))
-                out_d.append(int(row[j]))
-        return pd.DataFrame(
-            {"query_id": out_q, "rank": out_r,
-             "vec_id": out_v, "dot": out_d}, columns=cols)
-
+    body = functools.partial(_ivf_decisions_cell, int(k))
+    body.__name__ = "ivf_decisions_cell"  # the plan names the stage after it
     return q.groupBy("cell").cogroup(
         live_index.groupBy("cell")
-    ).applyInPandas(cell_topk, schema)
+    ).applyInPandas(body, schema)
 
 
 def compact_ivf_index_recentered(

@@ -1,8 +1,9 @@
 """Kernel-side text/vector operators that aren't SQL-expressible:
 winnowing fingerprints (Schleimer, Wilkerson, Aiken — "Winnowing: Local
-Algorithms for Document Fingerprinting", SIGMOD 2003) and a NumPy
-brute-force ANN over a broadcast matrix (the vectorized-Pandas-UDF path
-the SQL higher-order version trades against).
+Algorithms for Document Fingerprinting", SIGMOD 2003) and the one tiled
+NumPy similarity kernel (cell_pairs / cell_topk) behind every vectorized
+ANN and embedding near-dup stage (the Pandas-UDF path the SQL
+higher-order version trades against).
 """
 
 from __future__ import annotations
@@ -64,13 +65,13 @@ def quantize_milli(x):
     return np.floor(arr + 0.5)
 
 
-def round_half_up(x: float, digits: int = 6) -> float:
-    """SQL-compatible ROUND (half away from zero); Python's built-in
-    round() is half-to-even."""
-    import math
+def round_half_up(x, digits: int = 6):
+    """SQL-compatible ROUND (half away from zero) of a float or an
+    array; Python's built-in round() is half-to-even."""
+    import numpy as np
 
-    scale = 10 ** digits
-    return math.copysign(math.floor(abs(x) * scale + 0.5), x) / scale
+    scale = 10.0 ** digits
+    return np.copysign(np.floor(np.abs(x) * scale + 0.5), x) / scale
 
 
 def cosine_matrix(query_mat, base_mat):
@@ -85,6 +86,74 @@ def cosine_matrix(query_mat, base_mat):
     qn = np.sqrt((q * q).sum(axis=1))[:, None]
     bn = np.sqrt((b * b).sum(axis=1))[None, :]
     return dots / (qn * bn)
+
+
+# Rows per tile side in cell_pairs / cell_topk: one float64 score tile is
+# _BLOCK² × 8 B = 32 MB, so per-task memory is O(_BLOCK²) however many
+# rows one IVF cell holds.
+_BLOCK = 2048
+
+
+def cell_pairs(ids, mat, threshold):
+    """Every pair of rows of one cell whose cosine is ≥ ``threshold``, as
+    (id_a, id_b, cosine) arrays with id_a < id_b (``ids`` unique) and the
+    cosine unrounded. The Gram matrix is tiled over _BLOCK-row blocks:
+    upper-triangle tiles only, the diagonal tile masked to i < j."""
+    import numpy as np
+
+    order = np.argsort(ids)
+    ids = np.asarray(ids)[order]
+    mat = np.asarray(mat, dtype=np.float64)[order]
+    a, b, c = [ids[:0]], [ids[:0]], [np.empty(0)]
+    for i0 in range(0, len(ids), _BLOCK):
+        for j0 in range(i0, len(ids), _BLOCK):
+            cos = cosine_matrix(mat[i0:i0 + _BLOCK], mat[j0:j0 + _BLOCK])
+            keep = cos >= threshold
+            if i0 == j0:
+                keep = np.triu(keep, 1)
+            i, j = np.nonzero(keep)
+            a.append(ids[i0 + i])
+            b.append(ids[j0 + j])
+            c.append(cos[i, j])
+    return np.concatenate(a), np.concatenate(b), np.concatenate(c)
+
+
+def cell_topk(q_ids, q_mat, ids, mat, k, cosine, skip_self):
+    """Each query row's ``k`` best base rows, ranked score DESC then id
+    ASC, as flat (query id, rank 1.., base id, score) arrays in query
+    order. The score is the cosine_matrix cosine (unrounded) when
+    ``cosine``, else the exact int64 dot; ``skip_self`` drops base rows
+    whose id is the query's own. Queries and base rows both go in
+    _BLOCK-row tiles: each base tile merges into a running top-k per
+    query through one row-wise lexsort on (self, -score, id)."""
+    import numpy as np
+
+    dtype = np.float64 if cosine else np.int64
+    q_ids = np.asarray(q_ids, dtype=np.int64)
+    q_mat = np.asarray(q_mat, dtype=dtype)
+    ids = np.asarray(ids, dtype=np.int64)
+    mat = np.asarray(mat, dtype=dtype)
+    out = [(q_ids[:0], q_ids[:0], q_ids[:0], np.empty(0, dtype))]
+    for q0 in range(0, len(q_ids), _BLOCK):
+        qm = q_mat[q0:q0 + _BLOCK]
+        qi = q_ids[q0:q0 + _BLOCK, None]
+        top_s = np.empty((len(qi), 0), dtype)
+        top_i = np.empty((len(qi), 0), np.int64)
+        for b0 in range(0, len(ids), _BLOCK):
+            tile = mat[b0:b0 + _BLOCK]
+            s = cosine_matrix(qm, tile) if cosine else qm @ tile.T
+            s = np.hstack([top_s, s])
+            i = np.hstack([top_i, np.broadcast_to(ids[b0:b0 + _BLOCK],
+                                                  (len(qi), len(tile)))])
+            pick = np.lexsort((i, -s, (i == qi) & skip_self), axis=1)[:, :k]
+            top_s = np.take_along_axis(s, pick, axis=1)
+            top_i = np.take_along_axis(i, pick, axis=1)
+        # self rows sort last, so the rows kept rank 1..m without gaps
+        keep = ~((top_i == qi) & skip_self)
+        rank = np.broadcast_to(np.arange(1, top_i.shape[1] + 1), top_i.shape)
+        out.append((np.broadcast_to(qi, top_i.shape)[keep], rank[keep],
+                    top_i[keep], top_s[keep]))
+    return tuple(np.concatenate(col) for col in zip(*out))
 
 
 def minhash_band_sigs(text: str, n_hashes: int = 8, band_width: int = 2):

@@ -101,6 +101,19 @@ def test_map_rows(spark, fn, expected):
     assert rows == sorted(expected)
 
 
+def test_no_worker_sys_path_bootstrap():
+    """Python stages are module-level bodies pickled by reference
+    (map_rows, the applyInPandas cell kernels), so the worker imports
+    pdfspark before they run and no code under pdfspark/ patches
+    sys.path."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdfspark"
+    offenders = [str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+                 if "sys.path.insert" in p.read_text(encoding="utf-8")]
+    assert offenders == []
+
+
 def test_documents_roundtrip(spark):
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     expected = {r.doc_id: r.text for r in docs.collect()}

@@ -734,6 +734,32 @@ def test_table_repartitioned_is_conditional(spark, tmp_path):
     assert "Exchange" not in plan, plan
 
 
+def test_ann_bruteforce_widening_is_conditional(spark, tmp_path):
+    """ann_bruteforce_topk widens embeddings through
+    _table_repartitioned: an embeddings dir that already scans at least
+    as wide as the session (≥ spark.sql.shuffle.partitions files)
+    plans no hash exchange on vec_id."""
+    from pdfspark.queries import QUERIES
+
+    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    wide = str(tmp_path / "wide")
+    spark.read.parquet(f"{SF_DIR}/embeddings.parquet") \
+        .repartition(nparts).write.parquet(f"{wide}/embeddings.parquet")
+    plan = plan_of(QUERIES["ann_bruteforce_topk"](spark, wide))
+    assert "hashpartitioning(vec_id" not in plan, plan
+
+
+def test_ann_ivf_recall_plans_in_a_fresh_session(spark):
+    """ann_ivf_recall reads the embeddings_wide view ann_bruteforce_topk
+    also reads; it must register that view itself, so it plans even
+    when it is the first ANN query a session runs."""
+    from pdfspark.queries import QUERIES
+
+    spark.catalog.dropTempView("embeddings_wide")
+    plan = plan_of(QUERIES["ann_ivf_recall"](spark, SF_DIR))
+    assert "hashpartitioning(vec_id" in plan, plan  # testdata: one row group
+
+
 def test_ivf_recenter_refuses_short_centroid(spark):
     """r9 invariant (ADVICE r8 #3): a refreshed centroid whose live
     vectors carry fewer dims than the seed must raise loudly instead

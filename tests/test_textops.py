@@ -1,10 +1,11 @@
-"""Winnowing fingerprints + NumPy cosine kernel (pdfspark/textops.py)."""
+"""Winnowing fingerprints + the tiled NumPy similarity kernel (pdfspark/textops.py)."""
 
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from pdfspark.textops import cosine_matrix, kgram_hashes, quantize_milli, round_half_up, winnow
+from pdfspark.textops import (cell_pairs, cell_topk, cosine_matrix, kgram_hashes, quantize_milli,
+                              round_half_up, winnow)
 
 
 def test_kgram_count():
@@ -78,6 +79,118 @@ def test_round_half_up():
     assert round_half_up(0.1234565, 6) == 0.123457
     assert round_half_up(-0.1234565, 6) == -0.123457
     assert round_half_up(1.5, 0) == 2.0
+    # an array rounds elementwise, like the scalars above
+    assert round_half_up(np.array([0.1234565, -0.1234565, 2.5e-7]), 6) \
+        .tolist() == [0.123457, -0.123457, 0.0]
+
+
+# The untiled formulations cell_pairs / cell_topk replaced, kept as their
+# identity reference: a full n×n Gram matrix, and per query one full-row
+# lexsort walked by a Python rank loop.
+
+def _scalar_round_half_up(x, digits):
+    import math
+
+    scale = 10 ** digits
+    return math.copysign(math.floor(abs(x) * scale + 0.5), x) / scale
+
+
+def _untiled_pairs(ids, mat, threshold):
+    order = np.argsort(ids)  # ids unique ⇒ triu (i<j) == vec_a < vec_b
+    ids = ids[order]
+    mat = np.array(mat, dtype=np.float64)[order]
+    n = np.sqrt((mat * mat).sum(axis=1))
+    cos = (mat @ mat.T) / np.outer(n, n)
+    iu, ju = np.triu_indices(len(ids), k=1)
+    keep = cos[iu, ju] >= threshold
+    c = cos[iu[keep], ju[keep]]
+    rounded = np.copysign(np.floor(np.abs(c) * 1e6 + 0.5), c) / 1e6
+    return ids[iu[keep]], ids[ju[keep]], c, rounded
+
+
+def _untiled_topk(q_ids, q_mat, ids, mat, k, cosine, skip_self):
+    vn = np.sqrt((mat * mat).sum(axis=1))
+    rows = []
+    for qi, qid in enumerate(q_ids):
+        if cosine:  # one float64 matvec per query
+            qv = q_mat[qi]
+            row = (mat @ qv) / (np.sqrt(qv @ qv) * vn)
+        else:  # exact int64 dots
+            row = mat.astype(np.int64) @ q_mat[qi].astype(np.int64)
+        order = np.lexsort((ids, -row))
+        rank = 0
+        for j in order:
+            if skip_self and ids[j] == qid:
+                continue
+            rank += 1
+            if rank > k:
+                break
+            rows.append((int(qid), rank, int(ids[j]), row[j].item()))
+    return rows
+
+
+def _cell(n):
+    """n quantized 16-dim rows under unique, unsorted ids; about a third
+    of the rows duplicate another row, so scores tie exactly."""
+    rng = np.random.RandomState(n)
+    mat = quantize_milli(rng.randn(n, 16) * 0.2)
+    if n >= 2:
+        mat[rng.randint(0, n, n // 3 + 1)] = mat[rng.randint(0, n, n // 3 + 1)]
+    ids = rng.permutation(10 * n)[:n].astype(np.int64)
+    return ids, mat
+
+
+@pytest.mark.parametrize("block", [3, 64, None])
+@pytest.mark.parametrize("n", [0, 1, 2, 5, 700])
+def test_tiled_kernels_match_untiled(monkeypatch, block, n):
+    """cell_pairs / cell_topk give exactly the untiled rows at every
+    tile size: single and ragged tiles, exact score ties (broken by id),
+    k beyond the cell, self rows kept or dropped, cosine and int64 dot."""
+    import pdfspark.textops as textops
+
+    if block is not None:
+        monkeypatch.setattr(textops, "_BLOCK", block)
+    ids, mat = _cell(n)
+
+    a, b, c = cell_pairs(ids, mat, 0.30)
+    ref_a, ref_b, ref_c, ref_rounded = _untiled_pairs(ids, mat, 0.30)
+    assert sorted(zip(a.tolist(), b.tolist(), c.tolist(),
+                      round_half_up(c, 6).tolist())) \
+        == sorted(zip(ref_a.tolist(), ref_b.tolist(), ref_c.tolist(),
+                      ref_rounded.tolist()))
+    if n == 700:
+        assert len(a) > 0 and len(np.unique(c)) < len(c)  # ties exercised
+
+    q_ids, q_mat = ids[:100], mat[:100]  # queries are cell rows: self exists
+    for cosine in (True, False):
+        for skip_self in (True, False):
+            for k in (1, 2, 5, 10):
+                got = cell_topk(q_ids, q_mat, ids, mat, k, cosine, skip_self)
+                ref = _untiled_topk(q_ids, q_mat, ids, mat, k, cosine,
+                                    skip_self)
+                assert list(zip(*(col.tolist() for col in got))) == ref
+                if cosine:
+                    assert round_half_up(got[3], 6).tolist() == [
+                        _scalar_round_half_up(r[3], 6) for r in ref]
+
+
+def test_cell_pairs_memory_is_bounded():
+    """One 12k-row, 64-dim cell: the untiled formulation peaks at ~2.8 GB
+    of traced memory (the n×n cosines plus the triu index arrays); the
+    tiled kernel holds O(_BLOCK²) and must stay below 256 MB."""
+    import tracemalloc
+
+    rng = np.random.RandomState(12)
+    mat = quantize_milli(rng.randn(12_000, 64) * 0.2)
+    ids = np.arange(12_000, dtype=np.int64)
+    tracemalloc.start()
+    try:
+        a, _, _ = cell_pairs(ids, mat, 0.30)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert len(a) > 0
+    assert peak < 256 << 20, f"{peak / 2**20:.0f} MB"
 
 
 def test_compression_ratio_signal_orders_text_quality():

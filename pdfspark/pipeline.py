@@ -541,10 +541,8 @@ def extract_pages_skew_aware(
         F.length("html") <= big_cutoff_bytes,
         F.pmod(F.xxhash64("url"), F.lit(nsalt)),
     ).otherwise(nsalt + F.pmod(F.xxhash64("url"), F.lit(nbig)))
-    return (
-        pdf.repartitionById(nsalt + nbig, salt.cast("int"))
-        .mapInPandas(_extract_batches, EXTRACT_SCHEMA)
-    )
+    return extract_pages(pdf.repartitionById(nsalt + nbig, salt.cast("int")),
+                         prefilter=False, resalt=False)
 
 
 # ------------------------------------------------- metrics / lineage tables
@@ -626,8 +624,8 @@ def run_pipeline(
     # extracted text + metrics shuffle on part_key for the partitioned
     # write — for crawl corpora text is a small fraction of the PDF bytes,
     # so this exchange is the cheap one.
-    filtered = filter_supported_rows(todo, modalities).select("url", "html")
-    extracted = filtered.mapInPandas(_extract_batches, EXTRACT_SCHEMA)
+    extracted = extract_pages(filter_supported_rows(todo, modalities),
+                              prefilter=False, resalt=False)
     keyed_out = extracted.withColumn(
         "part_key", F.pmod(F.xxhash64("url"), F.lit(npart)).cast("int")
     )

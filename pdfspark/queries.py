@@ -1103,6 +1103,42 @@ def _image_meta_impl(spark, sf_dir):
     return map_rows(docs, meta_row, IMAGE_HEADER_SCHEMA)
 
 
+# Benchmark excerpt sets are eval-suite-sized (10^3-10^5 spans) — a
+# corpus-scale excerpt list means the query is miswired; refuse loudly
+# (the ann_numpy_topk broadcast-cap convention) instead of a silent
+# driver OOM. 1M excerpts ≈ 80 MB broadcast, still workable.
+_EXCERPT_CAP = 1_000_000
+
+# The Spark-side corpus both excerpt decontaminations scan: every
+# non-benchmark doc plus the 80%-prefix mutants (doc_id + 1e6) that
+# carry the guaranteed contamination.
+_DECONTAM_CORPUS_SQL = (
+    "SELECT doc_id, text FROM documents WHERE doc_id % 37 <> 0 "
+    "UNION ALL "
+    "SELECT doc_id + 1000000 AS doc_id, "
+    "substr(text, 1, CAST(FLOOR(length(text)*0.8) AS INT)) AS text "
+    "FROM documents WHERE doc_id % 3 = 0"
+)
+
+
+def _bench_excerpts(spark, who: str) -> list:
+    """The bench_id-sorted (bench_id, excerpt) list of the registered
+    ``documents`` view: an 80-char window of every doc_id % 37 == 0
+    doc of at least 125 chars. One capped driver collect: past
+    _EXCERPT_CAP rows ``who`` refuses instead of broadcasting."""
+    rows = spark.sql(
+        "SELECT doc_id AS bench_id, substr(text, 21, 80) AS excerpt "
+        "FROM documents WHERE doc_id % 37 = 0 AND length(text) >= 125"
+    ).limit(_EXCERPT_CAP + 1).collect()
+    if len(rows) > _EXCERPT_CAP:
+        raise ValueError(
+            f"{who}: excerpt set exceeds the broadcast cap "
+            f"({_EXCERPT_CAP} rows); shard the benchmark set and "
+            f"compose multiple passes instead"
+        )
+    return sorted((int(r.bench_id), r.excerpt) for r in rows)
+
+
 # Exact-substring decontamination (ROADMAP r4 #7): the stricter sibling
 # of the 8-gram overlap — a document is contaminated when a benchmark
 # EXCERPT (a fixed character window of a benchmark doc) occurs in it
@@ -1151,28 +1187,10 @@ def decontaminate_exact_substring(spark, sf_dir):
     the Python pass, so the former hits-per-doc exchange is gone
     too."""
     _load(spark, sf_dir, "documents")
-    bench_rows = spark.sql(
-        "SELECT doc_id AS bench_id, substr(text, 21, 80) AS excerpt "
-        "FROM documents WHERE doc_id % 37 = 0 AND length(text) >= 125"
-    ).limit(_EXCERPT_CAP + 1).collect()
-    if len(bench_rows) > _EXCERPT_CAP:
-        raise ValueError(
-            f"decontaminate_exact_substring: excerpt set exceeds the "
-            f"broadcast cap ({_EXCERPT_CAP} rows); shard the benchmark "
-            f"set and compose multiple passes instead"
-        )
-    bench = sorted(
-        (int(r.bench_id), r.excerpt) for r in bench_rows)
-    b_bench = spark.sparkContext.broadcast(bench)
-
+    b_bench = spark.sparkContext.broadcast(
+        _bench_excerpts(spark, "decontaminate_exact_substring"))
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    docs = spark.sql(
-        "SELECT doc_id, text FROM documents WHERE doc_id % 37 <> 0 "
-        "UNION ALL "
-        "SELECT doc_id + 1000000 AS doc_id, "
-        "substr(text, 1, CAST(FLOOR(length(text)*0.8) AS INT)) AS text "
-        "FROM documents WHERE doc_id % 3 = 0"
-    ).repartition(nparts, "doc_id")
+    docs = spark.sql(_DECONTAM_CORPUS_SQL).repartition(nparts, "doc_id")
 
     def scan(batches):
         import pandas as pd
@@ -1320,13 +1338,6 @@ FROM docs d CROSS JOIN exc e
 """
 
 
-# Benchmark excerpt sets are eval-suite-sized (10^3-10^5 spans) — a
-# corpus-scale excerpt list means the query is miswired; refuse loudly
-# (the ann_numpy_topk broadcast-cap convention) instead of a silent
-# driver OOM. 1M excerpts ≈ 80 MB broadcast, still workable.
-_EXCERPT_CAP = 1_000_000
-
-
 @register("decontaminate_span_excise", oracle=_SPAN_EXCISE_DUCK_SQL)
 def decontaminate_span_excise(spark, sf_dir):
     """Benchmark decontamination by SPAN EXCISION (the removal tier
@@ -1349,29 +1360,10 @@ def decontaminate_span_excise(spark, sf_dir):
     bytes). No text ever shuffles; the only exchange is the doc_id
     repartition that widens the single-row-group scan."""
     _load(spark, sf_dir, "documents")
-    bench_rows = spark.sql(
-        "SELECT doc_id AS bench_id, substr(text, 21, 80) AS excerpt "
-        "FROM documents WHERE doc_id % 37 = 0 AND length(text) >= 125"
-    ).limit(_EXCERPT_CAP + 1).collect()
-    if len(bench_rows) > _EXCERPT_CAP:
-        raise ValueError(
-            f"decontaminate_span_excise: excerpt set exceeds the "
-            f"broadcast cap ({_EXCERPT_CAP} rows); shard the benchmark "
-            f"set and compose multiple excision passes instead"
-        )
-    excerpts = [
-        r.excerpt for r in sorted(bench_rows, key=lambda r: r.bench_id)
-    ]
-    b_exc = spark.sparkContext.broadcast(excerpts)
-
+    b_exc = spark.sparkContext.broadcast(
+        [x for _, x in _bench_excerpts(spark, "decontaminate_span_excise")])
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    docs = spark.sql(
-        "SELECT doc_id, text FROM documents WHERE doc_id % 37 <> 0 "
-        "UNION ALL "
-        "SELECT doc_id + 1000000 AS doc_id, "
-        "substr(text, 1, CAST(FLOOR(length(text)*0.8) AS INT)) AS text "
-        "FROM documents WHERE doc_id % 3 = 0"
-    ).repartition(nparts, "doc_id")
+    docs = spark.sql(_DECONTAM_CORPUS_SQL).repartition(nparts, "doc_id")
 
     def excise(batches):
         import hashlib
@@ -1788,7 +1780,7 @@ def ann_index_takedown(spark, sf_dir):
     the compliance query that finds remaining near-copies of removed
     content. Runs the REAL maintained-index surface: build_ivf_index
     (same map-side cell assignment the append stream lands),
-    subtract_ivf_tombstones (the read_ivf_index subtraction, one
+    subtract_tombstones (the read_ivf_index subtraction, one
     vec_id LeftAnti equi-join), ivf_topk_decisions (one cell
     equi-join, never all-pairs, per-query window over the bounded
     candidate set).
@@ -1800,7 +1792,7 @@ def ann_index_takedown(spark, sf_dir):
     The seed fetch is a BOUNDED driver collect (exactly 8 rows by
     construction — centroids are config-sized, never corpus-sized)."""
     from pdfspark.streaming import (build_ivf_index, ivf_topk_decisions,
-                                    subtract_ivf_tombstones)
+                                    subtract_tombstones)
 
     _load(spark, sf_dir, "embeddings")
     embs = spark.table("embeddings").select("vec_id", "embedding")
@@ -1812,8 +1804,11 @@ def ann_index_takedown(spark, sf_dir):
             "FROM embeddings WHERE vec_id < 8 ORDER BY sid"
         ).collect()
     ]
-    takedown = embs.select("vec_id").where(F.col("vec_id") % 7 == 0)
-    live = subtract_ivf_tombstones(build_ivf_index(embs, seeds), takedown)
+    # named apart from vec_id: both sides derive from embs
+    takedown = embs.select(F.col("vec_id").alias("dead_id")) \
+        .where(F.col("dead_id") % 7 == 0)
+    live = subtract_tombstones(build_ivf_index(embs, seeds), takedown,
+                               "vec_id", "dead_id")
     out = ivf_topk_decisions(
         embs.where(F.col("vec_id") % 7 == 0), live, seeds, k=2)
     return out.select(
@@ -1885,7 +1880,8 @@ def dedup_digest_takedown(spark, sf_dir):
     plus one digest self-groupBy — digest-only shuffles end to end.
     No driver collects."""
     from pdfspark.streaming import (build_digest_index,
-                                    digest_dedup_decisions)
+                                    digest_dedup_decisions,
+                                    subtract_tombstones)
 
     _load(spark, sf_dir, "documents")
     docs = spark.table("documents")
@@ -1897,8 +1893,7 @@ def dedup_digest_takedown(spark, sf_dir):
     ).select((F.col("doc_id") + 2000000).alias("doc_id"), "text")
     idx = build_digest_index(docs.select("doc_id", "text"))
     takedown = docs.select("doc_id").where(F.col("doc_id") % 6 == 0)
-    live = idx.join(
-        takedown, idx["first_doc"] == takedown["doc_id"], "left_anti")
+    live = subtract_tombstones(idx, takedown, "first_doc", "doc_id")
     return digest_dedup_decisions(b1.unionByName(b2), live).select(
         "doc_id", F.col("keep").cast("long").alias("keep"), "dup_of")
 
@@ -5452,6 +5447,7 @@ def dedup_gram_takedown(spark, sf_dir):
     rebuild shuffles once per doc_id. No driver collects."""
     from pdfspark.pipeline import _documents_repartitioned
     from pdfspark.streaming import (gram_hash_grams,
+                                    subtract_tombstones,
                                     substring_excise_against_index)
 
     _load(spark, sf_dir, "documents")
@@ -5471,9 +5467,8 @@ def dedup_gram_takedown(spark, sf_dir):
         F.min("doc_id").alias("first_doc")
     )
     takedown = docs.select("doc_id").where(F.col("doc_id") % 6 == 0)
-    live = index.join(
-        takedown, index["first_doc"] == takedown["doc_id"], "left_anti"
-    ).select("h")
+    live = subtract_tombstones(index, takedown, "first_doc", "doc_id") \
+        .select("h")
     return substring_excise_against_index(batch, live, _SUBSTR_SPANS_N)
 
 

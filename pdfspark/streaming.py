@@ -15,13 +15,25 @@ from __future__ import annotations
 
 import functools
 import os
+import re
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pdfspark.pipeline import (EXTRACT_SCHEMA, PAGES_SCHEMA, _extract_batches,
-                               filter_pdf_rows, map_rows)
+from pdfspark.pipeline import PAGES_SCHEMA, extract_pages, map_rows
 from pdfspark.textops import minhash_band_sigs
+
+
+_DOCS_SCHEMA = "doc_id long, text string"
+
+
+def _read_parquet_stream(spark: SparkSession, input_dir: str, schema: str,
+                         max_files_per_trigger: int = 1) -> DataFrame:
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+    )
 
 
 def read_pages_stream(
@@ -29,18 +41,15 @@ def read_pages_stream(
     input_dir: str,
     max_files_per_trigger: int = 4,
 ) -> DataFrame:
-    return (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    return _read_parquet_stream(spark, input_dir, PAGES_SCHEMA,
+                                max_files_per_trigger)
 
 
 def extract_stream(pages: DataFrame) -> DataFrame:
-    """Same kernel, streaming source: filter → mapInPandas."""
-    return filter_pdf_rows(pages).select("url", "html").mapInPandas(
-        _extract_batches, EXTRACT_SCHEMA
-    )
+    """Same kernel, streaming source: the batch extract_pages stage
+    without its salting shuffle (a stream's micro-batches are already
+    bounded by maxFilesPerTrigger)."""
+    return extract_pages(pages, resalt=False)
 
 
 def windowed_metrics(pages: DataFrame) -> DataFrame:
@@ -103,6 +112,27 @@ def stateful_url_counts(extracted: DataFrame) -> DataFrame:
     )
 
 
+def _await_drain(writer, checkpoint_dir: str,
+                 timeout_s: Optional[int]) -> bool:
+    """The one drain shell under both sinks: start ``writer`` with a
+    checkpointed, exactly-once Trigger.AvailableNow query, wait up to
+    ``timeout_s`` (None = until done), and stop it on exit. True iff
+    the drain COMPLETED; False leaves the remainder pending in the
+    checkpoint for the next call."""
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        finished = q.awaitTermination(timeout_s)
+    finally:
+        q.stop()
+    # without a timeout, awaitTermination returns None once the query
+    # has terminated (a failed query raises instead)
+    return timeout_s is None or bool(finished)
+
+
 def _drain_to_parquet(
     df: DataFrame,
     output_dir: str,
@@ -110,24 +140,15 @@ def _drain_to_parquet(
     timeout_s: Optional[int],
     output_mode: Optional[str] = None,
 ) -> bool:
-    """Shared drain contract for every run_*_once entry point: write the
-    streaming DataFrame to an exactly-once parquet sink with
-    Trigger.AvailableNow, wait up to timeout_s, stop if still active.
-    True iff the drain COMPLETED; False leaves the remainder pending in
-    the checkpoint for the next call."""
+    """File-sink drain for every run_*_once entry point whose output is
+    the stream itself: Spark's transactional parquet sink (the
+    _spark_metadata manifest keeps replays after partial writes
+    exactly-once without a batch_id-keyed subpath)."""
     w = df.writeStream.format("parquet")
     if output_mode is not None:
         w = w.outputMode(output_mode)
-    q = (
-        w.option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-    return bool(finished)
+    return _await_drain(w.option("path", output_dir), checkpoint_dir,
+                        timeout_s)
 
 
 def run_stream_once(
@@ -466,29 +487,15 @@ def _drain_foreachbatch_once(
     checkpoint_dir: str,
     timeout_s: Optional[int],
 ) -> bool:
-    """Shared availableNow drain shell for every foreachBatch-sinked
-    maintenance/decision stream (review follow-up — ten verbatim
-    copies folded into one): one-file micro-batches from a parquet
-    directory, checkpointed source offsets, stream stopped on exit.
+    """foreachBatch drain for every maintenance/decision stream:
+    one-file micro-batches from a parquet directory into ``on_batch``.
     Callers own the per-batch body (each body writes its own
     exactly-once ``batch_id=N`` subpath) and any cached-state
     cleanup, so a fix to the drain contract lands everywhere at
     once."""
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    q = (
-        src.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        return q.awaitTermination(timeout_s)
-    finally:
-        q.stop()
+    src = _read_parquet_stream(spark, input_dir, schema)
+    return _await_drain(src.writeStream.foreachBatch(on_batch),
+                        checkpoint_dir, timeout_s)
 
 
 def run_minhash_stream_dedup_once(
@@ -529,7 +536,7 @@ def run_minhash_stream_dedup_once(
 
     try:
         return _drain_foreachbatch_once(
-            spark, input_dir, "doc_id long, text string", decide,
+            spark, input_dir, _DOCS_SCHEMA, decide,
             checkpoint_dir, timeout_s)
     finally:
         hist_sized.unpersist(blocking=False)
@@ -701,25 +708,154 @@ def run_curation_stream_once(
     _spark_metadata manifest, like the standalone packer runner)."""
     hist = spark.read.parquet(index_dir).persist()
     hist.count()  # materialize before the first batch
-    docs = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    q = (
-        curation_stream(docs, hist, budget=budget).writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    docs = _read_parquet_stream(spark, input_dir, _DOCS_SCHEMA)
     try:
-        return q.awaitTermination(timeout_s)
+        return _drain_to_parquet(curation_stream(docs, hist, budget=budget),
+                                 output_dir, checkpoint_dir, timeout_s,
+                                 output_mode="append")
     finally:
-        q.stop()
         hist.unpersist(blocking=False)
+
+
+# ------------------------------------------ maintained-index lifecycle
+# The four maintained indexes (minhash band, keep-first gram, IVF/ANN,
+# exact-dedup digest) share ONE lifecycle, spelled once below; each
+# family's public functions bind only their schema, keys and
+# bucketing. On disk an index generation is ``base/`` (the last
+# compaction) plus ``batch_id=N`` increments (under ``delta/``, or the
+# index root for gram) plus ``tombstones/batch_id=N`` takedowns.
+
+def _run_delta_append_stream_once(
+    spark: SparkSession,
+    input_dir: str,
+    index_dir: str,
+    checkpoint_dir: str,
+    schema: str,
+    build,
+    timeout_s: Optional[int],
+    into: str = "delta",
+) -> bool:
+    """Drain ``input_dir`` and land each micro-batch's ``build(batch)``
+    rows at ``index_dir/<into>/batch_id=N`` with mode("overwrite") —
+    ``into`` is "delta" for appends, "tombstones" for takedowns.
+
+    Exactly-once by subpath + overwrite (ADVICE r4 #2): checkpointed
+    source offsets make a replayed batch deterministic, and it
+    overwrites its own partial subpath instead of appending duplicate
+    rows (a blind append sink would only be at-least-once). Index rows
+    are immutable once written: a takedown never rewrites them, readers
+    subtract it and compaction makes the subtraction physical.
+
+    Cadence: a FRESH drain restarts batch ids at 0, so its increments
+    must land in the post-compaction generation dir — two fresh drains
+    into one dir would overwrite each other's ``batch_id=N``. Land
+    tombstones BETWEEN decision drains: tombstone reads are not
+    batch-gated (a takedown applies to all history the moment it
+    lands), so one landing mid-drain would change what a replayed
+    batch decides."""
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        build(batch_df).write.mode("overwrite").parquet(
+            f"{index_dir}/{into}/batch_id={batch_id}")
+
+    return _drain_foreachbatch_once(spark, input_dir, schema, write,
+                                    checkpoint_dir, timeout_s)
+
+
+def _run_tombstone_stream_once(spark: SparkSession, dels_dir: str,
+                               index_dir: str, checkpoint_dir: str,
+                               key_col: str,
+                               timeout_s: Optional[int]) -> bool:
+    """Delete side of every family: a single-key takedown stream →
+    distinct tombstone rows. The per-family wrappers own what a
+    tombstone means (a bare id vs keeper provenance)."""
+    return _run_delta_append_stream_once(
+        spark, dels_dir, index_dir, checkpoint_dir, f"{key_col} long",
+        lambda b: b.select(key_col).distinct(), timeout_s,
+        into="tombstones")
+
+
+def subtract_tombstones(idx: DataFrame, dels: DataFrame, key: str,
+                        dead_col: str) -> DataFrame:
+    """Drop every ``idx`` row whose ``key`` appears in ``dels[dead_col]``:
+    ONE LeftAnti EQUI-join, the tombstone side tiny and broadcast in
+    practice, so the corpus-sized index never shuffles on the read
+    path. No distinct() on the tombstone side — a left-anti join
+    ignores duplicate right keys. Shared by every live view and the
+    batch takedown queries (queries.ann_index_takedown,
+    dedup_digest_takedown, dedup_gram_takedown) so the faces can never
+    fork. A ``dels`` derived from the same table as ``idx`` must name
+    its column apart from ``key``, or both sides resolve to one
+    attribute."""
+    return idx.join(dels, idx[key] == dels[dead_col], "left_anti")
+
+
+def _read_live_index(spark: SparkSession, index_dir: str, schema: str,
+                     key: str, dead_col: str, increments: str = "delta",
+                     before_batch: Optional[int] = None) -> DataFrame:
+    """Live view of a maintained index: ``base`` plus the
+    ``index_dir/<increments>/batch_id=k`` increments (k < before_batch
+    when given) as ONE multi-path parquet scan, minus the rows whose
+    ``key`` is tombstoned (``tombstones/*``, column ``dead_col``).
+    Returns the ``schema`` columns; an index with nothing to read is
+    an empty frame of that schema, so callers join against it without
+    special-casing. The base stays bucketed from the last compaction
+    and increments are small, so the tombstone anti-join is the only
+    join on the read path and no full-index aggregation runs at read
+    cadence (that happens in compaction)."""
+    paths = []
+    base = os.path.join(index_dir, "base")
+    if os.path.isdir(base):
+        paths.append(base)
+    inc = os.path.join(index_dir, increments)
+    for d in sorted(os.listdir(inc)) if os.path.isdir(inc) else []:
+        m = re.fullmatch(r"batch_id=(\d+)", d)
+        if m and (before_batch is None or int(m.group(1)) < before_batch):
+            paths.append(os.path.join(inc, d))
+    if not paths:
+        return spark.createDataFrame([], schema)
+    idx = spark.read.parquet(*paths).select(
+        *[f.split()[0] for f in schema.split(",")])
+    tomb = os.path.join(index_dir, "tombstones")
+    if os.path.isdir(tomb) and os.listdir(tomb):
+        idx = subtract_tombstones(idx, spark.read.parquet(tomb), key,
+                                  dead_col)
+    return idx
+
+
+def _shuffle_nparts(spark) -> int:
+    """spark.sql.shuffle.partitions as an int, degrading to the
+    cluster default when the conf is non-numeric (e.g. 'auto' under
+    some AQE setups) — compaction sizing must never raise on a conf
+    string it doesn't control."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (ValueError, TypeError):
+        return spark.sparkContext.defaultParallelism
+
+
+def _write_generation(spark: SparkSession, live: DataFrame, out_dir: str,
+                      nparts: Optional[int], *bucket: str) -> int:
+    """The compaction write: fold a live view (base ∪ increments −
+    tombstones) into a fresh base generation at ``out_dir/base``,
+    repartitioned by ``bucket`` columns when given, and return its row
+    count. Tombstone subtraction turns physical and ``out_dir`` starts
+    with no increments and no tombstones subdir, so the read-side
+    anti-join cost resets to zero.
+
+    Never compacts in place: ``out_dir`` is a NEW generation dir, and
+    the caller switches its readers (and the next drain's index_dir)
+    to it only after success — the old generation stays readable until
+    then, so a reader mid-scan is never torn. Run BETWEEN drains:
+    compacting mid-drain would fold a half-written increment into
+    base. Why compaction exists: every micro-batch adds an increment
+    subdir and every takedown a tombstone file; at crawl cadence the
+    listing cost, not the data volume, is what grows without bound."""
+    if bucket:
+        live = live.repartition(nparts or _shuffle_nparts(spark), *bucket)
+    out = os.path.join(out_dir, "base")
+    live.write.mode("overwrite").parquet(out)
+    return spark.read.parquet(out).count()
 
 
 # --------------------------------------- digest-index maintenance (late r8)
@@ -754,23 +890,13 @@ def run_digest_index_append_stream_once(
     timeout_s: Optional[int] = 120,
 ) -> bool:
     """Digest-index maintenance, append side: ADMITTED (doc_id, text)
-    docs → (digest, first_doc) deltas under
-    ``index_dir/delta/batch_id=N``, exactly-once by the
-    subpath+overwrite contract. Admitted docs passed the dedup
+    docs → (digest, first_doc) deltas. Admitted docs passed the dedup
     decision, so their digests are new to history by construction —
     each batch contributes its own keep-first rows (min doc_id per
-    digest handles a within-batch tie). Same cross-drain cadence as
-    the other families: fresh drains restart batch ids at 0 and must
-    target the post-compaction generation dir."""
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        build_digest_index(batch_df).write.mode("overwrite").parquet(
-            f"{index_dir}/delta/batch_id={batch_id}"
-        )
-
-    return _drain_foreachbatch_once(
-        spark, input_dir, "doc_id long, text string", append,
-        checkpoint_dir, timeout_s)
+    digest handles a within-batch tie)."""
+    return _run_delta_append_stream_once(
+        spark, input_dir, index_dir, checkpoint_dir, _DOCS_SCHEMA,
+        build_digest_index, timeout_s)
 
 
 def run_digest_tombstone_stream_once(
@@ -785,56 +911,30 @@ def run_digest_tombstone_stream_once(
     gram family, subtraction is by KEEPER PROVENANCE (rows whose
     first_doc is tombstoned), not by digest — so a kept recrawl of
     taken-down content re-enters the index as its own keeper without
-    waiting for compaction. Land tombstones between decision drains
-    (tombstone reads are not batch-gated)."""
+    waiting for compaction."""
     return _run_tombstone_stream_once(
         spark, dels_dir, index_dir, checkpoint_dir, "doc_id", timeout_s)
 
 
 def read_digest_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Live view of a maintained digest index: ``base`` ∪ ``delta/*``
-    minus rows whose keeper is tombstoned — (digest, first_doc) rows.
+    """Live view of a maintained digest index: (digest, first_doc)
+    rows minus every row whose KEEPER is tombstoned.
     curation_stream's hist_digests input is
     ``read_digest_index(...).select(F.col("digest"))`` (it only needs
-    membership). One first_doc LeftAnti equi-join on the read path,
-    tombstones broadcast in practice."""
-    parts = []
-    base = os.path.join(index_dir, "base")
-    delta = os.path.join(index_dir, "delta")
-    if os.path.isdir(base):
-        parts.append(spark.read.parquet(base))
-    if os.path.isdir(delta) and os.listdir(delta):
-        parts.append(spark.read.parquet(delta)
-                     .select("digest", "first_doc"))
-    if not parts:
-        return spark.createDataFrame([], _DIGEST_INDEX_SCHEMA)
-    idx = parts[0].select("digest", "first_doc")
-    for p in parts[1:]:
-        idx = idx.unionByName(p)
-    tomb = os.path.join(index_dir, "tombstones")
-    if os.path.isdir(tomb) and os.listdir(tomb):
-        dead = spark.read.parquet(tomb).select(
-            F.col("doc_id").alias("dead_doc")).distinct()
-        idx = idx.join(
-            dead, idx["first_doc"] == dead["dead_doc"], "left_anti")
-    return idx
+    membership)."""
+    return _read_live_index(spark, index_dir, _DIGEST_INDEX_SCHEMA,
+                            "first_doc", "doc_id")
 
 
 def compact_digest_index(spark: SparkSession, index_dir: str,
                          out_dir: str, nparts: Optional[int] = None) -> int:
-    """Fold base ∪ deltas − tombstones into a fresh digest-bucketed
-    base generation at ``out_dir/base`` and return its row count.
-    Output rows are distinct (digest, first_doc) ROWS, not distinct
-    digests — a digest can legally hold two live keepers only via
-    replay edges, and distinct() keeps the semantics (same rule as
-    compact_gram_index). New generation starts with no tombstones
-    subdir; never compacts in place."""
-    live = read_digest_index(spark, index_dir).distinct()
-    nparts = nparts or _shuffle_nparts(spark)
-    live.repartition(nparts, "digest").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "base")
-    )
-    return spark.read.parquet(os.path.join(out_dir, "base")).count()
+    """Compact into a digest-bucketed base generation of distinct
+    (digest, first_doc) ROWS, not distinct digests — a digest can
+    legally hold two live keepers only via replay edges, and distinct()
+    keeps the semantics (same rule as compact_gram_index)."""
+    return _write_generation(
+        spark, read_digest_index(spark, index_dir).distinct(), out_dir,
+        nparts, "digest")
 
 
 def digest_dedup_decisions(batch_docs: DataFrame,
@@ -957,24 +1057,9 @@ def run_shard_pack_stream_once(
     into a parquet sink. The file sink is Spark's transactional
     streaming sink (_spark_metadata manifest), so replays after partial
     writes stay exactly-once without a batch_id-keyed subpath."""
-    docs = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_dir)
-    )
-    q = (
-        shard_pack_stream(docs).writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        return q.awaitTermination(timeout_s)
-    finally:
-        q.stop()
+    docs = _read_parquet_stream(spark, input_dir, _DOCS_SCHEMA)
+    return _drain_to_parquet(shard_pack_stream(docs), output_dir,
+                             checkpoint_dir, timeout_s, output_mode="append")
 
 
 def shard_pack_stream_watermarked(docs: DataFrame,
@@ -1135,12 +1220,10 @@ def ivf_assign_stream(embs: DataFrame, seeds) -> DataFrame:
 # ------------------------------------------- IVF index maintenance (r8)
 # The third index family (after the minhash band index and the
 # keep-first gram index): a maintained ANN index over a growing
-# embedding corpus. Same lifecycle grammar — append/tombstone streams
-# land immutable exactly-once subpaths, a live view composes
-# base ∪ delta − tombstones, generational compaction folds and
-# re-buckets. Rows are (vec_id, cell, qv): the quantized vector is
-# STORED in the index so per-cell search never joins back to the raw
-# corpus.
+# embedding corpus, on the shared index lifecycle (compaction
+# re-buckets by cell). Rows are (vec_id, cell, qv): the quantized
+# vector is STORED in the index so per-cell search never joins back
+# to the raw corpus.
 
 _IVF_INDEX_SCHEMA = ("vec_id long, cell long, qv array<long>")
 
@@ -1165,51 +1248,13 @@ def run_ivf_index_append_stream_once(
     timeout_s: Optional[int] = 120,
 ) -> bool:
     """ANN-index maintenance, append side: admitted (vec_id,
-    embedding) rows → (vec_id, cell, qv) deltas under
-    ``index_dir/delta/batch_id=N``, exactly-once by the
-    subpath+overwrite contract. Assignment is map-side per batch —
-    the stream carries no state and no shuffle; compaction (not the
-    crawl) pays the cell re-bucketing. Cross-drain cadence (same as
-    the band and gram families): a FRESH drain restarts batch ids at
-    0, so its deltas must land in the post-compaction generation dir
-    (pointer swap) — two fresh drains into the same dir would
-    overwrite each other's batch_id=N subpaths."""
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        build_ivf_index(batch_df, seeds).write.mode("overwrite").parquet(
-            f"{index_dir}/delta/batch_id={batch_id}"
-        )
-
-    return _drain_foreachbatch_once(
-        spark, input_dir, "vec_id long, embedding array<float>", append,
-        checkpoint_dir, timeout_s)
-
-
-def _run_tombstone_stream_once(
-    spark: SparkSession,
-    dels_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    key_col: str,
-    timeout_s: Optional[int],
-) -> bool:
-    """Shared delete-side scaffold for all three index families: drain
-    a single-key takedown stream into distinct tombstone rows under
-    ``index_dir/tombstones/batch_id=N``, exactly-once by the
-    subpath+overwrite contract. The per-family wrappers own the
-    SEMANTIC docstrings (what a tombstone means differs per family —
-    hist_id rows vs keeper provenance vs bare vector identity); the
-    lifecycle mechanics live here exactly once so a fix to the shared
-    contract can never fork across families."""
-
-    def entomb(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(key_col).distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/tombstones/batch_id={batch_id}")
-
-    return _drain_foreachbatch_once(
-        spark, dels_dir, f"{key_col} long", entomb,
-        checkpoint_dir, timeout_s)
+    embedding) rows → (vec_id, cell, qv) deltas. Assignment is
+    map-side per batch — the stream carries no state and no shuffle;
+    compaction (not the crawl) pays the cell re-bucketing."""
+    return _run_delta_append_stream_once(
+        spark, input_dir, index_dir, checkpoint_dir,
+        "vec_id long, embedding array<float>",
+        functools.partial(build_ivf_index, seeds=seeds), timeout_s)
 
 
 def run_ivf_tombstone_stream_once(
@@ -1219,14 +1264,10 @@ def run_ivf_tombstone_stream_once(
     checkpoint_dir: str,
     timeout_s: Optional[int] = 120,
 ) -> bool:
-    """ANN-index maintenance, delete side: a (vec_id) takedown stream
-    → tombstone rows under ``index_dir/tombstones/batch_id=N``. Index
-    rows are immutable; read_ivf_index subtracts tombstoned vec_ids
-    and compaction makes the subtraction physical. A taken-down
-    vector must stop being retrievable the moment its tombstone lands
-    (similarity search over removed content is itself a takedown
-    violation). Same cadence contract as the other families: land
-    tombstones between search/append drains.
+    """ANN-index maintenance, delete side: (vec_id) takedowns →
+    tombstones. A taken-down vector must stop being retrievable the
+    moment its tombstone lands (similarity search over removed content
+    is itself a takedown violation).
 
     PINNED POLICY — tombstones key on the BARE vec_id, no provenance
     (unlike the gram family's keeper rows): the subtraction matches
@@ -1243,55 +1284,20 @@ def run_ivf_tombstone_stream_once(
 
 
 def read_ivf_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Live view of a maintained IVF index: ``base`` ∪ ``delta/*``
-    minus tombstoned vec_ids — (vec_id, cell, qv) rows, the exact
-    shape ivf_topk_decisions consumes. The subtraction is one
-    vec_id LeftAnti EQUI-join (tombstones broadcast in practice);
-    the base stays cell-bucketed from the last compaction."""
-    parts = []
-    base = os.path.join(index_dir, "base")
-    delta = os.path.join(index_dir, "delta")
-    if os.path.isdir(base):
-        parts.append(spark.read.parquet(base))
-    if os.path.isdir(delta) and os.listdir(delta):
-        parts.append(spark.read.parquet(delta)
-                     .select("vec_id", "cell", "qv"))
-    if not parts:
-        return spark.createDataFrame([], _IVF_INDEX_SCHEMA)
-    idx = parts[0].select("vec_id", "cell", "qv")
-    for p in parts[1:]:
-        idx = idx.unionByName(p)
-    tomb = os.path.join(index_dir, "tombstones")
-    if os.path.isdir(tomb) and os.listdir(tomb):
-        idx = subtract_ivf_tombstones(idx, spark.read.parquet(tomb))
-    return idx
-
-
-def subtract_ivf_tombstones(idx: DataFrame, dels: DataFrame) -> DataFrame:
-    """Takedown subtraction shared by read_ivf_index (maintained-index
-    face) and queries.ann_index_takedown (batch face): drop every
-    index row whose vec_id appears in the (vec_id) takedown set — one
-    LeftAnti EQUI-join, tombstone side tiny and broadcast in practice.
-    ONE implementation so the two faces can never fork."""
-    dead = dels.select(F.col("vec_id").alias("dead_id")).distinct()
-    return idx.join(dead, idx["vec_id"] == dead["dead_id"], "left_anti")
+    """Live view of a maintained IVF index: (vec_id, cell, qv) rows
+    minus tombstoned vec_ids, the exact shape ivf_topk_decisions
+    consumes."""
+    return _read_live_index(spark, index_dir, _IVF_INDEX_SCHEMA, "vec_id",
+                            "vec_id")
 
 
 def compact_ivf_index(spark: SparkSession, index_dir: str,
                       out_dir: str, nparts: Optional[int] = None) -> int:
-    """Fold base ∪ deltas − tombstones into a fresh cell-bucketed
-    base generation at ``out_dir/base`` and return its row count.
-    Repartitioning by cell co-locates per-cell search after
-    compaction (the read path itself never shuffles the index);
-    tombstone subtraction turns physical and ``out_dir`` starts with
-    no tombstones subdir. Never compacts in place — pointer swap
-    after success, same as the other two families."""
-    live = read_ivf_index(spark, index_dir)
-    nparts = nparts or _shuffle_nparts(spark)
-    live.repartition(nparts, "cell").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "base")
-    )
-    return spark.read.parquet(os.path.join(out_dir, "base")).count()
+    """Compact into a cell-bucketed base generation: repartitioning by
+    cell co-locates per-cell search after compaction (the read path
+    itself never shuffles the index)."""
+    return _write_generation(spark, read_ivf_index(spark, index_dir),
+                             out_dir, nparts, "cell")
 
 
 def _ivf_decisions_cell(k, qpdf, lpdf):
@@ -1361,19 +1367,13 @@ def compact_ivf_index_recentered(
     generation with the returned seeds (cell ids keep their sids but
     their geometry moved). Counters centroid drift after many append
     drains without touching the crawl path: assignment cost is paid
-    here, at compaction cadence, never per-batch. Tombstones turn
-    physical exactly as in compact_ivf_index; ``out_dir`` starts with
-    no tombstones subdir."""
+    here, at compaction cadence, never per-batch."""
     live = read_ivf_index(spark, index_dir)
     new_seeds = ivf_recenter_seeds(live, seeds)
     rebucketed = live.select("vec_id", "qv").select(
         "vec_id", ivf_assign_expr(new_seeds), "qv")
-    nparts = nparts or _shuffle_nparts(spark)
-    rebucketed.repartition(nparts, "cell").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "base")
-    )
-    n = spark.read.parquet(os.path.join(out_dir, "base")).count()
-    return new_seeds, n
+    return new_seeds, _write_generation(spark, rebucketed, out_dir, nparts,
+                                        "cell")
 
 
 def ivf_recenter_seeds(live_index: DataFrame, seeds) -> list:
@@ -1644,7 +1644,7 @@ def run_substring_keepfirst_stream_once(
             hist.unpersist(blocking=False)
 
     return _drain_foreachbatch_once(
-        spark, input_dir, "doc_id long, text string", excise,
+        spark, input_dir, _DOCS_SCHEMA, excise,
         checkpoint_dir, timeout_s)
 
 
@@ -1701,7 +1701,7 @@ def run_substring_excise_stream_once(
 
     try:
         return _drain_foreachbatch_once(
-            spark, input_dir, "doc_id long, text string", excise,
+            spark, input_dir, _DOCS_SCHEMA, excise,
             checkpoint_dir, timeout_s)
     finally:
         index.unpersist(blocking=False)
@@ -1717,31 +1717,12 @@ def run_band_index_append_stream_once(
     timeout_s: Optional[int] = 120,
 ) -> bool:
     """Index-maintenance stream, append side: kept (doc_id, text) docs
-    → band-row deltas under ``index_dir/delta/batch_id=N``.
-
-    Production contract: the minhash band index is not static — every
-    admitted crawl increment must become history for the increments
-    after it.  This stream turns each micro-batch of kept docs into
-    (hist_id, band, sig) rows via the SAME Arrow kernel as
-    build_band_index, landing them exactly-once (batch_id=N subpath +
-    overwrite, ADVICE r4 #2).  read_band_index() composes base ∪
-    deltas − tombstones into the live index; compact_band_index()
-    folds the accumulated deltas back into a bucketed base so the
-    delta file count — the NameNode/listing pressure at 100 TB — stays
-    bounded by the compaction cadence, not the crawl cadence."""
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        bands = map_rows(
-            batch_df.select("doc_id", "text"), _plain_band_rows,
-            _STREAM_BANDS_SCHEMA,
-        ).withColumnRenamed("doc_id", "hist_id")
-        bands.write.mode("overwrite").parquet(
-            f"{index_dir}/delta/batch_id={batch_id}"
-        )
-
-    return _drain_foreachbatch_once(
-        spark, input_dir, "doc_id long, text string", append,
-        checkpoint_dir, timeout_s)
+    → (hist_id, band, sig) deltas via build_band_index. The minhash
+    band index is not static — every admitted crawl increment must
+    become history for the increments after it."""
+    return _run_delta_append_stream_once(
+        spark, input_dir, index_dir, checkpoint_dir, _DOCS_SCHEMA,
+        build_band_index, timeout_s)
 
 
 def run_band_tombstone_stream_once(
@@ -1751,88 +1732,31 @@ def run_band_tombstone_stream_once(
     checkpoint_dir: str,
     timeout_s: Optional[int] = 120,
 ) -> bool:
-    """Index-maintenance stream, delete side: a (hist_id) deletions
-    stream (takedowns, recrawl invalidations) → tombstone rows under
-    ``index_dir/tombstones/batch_id=N``, exactly-once by the same
-    subpath+overwrite contract.  Tombstones never rewrite the index in
-    place — band rows are immutable once written; readers subtract
-    tombstoned hist_ids (read_band_index) and compaction makes the
-    subtraction physical.  A doc must stop matching the moment its
-    tombstone lands: otherwise a fresh crawl of a taken-down page
-    would be dropped as a dup of history that no longer exists.
-    Same cadence contract as the gram family: land tombstones
-    between decision drains — tombstone reads are not k<N-gated, so
-    a mid-drain takedown changes what a replayed batch decides.
-    Like the IVF family, tombstones key on the bare hist_id: a
-    re-admission of a taken-down id is effective only after the
-    compaction that folds its tombstone away."""
+    """Index-maintenance stream, delete side: (hist_id) deletions
+    (takedowns, recrawl invalidations) → tombstones. A doc must stop
+    matching the moment its tombstone lands: otherwise a fresh crawl
+    of a taken-down page would be dropped as a dup of history that no
+    longer exists. Like the IVF family, tombstones key on the bare
+    hist_id: a re-admission of a taken-down id is effective only after
+    the compaction that folds its tombstone away."""
     return _run_tombstone_stream_once(
         spark, dels_dir, index_dir, checkpoint_dir, "hist_id", timeout_s)
 
 
 def read_band_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Live view of a maintained band index: ``base`` ∪ ``delta/*``
-    minus tombstoned hist_ids.  (band, sig, hist_id) rows, the exact
-    shape minhash_dedup_decisions consumes.
-
-    Scale shape: the tombstone subtraction is a LeftAnti equi-join on
-    hist_id — tombstones are a tiny fraction of the corpus, so AQE
-    broadcasts them in practice; the base stays bucketed from the last
-    compaction and deltas are small, so no other shuffle exists on the
-    read path."""
-    parts = []
-    base = os.path.join(index_dir, "base")
-    delta = os.path.join(index_dir, "delta")
-    if os.path.isdir(base):
-        parts.append(spark.read.parquet(base))
-    if os.path.isdir(delta) and os.listdir(delta):
-        parts.append(spark.read.parquet(delta).select("hist_id", "band",
-                                                      "sig"))
-    if not parts:
-        return spark.createDataFrame([], _BAND_INDEX_SCHEMA)
-    idx = parts[0]
-    for p in parts[1:]:
-        idx = idx.unionByName(p)
-    idx = idx.select("hist_id", "band", "sig")
-    tomb = os.path.join(index_dir, "tombstones")
-    if os.path.isdir(tomb) and os.listdir(tomb):
-        dels = spark.read.parquet(tomb).select("hist_id").distinct()
-        idx = idx.join(dels, "hist_id", "left_anti")
-    return idx
-
-
-def _shuffle_nparts(spark) -> int:
-    """spark.sql.shuffle.partitions as an int, degrading to the
-    cluster default when the conf is non-numeric (e.g. 'auto' under
-    some AQE setups) — compaction sizing must never raise on a conf
-    string it doesn't control."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (ValueError, TypeError):
-        return spark.sparkContext.defaultParallelism
+    """Live view of a maintained band index: (hist_id, band, sig) rows
+    minus tombstoned hist_ids, the exact shape minhash_dedup_decisions
+    consumes."""
+    return _read_live_index(spark, index_dir, _BAND_INDEX_SCHEMA,
+                            "hist_id", "hist_id")
 
 
 def compact_band_index(spark: SparkSession, index_dir: str,
                        out_dir: str, nparts: Optional[int] = None) -> int:
-    """Fold base ∪ deltas − tombstones into a fresh base generation at
-    ``out_dir/base`` and return its row count.  After a successful
-    compaction the caller swaps its index pointer to ``out_dir`` (the
-    old generation stays readable until then — compaction never
-    mutates in place, so a reader mid-scan is never torn).
-
-    Why it exists: every micro-batch adds a delta subdir and every
-    takedown a tombstone file; at crawl cadence that is thousands of
-    small files per day — the listing cost, not the data volume, is
-    what degrades.  Compaction repartitions by (band, sig) so
-    post-compaction collision joins co-locate bucket-wise, and makes
-    tombstone subtraction physical so the anti-join cost resets to
-    zero."""
-    live = read_band_index(spark, index_dir)
-    nparts = nparts or _shuffle_nparts(spark)
-    live.repartition(nparts, "band", "sig").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "base"))
-    return spark.read.parquet(os.path.join(out_dir, "base")).count()
+    """Compact into a base generation repartitioned by (band, sig), so
+    post-compaction collision joins co-locate bucket-wise."""
+    return _write_generation(spark, read_band_index(spark, index_dir),
+                             out_dir, nparts, "band", "sig")
 
 
 _GRAM_INDEX_SCHEMA = "h string, first_doc long"
@@ -1846,24 +1770,16 @@ def run_gram_tombstone_stream_once(
     timeout_s: Optional[int] = 120,
 ) -> bool:
     """Gram-index maintenance, delete side (r8, VERDICT r7 missing
-    #1): a (doc_id) takedown stream → tombstone rows under
-    ``index_dir/tombstones/batch_id=N``, exactly-once by the same
-    subpath+overwrite contract as the band-index tombstones.  Index
-    rows are immutable; read_gram_index drops every row whose
-    provenance doc is tombstoned and compact_gram_index makes the
-    subtraction physical.  Why keeper-level is exact: keep-first
-    excised every non-keeper copy from the corpus text, so the keeper
-    is the ONLY live occurrence — once it is taken down the gram no
-    longer exists in the corpus and a fresh crawl of that content
-    must be kept, not excised.
+    #1): (doc_id) takedowns → tombstones. Why keeper-level is exact:
+    keep-first excised every non-keeper copy from the corpus text, so
+    the keeper is the ONLY live occurrence — once it is taken down the
+    gram no longer exists in the corpus and a fresh crawl of that
+    content must be kept, not excised.
 
-    Cadence contract: run takedowns BETWEEN keep-first drains (same
-    rule as compaction).  Tombstone reads are deliberately NOT
-    k<N-gated (a takedown must apply to ALL history the moment it
-    lands), so a tombstone landing mid-drain would make a replayed
-    batch excise less than its first attempt — the batch_id=N
-    overwrite keeps the sink consistent, but drain==batch holds only
-    when the tombstone set is fixed for the whole drain.
+    Cadence: drain==batch holds only when the tombstone set is fixed
+    for the whole keep-first drain (a replayed batch would otherwise
+    excise less than its first attempt; the batch_id=N overwrite keeps
+    the sink consistent either way).
 
     Unlike the bare-id band/IVF subtraction, gram tombstones kill
     only rows whose PROVENANCE doc is the taken-down id — a kept
@@ -1875,76 +1791,35 @@ def run_gram_tombstone_stream_once(
 
 def read_gram_index(spark: SparkSession, index_dir: str,
                     before_batch: Optional[int] = None) -> DataFrame:
-    """Live view of a maintained keep-first gram index: ``base`` ∪
-    ``batch_id=k`` increments (k < before_batch when draining — the
-    replay-safety rule) minus every row whose provenance doc is
-    tombstoned.  Returns (h, first_doc) rows; excision callers
-    select("h") and join.
+    """Live view of a maintained keep-first gram index: ``base`` plus
+    the ``batch_id=k`` increments at the index root (k < before_batch
+    when draining — the replay-safety rule) minus every row whose
+    provenance doc is tombstoned. Returns (h, first_doc) rows;
+    excision callers select("h") and join.
 
     Live-provenance semantics: a row means "doc first_doc is the
     keeper whose admission made this digest history" (the write side
     adds a digest only at the first batch where live history lacked
     it), so row-level tombstone subtraction is exact — a digest keeps
     excising while its keeper is live and stops the moment the keeper
-    is taken down.  A recrawl kept after a takedown writes a fresh
+    is taken down. A recrawl kept after a takedown writes a fresh
     row and the digest becomes live history again (its new keeper);
     excised later copies never added rows, so they can't
-    ghost-resurrect a digest after its keeper's takedown.
-
-    100-TB shape: the corpus-sized index side never shuffles on this
-    path — the subtraction is one left-anti EQUI-join against the
-    tombstone list (a tiny fraction of the corpus, broadcast in
-    practice).  The full-index distinct happens only in
-    compact_gram_index, at compaction cadence."""
-    import re as _re
-
-    subs = []
-    if os.path.isdir(index_dir):
-        base = os.path.join(index_dir, "base")
-        if os.path.isdir(base):
-            subs.append(base)
-        for d in sorted(os.listdir(index_dir)):
-            m = _re.fullmatch(r"batch_id=(\d+)", d)
-            if m and (before_batch is None or int(m.group(1)) < before_batch):
-                subs.append(os.path.join(index_dir, d))
-    if not subs:
-        return spark.createDataFrame([], _GRAM_INDEX_SCHEMA)
-    idx = spark.read.parquet(*subs).select("h", "first_doc")
-    tomb = os.path.join(index_dir, "tombstones")
-    if os.path.isdir(tomb) and os.listdir(tomb):
-        dels = spark.read.parquet(tomb).select("doc_id").distinct()
-        idx = idx.join(
-            dels, idx["first_doc"] == dels["doc_id"], "left_anti"
-        )
-    return idx
+    ghost-resurrect a digest after its keeper's takedown."""
+    return _read_live_index(spark, index_dir, _GRAM_INDEX_SCHEMA,
+                            "first_doc", "doc_id", increments="",
+                            before_batch=before_batch)
 
 
 def compact_gram_index(spark: SparkSession, index_dir: str,
                        out_dir: str) -> int:
-    """Fold a keep-first gram index (``base`` + ``batch_id=k``
-    increments − tombstones) into a fresh ``out_dir/base`` of
-    distinct live-provenance (h, first_doc) rows and return its
-    count.  Tombstones fold away PHYSICALLY: a digest whose last live
-    copy was taken down is absent from the new generation
-    (read_gram_index already dropped its rows), and ``out_dir``
-    starts with no tombstones subdir, so the read-side subtraction
-    cost resets to zero.  Run BETWEEN drains only
-    — after run_substring_keepfirst_stream_once returns True and
-    before the next drain starts: compacting while a drain is
-    mid-batch would fold a half-written increment into base, and the
-    replayed batch would then see its own digests as history and
-    self-excise the copy it should keep (the exact hazard the k<N
-    read rule exists to prevent).
-
-    Never compacts in place: the caller points the next drain's
-    index_dir at ``out_dir`` after success, production-style pointer
-    swap.  Why it exists: every micro-batch of every crawl increment
-    adds one subdir and every takedown a tombstone file; at crawl
-    cadence the listing cost — not the digest volume — is what grows
-    without bound.  The folded base is a single canonical-provenance
-    table (bucketed by digest on a real deployment), so the per-batch
-    index read goes back to one scan plus the current drain's few
-    increments."""
-    digests = read_gram_index(spark, index_dir).distinct()
-    digests.write.mode("overwrite").parquet(os.path.join(out_dir, "base"))
-    return spark.read.parquet(os.path.join(out_dir, "base")).count()
+    """Compact a keep-first gram index into a base generation of
+    distinct live-provenance (h, first_doc) rows (not bucketed here; by
+    digest on a real deployment). A digest whose last live keeper was
+    taken down is absent from the new generation. Between drains
+    means after run_substring_keepfirst_stream_once returns True: a
+    half-written increment folded into base would make the replayed
+    batch see its own digests as history and self-excise the copy it
+    should keep (the hazard the k<N read rule exists to prevent)."""
+    return _write_generation(
+        spark, read_gram_index(spark, index_dir).distinct(), out_dir, None)

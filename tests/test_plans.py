@@ -551,10 +551,11 @@ def test_longest_repeat_is_pure_map(spark):
 
 def test_band_index_live_view_plan_shape(spark, tmp_path):
     """read_band_index (late r7) must stay scale-correct: the
-    tombstone subtraction is a hist_id LeftAnti EQUI-join (no nested
+    tombstone subtraction is ONE hist_id LeftAnti EQUI-join (no nested
     loop, no cartesian — tombstones broadcast in practice via AQE),
-    base ∪ delta is a plain Union of scans, and the dedup-decision
-    consumer downstream keeps its banded equi-join shape."""
+    base and delta are read by ONE multi-path parquet scan, and the
+    dedup-decision consumer downstream keeps its banded equi-join
+    shape."""
     from pdfspark.streaming import (build_band_index,
                                     minhash_dedup_decisions,
                                     read_band_index)
@@ -570,8 +571,14 @@ def test_band_index_live_view_plan_shape(spark, tmp_path):
 
     live = read_band_index(spark, idx)
     plan = plan_of(live)
-    assert "LeftAnti" in plan, plan
-    assert "Union" in plan, plan
+    assert plan.count("LeftAnti") == 1, plan
+    # two scans: the tombstones, and ONE over both index paths (base
+    # and delta/batch_id=0) — the only one that reads the sig column
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 2, plan
+    index_scans = [ln for ln in scans if "sig:string" in ln]
+    assert len(index_scans) == 1, plan
+    assert "InMemoryFileIndex(2 paths)" in index_scans[0], plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -605,10 +612,10 @@ def test_gram_index_live_view_plan_shape(spark, tmp_path):
     plan = plan_of(live)
     assert plan.count("LeftAnti") == 1, plan
     # the 100-TB pin: zero aggregation keyed on the DIGEST anywhere —
-    # the only HashAggregate is the tombstone-side doc_id distinct
-    # (the tiny build side of the broadcast anti-join); base+delta
-    # union collapses into one multi-path FileScan
-    assert "HashAggregate(keys=[h" not in plan, plan
+    # and none on the tombstone side either (a left-anti join ignores
+    # duplicate tombstones); base + increments are one multi-path
+    # FileScan
+    assert "HashAggregate" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -686,12 +693,10 @@ def test_digest_takedown_plan_shape(spark):
 
 def test_digest_index_live_view_plan_shape(spark, tmp_path):
     """read_digest_index (fourth family) must stay scale-correct on
-    the read path: base ∪ deltas is a pure union (no digest-keyed
-    aggregation at read cadence — the fold happens at compaction),
-    the takedown subtraction is keeper LeftAnti EQUI-joins only
-    (Catalyst pushes the anti-join below the union — one broadcast
-    LeftAnti per branch, which is the better plan: each scan filters
-    locally), never a cartesian or nested loop."""
+    the read path: base and deltas are one multi-path scan (no
+    digest-keyed aggregation at read cadence — the fold happens at
+    compaction), the takedown subtraction is ONE broadcast keeper
+    LeftAnti EQUI-join, never a cartesian or nested loop."""
     from pdfspark.streaming import build_digest_index, read_digest_index
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
@@ -705,7 +710,7 @@ def test_digest_index_live_view_plan_shape(spark, tmp_path):
         f"{idx}/tombstones/batch_id=0")
 
     plan = plan_of(read_digest_index(spark, idx))
-    assert plan.count("LeftAnti") >= 1, plan
+    assert plan.count("LeftAnti") == 1, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan

@@ -3,6 +3,8 @@ checkpointed exactly-once sink + incremental resume."""
 
 import os
 
+import pytest
+
 from pdfspark.corpus import all_cases
 from pdfspark.pipeline import pages_from_fixtures
 from pdfspark.streaming import run_stream_once
@@ -1488,58 +1490,99 @@ def test_gram_index_compaction_cross_drain(spark, tmp_path):
     assert compact_gram_index(spark, idx_b, idx_c) >= n_digests
 
 
-def test_band_index_live_view_edge_shapes(spark, tmp_path):
-    """read_band_index composition edges the lifecycle test skips:
-    delta-only (no base), base-only (no deltas), tombstones naming
-    unknown hist_ids (no-ops), ALL docs tombstoned (empty view), and
-    a completely empty index dir (empty frame, correct schema —
-    callers join against it without special-casing)."""
-    from pdfspark.streaming import (build_band_index, compact_band_index,
-                                    read_band_index)
+# family → (increments prefix, tombstone column, index-row id column)
+_EDGE_FAMILIES = {
+    "band": ("delta/", "hist_id", "hist_id"),
+    "gram": ("", "doc_id", "first_doc"),
+    "ivf": ("delta/", "vec_id", "vec_id"),
+    "digest": ("delta/", "doc_id", "first_doc"),
+}
 
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet") \
+
+@pytest.mark.parametrize("family", sorted(_EDGE_FAMILIES))
+def test_index_live_view_edge_shapes(spark, tmp_path, family):
+    """Live-view composition edges the lifecycle tests skip, for every
+    maintained-index family: a completely empty index dir (empty
+    frame with the family's schema — callers join against it without
+    special-casing), increments only (no base), base only with
+    tombstones naming unknown ids (no-ops), ALL rows tombstoned (empty
+    view; its compaction is an empty base generation), and one id
+    tombstoned in two batches (a left-anti join ignores duplicate
+    tombstones)."""
+    from pyspark.sql import functions as F
+
+    from pdfspark import streaming as S
+
+    sf_dir = "/root/testdata/sf0.001"
+    inc, dead_col, key = _EDGE_FAMILIES[family]
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .filter("doc_id < 20").select("doc_id", "text")
-    bands = build_band_index(docs)
-    expected = {(r.hist_id, r.band, r.sig) for r in bands.collect()}
+    if family == "band":
+        rows = S.build_band_index(docs)
+    elif family == "gram":
+        rows = S.gram_hash_grams(docs).groupBy("h").agg(
+            F.min("doc_id").alias("first_doc"))
+    elif family == "ivf":
+        seeds = _ivf_seeds(spark, sf_dir)
+        embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
+            .select("vec_id", "embedding").filter("vec_id < 20")
+        rows = S.build_ivf_index(embs, seeds)
+    else:
+        rows = S.build_digest_index(docs)
+    read = getattr(S, f"read_{family}_index")
+    compact = getattr(S, f"compact_{family}_index")
 
-    # empty index dir
+    def got(df):
+        return sorted(tuple(tuple(v) if isinstance(v, list) else v
+                            for v in r) for r in df.collect())
+
+    def entomb(d, batch, ids):
+        spark.createDataFrame([(i,) for i in ids], f"{dead_col} long") \
+            .write.parquet(f"{d}/tombstones/batch_id={batch}")
+
+    expected = got(rows)
+    assert expected
+
+    # empty index dir: the family's columns and types, nothing to read
     empty = str(tmp_path / "empty")
     os.makedirs(empty)
-    view = read_band_index(spark, empty)
+    view = read(spark, empty)
     assert view.count() == 0
-    assert [f.name for f in view.schema.fields] == ["hist_id", "band",
-                                                    "sig"]
+    assert [(f.name, f.dataType) for f in view.schema.fields] == \
+        [(f.name, f.dataType) for f in rows.schema.fields]
+    if family == "ivf":
+        assert S.ivf_topk_decisions(
+            embs.filter("vec_id < 3"), view, seeds, k=2).count() == 0
 
-    # delta-only (a stream ran before any compaction ever happened)
+    # increments only (streams ran before any compaction happened)
     donly = str(tmp_path / "donly")
-    bands.filter("hist_id < 10").write.parquet(
-        f"{donly}/delta/batch_id=0")
-    bands.filter("hist_id >= 10").write.parquet(
-        f"{donly}/delta/batch_id=1")
-    got = {(r.hist_id, r.band, r.sig)
-           for r in read_band_index(spark, donly).collect()}
-    assert got == expected
+    rows.filter(f"{key} < 10").write.parquet(f"{donly}/{inc}batch_id=0")
+    rows.filter(f"{key} >= 10").write.parquet(f"{donly}/{inc}batch_id=1")
+    assert got(read(spark, donly)) == expected
 
-    # base-only + tombstones of unknown ids = identity
+    # base only + tombstones of unknown ids = identity
     bonly = str(tmp_path / "bonly")
-    bands.write.parquet(f"{bonly}/base")
-    spark.createDataFrame([(999_999,), (-5,)], "hist_id long") \
-        .write.parquet(f"{bonly}/tombstones/batch_id=0")
-    got = {(r.hist_id, r.band, r.sig)
-           for r in read_band_index(spark, bonly).collect()}
-    assert got == expected
+    rows.write.parquet(f"{bonly}/base")
+    entomb(bonly, 0, [999_999, -5])
+    assert got(read(spark, bonly)) == expected
 
-    # everything tombstoned → empty view, and compaction of it is an
-    # empty base generation
+    # everything tombstoned → empty view; compaction is an empty base
     dead = str(tmp_path / "dead")
-    bands.write.parquet(f"{dead}/base")
-    docs.select(docs.doc_id.alias("hist_id")).write.parquet(
-        f"{dead}/tombstones/batch_id=0")
-    assert read_band_index(spark, dead).count() == 0
+    rows.write.parquet(f"{dead}/base")
+    entomb(dead, 0, range(20))
+    assert read(spark, dead).count() == 0
     gen2 = str(tmp_path / "deadg2")
-    assert compact_band_index(spark, dead, gen2, nparts=2) == 0
-    assert read_band_index(spark, gen2).count() == 0
+    nparts = {} if family == "gram" else {"nparts": 2}
+    assert compact(spark, dead, gen2, **nparts) == 0
+    assert read(spark, gen2).count() == 0
+
+    # one id tombstoned twice = tombstoned once
+    twice = str(tmp_path / "twice")
+    rows.write.parquet(f"{twice}/base")
+    victim = rows.agg(F.min(key)).first()[0]
+    entomb(twice, 0, [victim])
+    entomb(twice, 1, [victim])
+    assert got(read(spark, twice)) == got(rows.filter(F.col(key) != victim))
 
 
 def test_minhash_crawl_loop_integration(spark, tmp_path):
@@ -2013,63 +2056,6 @@ def test_ivf_index_cross_drain_and_search(spark, tmp_path):
     assert decisions(view) == decisions(live_batch)
     # vector 10 is unretrievable through the maintained view
     assert all(t[2] != 10 for t in decisions(view))
-
-
-def test_ivf_index_live_view_edge_shapes(spark, tmp_path):
-    """read_ivf_index composition edges the lifecycle test skips
-    (parity with the band family's edge test): delta-only (no base),
-    base-only with tombstones naming unknown vec_ids (no-ops), ALL
-    vectors tombstoned (empty view; compaction of it is an empty base
-    generation), and a completely empty index dir (empty frame,
-    correct schema — ivf_topk_decisions joins against it without
-    special-casing and returns zero decisions)."""
-    import os as _os
-
-    from pdfspark.streaming import (build_ivf_index, compact_ivf_index,
-                                    ivf_topk_decisions, read_ivf_index)
-
-    sf_dir = "/root/testdata/sf0.001"
-    seeds = _ivf_seeds(spark, sf_dir)
-    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
-        .select("vec_id", "embedding").filter("vec_id < 20")
-    idx = build_ivf_index(embs, seeds)
-    expected = {(r.vec_id, r.cell, tuple(r.qv)) for r in idx.collect()}
-
-    # empty index dir: correct schema, searchable, zero decisions
-    empty = str(tmp_path / "vempty")
-    _os.makedirs(empty)
-    view = read_ivf_index(spark, empty)
-    assert view.count() == 0
-    assert [f.name for f in view.schema.fields] == ["vec_id", "cell",
-                                                    "qv"]
-    assert ivf_topk_decisions(
-        embs.filter("vec_id < 3"), view, seeds, k=2).count() == 0
-
-    # delta-only (streams ran before any compaction ever happened)
-    donly = str(tmp_path / "vdonly")
-    idx.filter("vec_id < 10").write.parquet(f"{donly}/delta/batch_id=0")
-    idx.filter("vec_id >= 10").write.parquet(f"{donly}/delta/batch_id=1")
-    got = {(r.vec_id, r.cell, tuple(r.qv))
-           for r in read_ivf_index(spark, donly).collect()}
-    assert got == expected
-
-    # base-only + tombstones of unknown vec_ids = identity
-    bonly = str(tmp_path / "vbonly")
-    idx.write.parquet(f"{bonly}/base")
-    spark.createDataFrame([(999_999,), (-5,)], "vec_id long") \
-        .write.parquet(f"{bonly}/tombstones/batch_id=0")
-    got = {(r.vec_id, r.cell, tuple(r.qv))
-           for r in read_ivf_index(spark, bonly).collect()}
-    assert got == expected
-
-    # everything tombstoned → empty view; compaction is an empty base
-    dead = str(tmp_path / "vdead")
-    idx.write.parquet(f"{dead}/base")
-    embs.select("vec_id").write.parquet(f"{dead}/tombstones/batch_id=0")
-    assert read_ivf_index(spark, dead).count() == 0
-    gen2 = str(tmp_path / "vdeadg2")
-    assert compact_ivf_index(spark, dead, gen2, nparts=2) == 0
-    assert read_ivf_index(spark, gen2).count() == 0
 
 
 def test_ivf_search_stream_drain_equals_batch(spark, tmp_path):
@@ -2690,3 +2676,29 @@ def test_digest_decisions_match_bruteforce_randomized(spark):
             else:
                 expect[i] = (1, None)
         assert got == expect, (case, sorted(tombs))
+
+
+def test_drain_without_timeout_reports_completion(spark, tmp_path):
+    """timeout_s=None waits until the drain is done, so a completed
+    drain must report True on both sinks: the file sink
+    (run_shard_pack_stream_once) and foreachBatch
+    (run_digest_index_append_stream_once)."""
+    from pdfspark.streaming import (read_digest_index,
+                                    run_digest_index_append_stream_once,
+                                    run_shard_pack_stream_once)
+
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame([(1, "a b c"), (2, "d e")],
+                          "doc_id long, text string") \
+        .write.parquet(f"{in_dir}/part0")
+    out = str(tmp_path / "packed")
+    assert run_shard_pack_stream_once(
+        spark, f"{in_dir}/part0", out, str(tmp_path / "ck1"),
+        timeout_s=None) is True
+    assert spark.read.parquet(out).count() == 2
+
+    idx = str(tmp_path / "didx")
+    assert run_digest_index_append_stream_once(
+        spark, f"{in_dir}/part0", idx, str(tmp_path / "ck2"),
+        timeout_s=None) is True
+    assert read_digest_index(spark, idx).count() == 2

@@ -15,8 +15,12 @@ shows the kernel handles it); out of scope for the ASCII corpus.
 
 from __future__ import annotations
 
+import functools
 import re
 import zlib
+
+from pdfspark.fixtures import (WINANSI, build_minimal_ttf, stream_object,
+                               write_pdf)
 
 
 def _escape(chunk: str) -> str:
@@ -81,6 +85,101 @@ def text_to_html(text: str, doc_id: int = 0, lang: str = "en") -> bytes:
     return page.encode("utf-8")
 
 
+# ------------------------------------------------------------ PDF skeleton
+# Every generator below builds its objects here and serializes them with
+# fixtures.write_pdf, the writer the golden corpus uses too.
+
+_WINANSI = WINANSI.encode("latin-1")
+_PRODUCER = b"/Producer (pdfspark-docgen)"
+_CREATED = b"/CreationDate (D:20250101000000Z)"
+_CATALOG = b"<< /Type /Catalog /Pages 2 0 R%s >>"
+
+
+def _info(meta_id: int, entries: bytes = _PRODUCER) -> bytes:
+    return b"<< /Title (doc %d) %s >>" % (meta_id, entries)
+
+
+def _page(contents: int, extra: bytes = b"") -> bytes:
+    """A US-Letter page under pages 2 with font 5 as /F1."""
+    return (b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            b"/Resources << /Font << /F1 5 0 R >> >> /Contents %d 0 R%s >>"
+            % (contents, extra))
+
+
+def _flate(content: bytes) -> bytes:
+    return stream_object("<< /Filter /FlateDecode >>",
+                         zlib.compress(content, 6))
+
+
+def _one_page_pdf(content: bytes, font: bytes, meta_id: int, *,
+                  info: bytes = _PRODUCER, catalog_extra: bytes = b"",
+                  page_extra: bytes = b"", extra=()) -> bytes:
+    """The single-page skeleton: catalog 1 → pages 2 → page 3 → Flate
+    ``content`` 4 → ``font`` 5 → info 6, then the ``extra`` (num, body)
+    objects in order; the trailer names /Info 6."""
+    return write_pdf(
+        [(1, _CATALOG % catalog_extra),
+         (2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>"),
+         (3, _page(4, page_extra)),
+         (4, _flate(content)),
+         (5, font),
+         (6, _info(meta_id, info)),
+         *extra],
+        1, " /Info 6 0 R")
+
+
+def _page_num(k: int) -> int:
+    return 10 + 2 * k
+
+
+def _multi_page_pdf(contents: list, info: bytes, *,
+                    catalog_extra: bytes = b"", outline=()) -> bytes:
+    """The multi-page skeleton, in emission order: catalog 1, the
+    ``outline`` (num, body) objects, pages 2, WinAnsi Helvetica 5,
+    ``info`` 6, then page k at _page_num(k) followed by its Flate
+    content stream (3, 4 and 7-9 stay free)."""
+    nums = [_page_num(k) for k in range(len(contents))]
+    objs = [(1, _CATALOG % catalog_extra), *outline,
+            (2, b"<< /Type /Pages /Kids [%s] /Count %d >>"
+             % (b" ".join(b"%d 0 R" % p for p in nums), len(nums))),
+            (5, _WINANSI), (6, info)]
+    for p, content in zip(nums, contents):
+        objs += [(p, _page(p + 1)), (p + 1, _flate(content))]
+    return write_pdf(objs, 1, " /Info 6 0 R")
+
+
+def _outline(root: int, titles: list, dests=None) -> list:
+    """A flat /Outlines chain: the root at ``root``, item k at
+    root+1+k; ``dests[k]`` (bytes) is item k's destination entry."""
+    n = len(titles)
+    objs = [(root, b"<< /Type /Outlines /Count %d /First %d 0 R "
+                   b"/Last %d 0 R >>" % (n, root + 1, root + n))]
+    for k, ttl in enumerate(titles):
+        num = root + 1 + k
+        parts = [b"<< /Title (%s) /Parent %d 0 R"
+                 % (_escape(ttl).encode("latin-1"), root)]
+        if k > 0:
+            parts.append(b" /Prev %d 0 R" % (num - 1))
+        if k < n - 1:
+            parts.append(b" /Next %d 0 R" % (num + 1))
+        if dests:
+            parts.append(dests[k])
+        parts.append(b" >>")
+        objs.append((num, b"".join(parts)))
+    return objs
+
+
+def _flow_ops(text: str, chunk: int = 120) -> bytes:
+    """Single-baseline flow text: consecutive ``chunk``-char Tj shows in
+    one BT block (no y movement, so the pinned linearization inserts
+    nothing between chunks)."""
+    shows = "".join(
+        f"({_escape(text[i : i + chunk])}) Tj "
+        for i in range(0, max(len(text), 1), chunk)
+    )
+    return f"BT /F1 12 Tf 72 720 Td {shows}ET".encode("latin-1")
+
+
 def text_to_pdf(text: str, chunk: int = 120, meta_id: int = 0,
                 freetext_annot: str = None,
                 widget_value: str = None,
@@ -94,134 +193,49 @@ def text_to_pdf(text: str, chunk: int = 120, meta_id: int = 0,
     ``attachment`` a (filename, payload_bytes) embedded file in the
     catalog's /Names /EmbeddedFiles tree — all default off so the
     pinned roundtrip corpus is unchanged."""
-    text = normalize_for_pdf(text)
-    shows = "".join(
-        f"({_escape(text[i : i + chunk])}) Tj "
-        for i in range(0, max(len(text), 1), chunk)
-    )
-    content = f"BT /F1 12 Tf 72 720 Td {shows}ET".encode("latin-1")
-    data = zlib.compress(content, 6)
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
+    extra = []  # objects 7, 8, … in number order
 
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num)
-        out.extend(body)
-        out.extend(b"\nendobj\n")
+    def add(body: bytes) -> int:
+        extra.append((7 + len(extra), body))
+        return extra[-1][0]
 
-    next_num = 7
-    ft_num = wd_num = ol_num = lk_num = fs_num = ef_num = None
+    annots = []
     if freetext_annot is not None:
-        ft_num, next_num = next_num, next_num + 1
-    if widget_value is not None:
-        wd_num, next_num = next_num, next_num + 1
-    if link_uri is not None:
-        lk_num, next_num = next_num, next_num + 1
-    if attachment is not None:
-        fs_num, ef_num = next_num, next_num + 1
-        next_num += 2
-    if outline_titles:
-        ol_num = next_num
-        next_num += 1 + len(outline_titles)  # root + one item per title
-    annot_refs = [b"%d 0 R" % n
-                  for n in (ft_num, wd_num, lk_num) if n is not None]
-    annots_entry = (
-        b" /Annots [" + b" ".join(annot_refs) + b"]" if annot_refs else b""
-    )
-    outlines_entry = b" /Outlines %d 0 R" % ol_num if ol_num else b""
-    names_entry = b""
-    if fs_num is not None:
-        fname = _escape(attachment[0]).encode("latin-1")
-        names_entry = (b" /Names << /EmbeddedFiles << /Names [("
-                       + fname + b") %d 0 R] >> >>" % fs_num)
-    emit(1, b"<< /Type /Catalog /Pages 2 0 R" + outlines_entry
-         + names_entry + b" >>")
-    emit(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    emit(
-        3,
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R"
-        + annots_entry + b" >>",
-    )
-    emit(
-        4,
-        b"<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(data)
-        + data
-        + b"\nendstream",
-    )
-    emit(
-        5,
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-        b"/Encoding /WinAnsiEncoding >>",
-    )
-    emit(
-        6,
-        b"<< /Title (doc %d) /CreationDate (D:20250101000000Z) "
-        b"/Producer (pdfspark-docgen) >>" % meta_id,
-    )
-    if ft_num is not None:
-        emit(
-            ft_num,
+        annots.append(add(
             b"<< /Type /Annot /Subtype /FreeText /Rect [10 10 200 40] "
             b"/Contents (" + _escape(freetext_annot).encode("latin-1")
-            + b") >>",
-        )
-    if wd_num is not None:
-        emit(
-            wd_num,
+            + b") >>"))
+    if widget_value is not None:
+        annots.append(add(
             b"<< /Type /Annot /Subtype /Widget /FT /Tx "
             b"/Rect [10 50 200 80] /T (field1) "
-            b"/V (" + _escape(widget_value).encode("latin-1") + b") >>",
-        )
-    if lk_num is not None:
-        emit(
-            lk_num,
+            b"/V (" + _escape(widget_value).encode("latin-1") + b") >>"))
+    if link_uri is not None:
+        annots.append(add(
             b"<< /Type /Annot /Subtype /Link /Rect [10 90 200 110] "
             b"/A << /Type /Action /S /URI /URI ("
-            + _escape(link_uri).encode("latin-1") + b") >> >>",
-        )
-    if fs_num is not None:
+            + _escape(link_uri).encode("latin-1") + b") >> >>"))
+    catalog = b""
+    if attachment is not None:
         fname = _escape(attachment[0]).encode("latin-1")
         payload = attachment[1]
-        emit(
-            fs_num,
-            b"<< /Type /Filespec /F (" + fname + b") /UF (" + fname
-            + b") /EF << /F %d 0 R >> >>" % ef_num,
-        )
-        emit(
-            ef_num,
-            b"<< /Type /EmbeddedFile /Length %d /Params << /Size %d >> >>"
+        fs = add(b"<< /Type /Filespec /F (%s) /UF (%s) /EF << /F %d 0 R >> >>"
+                 % (fname, fname, 8 + len(extra)))
+        add(b"<< /Type /EmbeddedFile /Length %d /Params << /Size %d >> >>"
             b"\nstream\n" % (len(payload), len(payload))
-            + payload + b"\nendstream",
-        )
-    if ol_num is not None:
-        n_items = len(outline_titles)
-        emit(
-            ol_num,
-            b"<< /Type /Outlines /Count %d /First %d 0 R /Last %d 0 R >>"
-            % (n_items, ol_num + 1, ol_num + n_items),
-        )
-        for k, ttl in enumerate(outline_titles):
-            num = ol_num + 1 + k
-            parts = [b"<< /Title (%s) /Parent %d 0 R"
-                     % (_escape(ttl).encode("latin-1"), ol_num)]
-            if k > 0:
-                parts.append(b" /Prev %d 0 R" % (num - 1))
-            if k < n_items - 1:
-                parts.append(b" /Next %d 0 R" % (num + 1))
-            parts.append(b" >>")
-            emit(num, b"".join(parts))
-    size = max(offsets) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-    for n in range(1, size):
-        out.extend(b"%010d 00000 n \n" % offsets[n])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-        b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-    )
-    return bytes(out)
+            + payload + b"\nendstream")
+        catalog = (b" /Names << /EmbeddedFiles << /Names [(%s) %d 0 R] >> >>"
+                   % (fname, fs))
+    if outline_titles:
+        root = 7 + len(extra)
+        catalog = b" /Outlines %d 0 R" % root + catalog
+        extra += _outline(root, outline_titles)
+    return _one_page_pdf(
+        _flow_ops(normalize_for_pdf(text), chunk), _WINANSI, meta_id,
+        info=_CREATED + b" " + _PRODUCER, catalog_extra=catalog,
+        page_extra=(b" /Annots [%s]" % b" ".join(b"%d 0 R" % n for n in annots)
+                    if annots else b""),
+        extra=extra)
 
 
 def text_to_pdf_kerned(text: str, meta_id: int = 0,
@@ -242,46 +256,7 @@ def text_to_pdf_kerned(text: str, meta_id: int = 0,
         tj = tj.rsplit(" -278", 1)[0]  # no trailing kern
         y = 740 - 14 * (row_start // words_per_line)
         ops.append(f"BT /F1 12 Tf 72 {y} Td [{tj}] TJ ET ")
-    content = "".join(ops).encode("latin-1")
-    data = zlib.compress(content, 6)
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num)
-        out.extend(body)
-        out.extend(b"\nendobj\n")
-
-    emit(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    emit(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    emit(
-        3,
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-    )
-    emit(
-        4,
-        b"<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(data)
-        + data
-        + b"\nendstream",
-    )
-    emit(
-        5,
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-        b"/Encoding /WinAnsiEncoding >>",
-    )
-    emit(6, b"<< /Title (doc %d) /Producer (pdfspark-docgen) >>" % meta_id)
-    size = max(offsets) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-    for n in range(1, size):
-        out.extend(b"%010d 00000 n \n" % offsets[n])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-        b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-    )
-    return bytes(out)
+    return _one_page_pdf("".join(ops).encode("latin-1"), _WINANSI, meta_id)
 
 
 def text_to_pdf_two_column(text: str, meta_id: int = 0,
@@ -311,46 +286,7 @@ def text_to_pdf_two_column(text: str, meta_id: int = 0,
                     f"BT /F1 12 Tf {x} {y} Td "
                     f"({_escape(col_lines[ci][row])}) Tj ET "
                 )
-    content = "".join(ops).encode("latin-1")
-    data = zlib.compress(content, 6)
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num)
-        out.extend(body)
-        out.extend(b"\nendobj\n")
-
-    emit(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    emit(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    emit(
-        3,
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-    )
-    emit(
-        4,
-        b"<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(data)
-        + data
-        + b"\nendstream",
-    )
-    emit(
-        5,
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-        b"/Encoding /WinAnsiEncoding >>",
-    )
-    emit(6, b"<< /Title (doc %d) /Producer (pdfspark-docgen) >>" % meta_id)
-    size = max(offsets) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-    for n in range(1, size):
-        out.extend(b"%010d 00000 n \n" % offsets[n])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-        b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-    )
-    return bytes(out)
+    return _one_page_pdf("".join(ops).encode("latin-1"), _WINANSI, meta_id)
 
 
 # Canonical /PageLabels fixture tree (r7): roman front matter (pages
@@ -388,101 +324,38 @@ def text_to_pdf_multipage(text: str, page_chars: int = 500,
     page_texts = [
         text[i:i + page_chars] for i in range(0, max(len(text), 1), page_chars)
     ]
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num)
-        out.extend(body)
-        out.extend(b"\nendobj\n")
-
     n = len(page_texts)
-    page_nums = [10 + 2 * k for k in range(n)]
-    kids = b" ".join(b"%d 0 R" % p for p in page_nums)
-    cat = b"<< /Type /Catalog /Pages 2 0 R"
+    catalog = b""
     if page_labels:
-        cat += b" /PageLabels " + page_labels
-    ol_root = 10 + 2 * n  # first object number past the page/content pairs
+        catalog += b" /PageLabels " + page_labels
+    outline = []
     if outline_dests:
-        pg = [page_nums[min(max(int(p), 0), n - 1)]
-              for _, p in outline_dests]
-        cat += b" /Outlines %d 0 R" % ol_root
+        pg = [_page_num(min(max(int(p), 0), n - 1)) for _, p in outline_dests]
+        ol_root = _page_num(n)  # first object number past the page pairs
+        catalog += b" /Outlines %d 0 R" % ol_root
         named = [(b"/d%d" % k, pg[k])
                  for k in range(len(outline_dests)) if k % 3 == 1]
         if named:
-            cat += (b" /Dests << "
-                    + b" ".join(b"%s [%d 0 R /Fit]" % (nm, p)
-                                for nm, p in named)
-                    + b" >>")
+            catalog += (b" /Dests << "
+                        + b" ".join(b"%s [%d 0 R /Fit]" % (nm, p)
+                                    for nm, p in named)
+                        + b" >>")
         treed = [(b"s%d" % k, pg[k])
                  for k in range(len(outline_dests)) if k % 3 == 2]
         if treed:
-            cat += (b" /Names << /Dests << /Names ["
-                    + b" ".join(b"(%s) [%d 0 R /Fit]" % (nm, p)
-                                for nm, p in treed)
-                    + b"] >> >>")
-    emit(1, cat + b" >>")
-    if outline_dests:
-        n_items = len(outline_dests)
-        emit(ol_root,
-             b"<< /Type /Outlines /Count %d /First %d 0 R /Last %d 0 R >>"
-             % (n_items, ol_root + 1, ol_root + n_items))
-        for k, (ttl, _p) in enumerate(outline_dests):
-            num = ol_root + 1 + k
-            parts = [b"<< /Title (%s) /Parent %d 0 R"
-                     % (_escape(ttl).encode("latin-1"), ol_root)]
-            if k > 0:
-                parts.append(b" /Prev %d 0 R" % (num - 1))
-            if k < n_items - 1:
-                parts.append(b" /Next %d 0 R" % (num + 1))
-            if k % 3 == 0:
-                parts.append(b" /Dest [%d 0 R /XYZ 0 792 0]" % pg[k])
-            elif k % 3 == 1:
-                parts.append(b" /Dest /d%d" % k)
-            else:
-                parts.append(b" /A << /S /GoTo /D (s%d) >>" % k)
-            parts.append(b" >>")
-            emit(num, b"".join(parts))
-    emit(2, b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>" % n)
-    emit(
-        5,
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-        b"/Encoding /WinAnsiEncoding >>",
-    )
-    emit(6, b"<< /Title (doc %d) /CreationDate (D:20250101000000Z) >>"
-         % meta_id)
-    for k, ptext in enumerate(page_texts):
-        shows = "".join(
-            f"({_escape(ptext[i:i + chunk])}) Tj "
-            for i in range(0, max(len(ptext), 1), chunk)
-        )
-        content = f"BT /F1 12 Tf 72 720 Td {shows}ET".encode("latin-1")
-        data = zlib.compress(content, 6)
-        emit(
-            page_nums[k],
-            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            b"/Resources << /Font << /F1 5 0 R >> >> /Contents %d 0 R >>"
-            % (page_nums[k] + 1),
-        )
-        emit(
-            page_nums[k] + 1,
-            b"<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(data)
-            + data + b"\nendstream",
-        )
-    size = max(offsets) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-    for i in range(1, size):
-        if i in offsets:
-            out.extend(b"%010d 00000 n \n" % offsets[i])
-        else:
-            out.extend(b"0000000000 65535 f \n")
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-        b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-    )
-    return bytes(out)
+            catalog += (b" /Names << /Dests << /Names ["
+                        + b" ".join(b"(%s) [%d 0 R /Fit]" % (nm, p)
+                                    for nm, p in treed)
+                        + b"] >> >>")
+        outline = _outline(
+            ol_root, [ttl for ttl, _p in outline_dests],
+            [b" /Dest [%d 0 R /XYZ 0 792 0]" % pg[k] if k % 3 == 0
+             else b" /Dest /d%d" % k if k % 3 == 1
+             else b" /A << /S /GoTo /D (s%d) >>" % k
+             for k in range(len(outline_dests))])
+    return _multi_page_pdf([_flow_ops(t, chunk) for t in page_texts],
+                           _info(meta_id, _CREATED),
+                           catalog_extra=catalog, outline=outline)
 
 
 def text_to_pdf_tagged(text: str, meta_id: int = 0) -> bytes:
@@ -507,49 +380,12 @@ def text_to_pdf_tagged(text: str, meta_id: int = 0) -> bytes:
             f"({_escape(chunks[mcid])}) Tj EMC 0 -14 Td"
         )
     ops.append("ET")
-    content = " ".join(ops).encode("latin-1")
-    data = zlib.compress(content, 6)
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num)
-        out.extend(body)
-        out.extend(b"\nendobj\n")
-
-    emit(1, b"<< /Type /Catalog /Pages 2 0 R /StructTreeRoot 7 0 R >>")
-    emit(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    emit(
-        3,
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-    )
-    emit(
-        4,
-        b"<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(data)
-        + data + b"\nendstream",
-    )
-    emit(
-        5,
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-        b"/Encoding /WinAnsiEncoding >>",
-    )
-    emit(6, b"<< /Title (doc %d) /Producer (pdfspark-docgen) >>" % meta_id)
-    emit(7, b"<< /Type /StructTreeRoot /K [8 0 R 9 0 R 10 0 R] >>")
-    for i in range(3):
-        emit(8 + i,
-             b"<< /Type /StructElem /S /P /Pg 3 0 R /K %d >>" % i)
-    size = max(offsets) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-    for num in range(1, size):
-        out.extend(b"%010d 00000 n \n" % offsets[num])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-        b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-    )
-    return bytes(out)
+    return _one_page_pdf(
+        " ".join(ops).encode("latin-1"), _WINANSI, meta_id,
+        catalog_extra=b" /StructTreeRoot 7 0 R",
+        extra=[(7, b"<< /Type /StructTreeRoot /K [8 0 R 9 0 R 10 0 R] >>")]
+        + [(8 + i, b"<< /Type /StructElem /S /P /Pg 3 0 R /K %d >>" % i)
+           for i in range(3)])
 
 
 # ---------------------------------------------------------------- CJK kerned
@@ -570,17 +406,13 @@ _ASCII_TO_CJK = str.maketrans("abcdefghijklmnopqrstuvwxyz", CJK_ALPHABET)
 CJK_ADVANCES = [400 + 20 * i for i in range(26)]
 
 
+@functools.cache
 def _cjk_ttf() -> bytes:
-    from pdfspark.fixtures import build_minimal_ttf
-
     return build_minimal_ttf(
         {0x4E00 + i: i + 1 for i in range(26)},
         hmtx_advances=[0] + CJK_ADVANCES,
         units_per_em=1000,
     )
-
-
-_CJK_TTF_CACHE: bytes = b""
 
 
 def text_to_pdf_cjk_kerned(text: str, meta_id: int = 0,
@@ -596,10 +428,7 @@ def text_to_pdf_cjk_kerned(text: str, meta_id: int = 0,
     upgrade), because under the /DW fallback the 0.35×median threshold
     sits above the inter-word kern. Reading-order reconstruction must
     reproduce the transliterated text byte-identically."""
-    global _CJK_TTF_CACHE
-    if not _CJK_TTF_CACHE:
-        _CJK_TTF_CACHE = _cjk_ttf()
-    ttf = _CJK_TTF_CACHE
+    ttf = _cjk_ttf()
     cjk = normalize_for_pdf(text).translate(_ASCII_TO_CJK)
     words = cjk.split(" ")
     ops = []
@@ -611,69 +440,26 @@ def text_to_pdf_cjk_kerned(text: str, meta_id: int = 0,
         tj = tj.rsplit(" -400", 1)[0]  # no trailing kern
         y = 740 - 14 * (row_start // words_per_line)
         ops.append(f"BT /F1 12 Tf 72 {y} Td [{tj}] TJ ET ")
-    content = "".join(ops).encode("latin-1")
-    data = zlib.compress(content, 6)
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num)
-        out.extend(body)
-        out.extend(b"\nendobj\n")
-
-    emit(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    emit(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    emit(
-        3,
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-    )
-    emit(
-        4,
-        b"<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(data)
-        + data + b"\nendstream",
-    )
-    emit(
-        5,
-        b"<< /Type /Font /Subtype /Type0 /BaseFont /EmbCJK "
-        b"/Encoding /GBK-EUC-H /DescendantFonts [7 0 R] >>",
-    )
-    emit(6, b"<< /Title (doc %d) /Producer (pdfspark-docgen) >>" % meta_id)
-    emit(
-        7,
-        b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /EmbCJK "
-        b"/CIDSystemInfo << /Registry (Adobe) /Ordering (GB1) "
-        b"/Supplement 5 >> /DW 1500 /FontDescriptor 8 0 R >>",
-    )
     if embed_metrics:
-        emit(
-            8,
-            b"<< /Type /FontDescriptor /FontName /EmbCJK /Flags 4 "
-            b"/FontFile2 9 0 R >>",
-        )
-        emit(
-            9,
-            b"<< /Length1 %d /Length %d >>\nstream\n" % (len(ttf), len(ttf))
-            + ttf + b"\nendstream",
-        )
+        descriptor = [
+            (8, b"<< /Type /FontDescriptor /FontName /EmbCJK /Flags 4 "
+                b"/FontFile2 9 0 R >>"),
+            (9, stream_object("<< /Length1 %d >>" % len(ttf), ttf)),
+        ]
     else:
         # negative-path fixture (tests only): no embedded program — the
         # kernel must fall back to /DW 1500 and word-break recovery fails
-        emit(
-            8,
-            b"<< /Type /FontDescriptor /FontName /EmbCJK /Flags 4 >>",
-        )
-    size = max(offsets) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-    for n in range(1, size):
-        out.extend(b"%010d 00000 n \n" % offsets[n])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-        b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-    )
-    return bytes(out)
+        descriptor = [
+            (8, b"<< /Type /FontDescriptor /FontName /EmbCJK /Flags 4 >>")]
+    return _one_page_pdf(
+        "".join(ops).encode("latin-1"),
+        b"<< /Type /Font /Subtype /Type0 /BaseFont /EmbCJK "
+        b"/Encoding /GBK-EUC-H /DescendantFonts [7 0 R] >>",
+        meta_id,
+        extra=[(7, b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /EmbCJK "
+                   b"/CIDSystemInfo << /Registry (Adobe) /Ordering (GB1) "
+                   b"/Supplement 5 >> /DW 1500 /FontDescriptor 8 0 R >>"),
+               *descriptor])
 
 
 def text_to_pdf_narrow_gutter(text: str, meta_id: int = 0) -> bytes:
@@ -716,55 +502,16 @@ def text_to_pdf_narrow_gutter(text: str, meta_id: int = 0) -> bytes:
                     f"BT /F1 12 Tf {x:.2f} {y} Td "
                     f"({_escape(col_lines[ci][row])}) Tj ET "
                 )
-    content = "".join(ops).encode("latin-1")
-    data = zlib.compress(content, 6)
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num)
-        out.extend(body)
-        out.extend(b"\nendobj\n")
-
-    emit(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    emit(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    emit(
-        3,
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-    )
-    emit(
-        4,
-        b"<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(data)
-        + data + b"\nendstream",
-    )
-    emit(
-        5,
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-        b"/Encoding /WinAnsiEncoding >>",
-    )
-    emit(6, b"<< /Title (doc %d) /Producer (pdfspark-docgen) >>" % meta_id)
-    size = max(offsets) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-    for n in range(1, size):
-        out.extend(b"%010d 00000 n \n" % offsets[n])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-        b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-    )
-    return bytes(out)
+    return _one_page_pdf("".join(ops).encode("latin-1"), _WINANSI, meta_id)
 
 
 # ------------------------------------------------------------- post-name font
 
+@functools.cache
 def _post_ttf() -> bytes:
     """Symbolic TrueType with NO cmap subtables and a 'post' 2.0 table
     naming gids 32-122 after their ASCII chars (AGL names): the
     code→gid identity + gid→name→Unicode last-resort path."""
-    from pdfspark.fixtures import build_minimal_ttf
-
     agl = {32: "space"}
     for i in range(26):
         agl[97 + i] = chr(97 + i)
@@ -779,9 +526,6 @@ def _post_ttf() -> bytes:
     return build_minimal_ttf({}, post_names=names)
 
 
-_POST_TTF_CACHE: bytes = b""
-
-
 def text_to_pdf_postfont(text: str, meta_id: int = 0) -> bytes:
     """Roundtrip generator for the 'post'-name fallback: a symbolic
     TrueType (Flags 4, no /Encoding) whose embedded program has NO cmap
@@ -789,67 +533,16 @@ def text_to_pdf_postfont(text: str, meta_id: int = 0) -> bytes:
     post-2.0 glyph names (gid==code identity, name→AGL→Unicode). Same
     single-baseline layout as text_to_pdf so the pinned linearization
     reproduces the text byte-identically."""
-    global _POST_TTF_CACHE
-    if not _POST_TTF_CACHE:
-        _POST_TTF_CACHE = _post_ttf()
-    ttf = _POST_TTF_CACHE
-    text = normalize_for_pdf(text)
-    chunk = 120
-    shows = "".join(
-        f"({_escape(text[i : i + chunk])}) Tj "
-        for i in range(0, max(len(text), 1), chunk)
-    )
-    content = f"BT /F1 12 Tf 72 720 Td {shows}ET".encode("latin-1")
-    data = zlib.compress(content, 6)
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num)
-        out.extend(body)
-        out.extend(b"\nendobj\n")
-
-    emit(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    emit(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    emit(
-        3,
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-    )
-    emit(
-        4,
-        b"<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(data)
-        + data + b"\nendstream",
-    )
-    emit(
-        5,
+    ttf = _post_ttf()
+    return _one_page_pdf(
+        _flow_ops(normalize_for_pdf(text)),
         b"<< /Type /Font /Subtype /TrueType /BaseFont /PostOnly "
         b"/FirstChar 32 /LastChar 122 /Widths [%s] "
-        b"/FontDescriptor 7 0 R >>"
-        % b" ".join(b"500" for _ in range(91)),
-    )
-    emit(6, b"<< /Title (doc %d) /Producer (pdfspark-docgen) >>" % meta_id)
-    emit(
-        7,
-        b"<< /Type /FontDescriptor /FontName /PostOnly /Flags 4 "
-        b"/FontFile2 8 0 R >>",
-    )
-    emit(
-        8,
-        b"<< /Length1 %d /Length %d >>\nstream\n" % (len(ttf), len(ttf))
-        + ttf + b"\nendstream",
-    )
-    size = max(offsets) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-    for n in range(1, size):
-        out.extend(b"%010d 00000 n \n" % offsets[n])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-        b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-    )
-    return bytes(out)
+        b"/FontDescriptor 7 0 R >>" % b" ".join(b"500" for _ in range(91)),
+        meta_id,
+        extra=[(7, b"<< /Type /FontDescriptor /FontName /PostOnly /Flags 4 "
+                   b"/FontFile2 8 0 R >>"),
+               (8, stream_object("<< /Length1 %d >>" % len(ttf), ttf))])
 
 
 def text_to_pdf_table(text: str, meta_id: int = 0,
@@ -1007,93 +700,11 @@ def text_to_pdf_table(text: str, meta_id: int = 0,
                     )
     if rows_per_page:
         n_pages = max(1, (n_rows + rows_per_page - 1) // rows_per_page)
-        out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-        offsets = {}
-
-        def emit_p(num: int, body: bytes) -> None:
-            offsets[num] = len(out)
-            out.extend(b"%d 0 obj\n" % num)
-            out.extend(body)
-            out.extend(b"\nendobj\n")
-
-        page_nums = [10 + 2 * k for k in range(n_pages)]
-        kids = b" ".join(b"%d 0 R" % p for p in page_nums)
-        emit_p(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-        emit_p(2, b"<< /Type /Pages /Kids [" + kids + b"] /Count %d >>"
-               % n_pages)
-        emit_p(
-            5,
-            b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-            b"/Encoding /WinAnsiEncoding >>",
-        )
-        emit_p(6, b"<< /Title (doc %d) /Producer (pdfspark-docgen) >>"
-               % meta_id)
-        for k in range(n_pages):
-            pdata = zlib.compress(
-                "".join(page_ops.get(k, [])).encode("latin-1"), 6)
-            emit_p(
-                page_nums[k],
-                b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                b"/Resources << /Font << /F1 5 0 R >> >> /Contents %d 0 R >>"
-                % (page_nums[k] + 1),
-            )
-            emit_p(
-                page_nums[k] + 1,
-                b"<< /Filter /FlateDecode /Length %d >>\nstream\n"
-                % len(pdata) + pdata + b"\nendstream",
-            )
-        size = max(offsets) + 1
-        xref_off = len(out)
-        out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-        for i in range(1, size):
-            if i in offsets:
-                out.extend(b"%010d 00000 n \n" % offsets[i])
-            else:
-                out.extend(b"0000000000 65535 f \n")
-        out.extend(
-            b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-            b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-        )
-        return bytes(out)
-    content = "".join(page_ops[0]).encode("latin-1")
-    data = zlib.compress(content, 6)
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num)
-        out.extend(body)
-        out.extend(b"\nendobj\n")
-
-    emit(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    emit(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    emit(
-        3,
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-    )
-    emit(
-        4,
-        b"<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(data)
-        + data + b"\nendstream",
-    )
-    emit(
-        5,
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica "
-        b"/Encoding /WinAnsiEncoding >>",
-    )
-    emit(6, b"<< /Title (doc %d) /Producer (pdfspark-docgen) >>" % meta_id)
-    size = max(offsets) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-    for n in range(1, size):
-        out.extend(b"%010d 00000 n \n" % offsets[n])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-        b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-    )
-    return bytes(out)
+        return _multi_page_pdf(
+            ["".join(page_ops.get(k, [])).encode("latin-1")
+             for k in range(n_pages)], _info(meta_id))
+    return _one_page_pdf("".join(page_ops[0]).encode("latin-1"), _WINANSI,
+                         meta_id)
 
 
 # ------------------------------------------------------------ vertical CJK
@@ -1106,10 +717,8 @@ def _emit_identity_type0_pdf(content: bytes, base_font: bytes,
     the writing-mode generators (review r6.1 #4): one content stream,
     a Type0 font with no FontFile (CIDs = Unicode code points, widths
     from /DW defaults), a ToUnicode CMap with the ASCII-printable
-    range plus one generator-specific ``bfrange2`` row, classic xref +
-    trailer. Byte-identical to the scaffolding both generators
-    previously inlined."""
-    data = zlib.compress(content, 6)
+    range plus one generator-specific ``bfrange2`` row, all on the
+    one-page skeleton (font 5, descendant 7, ToUnicode 8)."""
     tounicode = (
         b"/CIDInit /ProcSet findresource begin\n12 dict begin\nbegincmap\n"
         b"/CMapName /" + cmap_name + b" def\n/CMapType 2 def\n"
@@ -1120,55 +729,37 @@ def _emit_identity_type0_pdf(content: bytes, base_font: bytes,
         b"endbfrange\nendcmap\nCMapName currentdict /CMap defineresource "
         b"pop\nend\nend"
     )
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    offsets = {}
-
-    def emit(num: int, body: bytes) -> None:
-        offsets[num] = len(out)
-        out.extend(b"%d 0 obj\n" % num)
-        out.extend(body)
-        out.extend(b"\nendobj\n")
-
-    emit(1, b"<< /Type /Catalog /Pages 2 0 R >>")
-    emit(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    emit(
-        3,
-        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-        b"/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
-    )
-    emit(
-        4,
-        b"<< /Filter /FlateDecode /Length %d >>\nstream\n" % len(data)
-        + data + b"\nendstream",
-    )
-    emit(
-        5,
+    return _one_page_pdf(
+        content,
         b"<< /Type /Font /Subtype /Type0 /BaseFont /" + base_font +
         b" /Encoding /" + encoding +
         b" /DescendantFonts [7 0 R] /ToUnicode 8 0 R >>",
-    )
-    emit(6, b"<< /Title (doc %d) /Producer (pdfspark-docgen) >>" % meta_id)
-    emit(
-        7,
-        b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /" + base_font +
-        b" /CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) "
-        b"/Supplement 0 >>" + extra_descendant + b" >>",
-    )
-    emit(
-        8,
-        b"<< /Length %d >>\nstream\n" % len(tounicode)
-        + tounicode + b"\nendstream",
-    )
-    size = max(offsets) + 1
-    xref_off = len(out)
-    out.extend(b"xref\n0 %d\n0000000000 65535 f \n" % size)
-    for n in range(1, size):
-        out.extend(b"%010d 00000 n \n" % offsets[n])
-    out.extend(
-        b"trailer\n<< /Size %d /Root 1 0 R /Info 6 0 R >>\n"
-        b"startxref\n%d\n%%%%EOF\n" % (size, xref_off)
-    )
-    return bytes(out)
+        meta_id,
+        extra=[(7, b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /"
+                   + base_font + b" /CIDSystemInfo << /Registry (Adobe) "
+                   b"/Ordering (Identity) /Supplement 0 >>"
+                   + extra_descendant + b" >>"),
+               (8, stream_object("<< >>", tounicode))])
+
+
+def _vertical_ops(text: str, col_chars: int) -> bytes:
+    """Content of the vertical generators: the transliterated text in
+    ``col_chars`` columns, one hex show per column."""
+    vtext = normalize_for_pdf(text).translate(_ASCII_TO_CJK)
+    n_cols = max(1, (len(vtext) + col_chars - 1) // col_chars)
+    pitch = 80.0  # x distance between column origins (> 60pt col gap)
+    ops = []
+    # physical left-to-right emission = reading order REVERSED:
+    # physical slot p holds reading column j = n_cols-1-p
+    for p in range(n_cols):
+        j = n_cols - 1 - p
+        chunk = vtext[j * col_chars:(j + 1) * col_chars]
+        if not chunk:
+            continue
+        x = 72.0 + p * pitch
+        hexs = "".join(f"{ord(c):04X}" for c in chunk)
+        ops.append(f"BT /F1 12 Tf {x:.2f} 740 Td <{hexs}> Tj ET ")
+    return "".join(ops).encode("latin-1")
 
 
 def text_to_pdf_vertical(text: str, meta_id: int = 0,
@@ -1195,24 +786,10 @@ def text_to_pdf_vertical(text: str, meta_id: int = 0,
     No FontFile is embedded: horizontal widths never matter in
     vertical mode, and the vertical advance comes from the /DW2
     default (−1000 glyph units = one 12pt em per glyph here)."""
-    vtext = normalize_for_pdf(text).translate(_ASCII_TO_CJK)
-    n_cols = max(1, (len(vtext) + col_chars - 1) // col_chars)
-    pitch = 80.0  # x distance between column origins (> 60pt col gap)
-    ops = []
-    # physical left-to-right emission = reading order REVERSED:
-    # physical slot p holds reading column j = n_cols-1-p
-    for p in range(n_cols):
-        j = n_cols - 1 - p
-        chunk = vtext[j * col_chars:(j + 1) * col_chars]
-        if not chunk:
-            continue
-        x = 72.0 + p * pitch
-        hexs = "".join(f"{ord(c):04X}" for c in chunk)
-        ops.append(f"BT /F1 12 Tf {x:.2f} 740 Td <{hexs}> Tj ET ")
-    content = "".join(ops).encode("latin-1")
     return _emit_identity_type0_pdf(
-        content, b"VertCJK", b"Identity-V", b"pdfspark-vert-identity",
-        b"<4E00> <4E19> <4E00>", meta_id)
+        _vertical_ops(text, col_chars), b"VertCJK", b"Identity-V",
+        b"pdfspark-vert-identity", b"<4E00> <4E19> <4E00>", meta_id)
+
 
 
 # /W2 overrides for text_to_pdf_vertical_w2, exercising BOTH entry
@@ -1245,22 +822,9 @@ def text_to_pdf_vertical_w2(text: str, meta_id: int = 0,
     GEOMETRY assertions (per-glyph y deltas from positions=True) prove
     the per-CID displacement is applied — a uniform-/DW2 kernel
     reproduces the text but provably not the positions."""
-    vtext = normalize_for_pdf(text).translate(_ASCII_TO_CJK)
-    n_cols = max(1, (len(vtext) + col_chars - 1) // col_chars)
-    pitch = 80.0
-    ops = []
-    for p in range(n_cols):
-        j = n_cols - 1 - p
-        chunk = vtext[j * col_chars:(j + 1) * col_chars]
-        if not chunk:
-            continue
-        x = 72.0 + p * pitch
-        hexs = "".join(f"{ord(c):04X}" for c in chunk)
-        ops.append(f"BT /F1 12 Tf {x:.2f} 740 Td <{hexs}> Tj ET ")
-    content = "".join(ops).encode("latin-1")
     return _emit_identity_type0_pdf(
-        content, b"VertW2CJK", b"Identity-V", b"pdfspark-vert-w2",
-        b"<4E00> <4E19> <4E00>", meta_id,
+        _vertical_ops(text, col_chars), b"VertW2CJK", b"Identity-V",
+        b"pdfspark-vert-w2", b"<4E00> <4E19> <4E00>", meta_id,
         extra_descendant=_VERT_W2_DESCENDANT)
 
 

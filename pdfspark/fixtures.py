@@ -26,6 +26,51 @@ class Case(NamedTuple):
     expected_annots: Optional[str] = None  # "\n"-joined, None = no annots
 
 
+# ------------------------------------------------------------------ writer
+
+_HEADER = b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n"
+_FREE = b"0000000000 65535 f \n"
+
+
+def _object_parts(objects) -> Tuple[list, Dict[int, int], int]:
+    """Header plus each ``(num, body)`` pair as ``num 0 obj``, in the
+    given order: the byte parts, every object's offset, and the end
+    offset."""
+    parts = [_HEADER]
+    offsets: Dict[int, int] = {}
+    pos = len(_HEADER)
+    for num, body in objects:
+        head = b"%d 0 obj\n" % num
+        offsets[num] = pos
+        parts += (head, body, b"\nendobj\n")
+        pos += len(head) + len(body) + 8
+    return parts, offsets, pos
+
+
+def write_pdf(objects, root: int, trailer_extra: str = "") -> bytes:
+    """The one classic-xref PDF writer (golden corpus and docgen alike):
+    ``(num, body)`` pairs serialized in the CALLER's order, then an xref
+    table over 0..max(num) with a free entry for every missing number,
+    then the trailer (``trailer_extra`` goes after /Root)."""
+    parts, offsets, xref_off = _object_parts(objects)
+    size = max(offsets) + 1
+    parts.append(b"xref\n0 %d\n" % size + _FREE)
+    parts += [b"%010d 00000 n \n" % offsets[n] if n in offsets else _FREE
+              for n in range(1, size)]
+    parts.append(b"trailer\n<< /Size %d /Root %d 0 R%s >>\n"
+                 b"startxref\n%d\n%%%%EOF\n"
+                 % (size, root, trailer_extra.encode(), xref_off))
+    return b"".join(parts)
+
+
+def stream_object(dict_src: str, data: bytes) -> bytes:
+    """Stream object body: ``dict_src`` with /Length appended last."""
+    d = dict_src.strip()
+    assert d.startswith("<<") and d.endswith(">>")
+    return b"%s /Length %d >>\nstream\n%s\nendstream" % (
+        d[:-2].rstrip().encode("latin-1"), len(data), data)
+
+
 # ------------------------------------------------------------------ builder
 
 class PdfBuilder:
@@ -50,14 +95,7 @@ class PdfBuilder:
 
     def add_stream(self, dict_src: str, data: bytes,
                    num: Optional[int] = None) -> int:
-        d = dict_src.strip()
-        assert d.startswith("<<") and d.endswith(">>")
-        body = (
-            d[:-2].rstrip().encode("latin-1")
-            + b" /Length " + str(len(data)).encode()
-            + b" >>\nstream\n" + data + b"\nendstream"
-        )
-        return self.add(body, num)
+        return self.add(stream_object(dict_src, data), num)
 
     def build(self, root: int, use_xref_stream: bool = False,
               objstm: Optional[List[int]] = None,
@@ -67,8 +105,6 @@ class PdfBuilder:
         xref-stream mode, since classic tables cannot express type-2
         entries). free: object numbers emitted as a linked type-0 free
         CHAIN in the xref stream (each points at the next, last at 0)."""
-        out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-        offsets: Dict[int, int] = {}
         compressed: Dict[int, Tuple[int, int]] = {}
         objstm = objstm or []
         if objstm:
@@ -92,53 +128,38 @@ class PdfBuilder:
             emit.append((container_num, container_body))
         else:
             emit = [(n, self.objects[n]) for n in sorted(self.objects)]
-        for num, body in emit:
-            offsets[num] = len(out)
-            out += f"{num} 0 obj\n".encode() + body + b"\nendobj\n"
-        if use_xref_stream:
-            xref_num = max(list(offsets) + list(compressed)) + 1
-            size = xref_num + 1
-            rows = bytearray()
-            index: List[int] = []
-            entries = {}
-            for n, off in offsets.items():
-                entries[n] = (1, off, 0)
-            for n, (cnum, idx) in compressed.items():
-                entries[n] = (2, cnum, idx)
-            entries[xref_num] = (1, len(out), 0)
-            entries[0] = (0, 0, 65535)
-            chain = list(free or [])
-            for i, n in enumerate(chain):
-                nxt = chain[i + 1] if i + 1 < len(chain) else 0
-                entries[n] = (0, nxt, 1)
-            for n in sorted(entries):
-                t, a, b = entries[n]
-                index += [n, 1]
-                rows += struct.pack(">B", t) + struct.pack(">I", a) + struct.pack(">H", b)
-            data = zlib.compress(bytes(rows))
-            idx_str = " ".join(str(i) for i in index)
-            xref_off = len(out)
-            out += (
-                f"{xref_num} 0 obj\n<< /Type /XRef /W [1 4 2] /Index [{idx_str}]"
-                f" /Size {size} /Root {root} 0 R{trailer_extra}"
-                f" /Filter /FlateDecode /Length {len(data)} >>\nstream\n"
-            ).encode() + data + b"\nendstream\nendobj\n"
-            out += f"startxref\n{xref_off}\n%%EOF\n".encode()
-        else:
-            size = max(offsets) + 1
-            xref_off = len(out)
-            out += b"xref\n"
-            out += f"0 {size}\n".encode()
-            out += b"0000000000 65535 f \n"
-            for n in range(1, size):
-                if n in offsets:
-                    out += f"{offsets[n]:010d} 00000 n \n".encode()
-                else:
-                    out += b"0000000000 65535 f \n"
-            out += (
-                f"trailer\n<< /Size {size} /Root {root} 0 R{trailer_extra} >>\n"
-                f"startxref\n{xref_off}\n%%EOF\n"
-            ).encode()
+        if not use_xref_stream:
+            return write_pdf(emit, root, trailer_extra)
+        parts, offsets, _ = _object_parts(emit)
+        out = bytearray(b"".join(parts))
+        xref_num = max(list(offsets) + list(compressed)) + 1
+        size = xref_num + 1
+        rows = bytearray()
+        index: List[int] = []
+        entries = {}
+        for n, off in offsets.items():
+            entries[n] = (1, off, 0)
+        for n, (cnum, idx) in compressed.items():
+            entries[n] = (2, cnum, idx)
+        entries[xref_num] = (1, len(out), 0)
+        entries[0] = (0, 0, 65535)
+        chain = list(free or [])
+        for i, n in enumerate(chain):
+            nxt = chain[i + 1] if i + 1 < len(chain) else 0
+            entries[n] = (0, nxt, 1)
+        for n in sorted(entries):
+            t, a, b = entries[n]
+            index += [n, 1]
+            rows += struct.pack(">B", t) + struct.pack(">I", a) + struct.pack(">H", b)
+        data = zlib.compress(bytes(rows))
+        idx_str = " ".join(str(i) for i in index)
+        xref_off = len(out)
+        out += (
+            f"{xref_num} 0 obj\n<< /Type /XRef /W [1 4 2] /Index [{idx_str}]"
+            f" /Size {size} /Root {root} 0 R{trailer_extra}"
+            f" /Filter /FlateDecode /Length {len(data)} >>\nstream\n"
+        ).encode() + data + b"\nendstream\nendobj\n"
+        out += f"startxref\n{xref_off}\n%%EOF\n".encode()
         return bytes(out)
 
 

@@ -701,6 +701,13 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
                     .select("doc_id", "text", "lang"), page_row, PAGES_SCHEMA)
 
 
+def doc_id_from_url() -> "F.Column":
+    """The ``doc_id`` column parsed back out of a _synth_page url
+    (``https://corpus.test/{i:08d}.pdf``)."""
+    return (F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long")
+            .alias("doc_id"))
+
+
 def _synth_page(i: int, text: str, lang, fmt: str,
                 non_pdf_every: int) -> tuple:
     """One synthetic (url, payload) row — shared by pages_from_documents

@@ -29,7 +29,7 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pdfspark.pipeline import (_documents_repartitioned, _table_repartitioned,
-                               map_rows)
+                               doc_id_from_url, map_rows)
 from pdfspark.textops import minhash_band_sigs
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -98,7 +98,7 @@ def pdf_extract_roundtrip(spark, sf_dir):
 
     ext = roundtrip_extract(spark, sf_dir)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -159,7 +159,7 @@ def pdf_spans(spark, sf_dir):
 
     ext = extract_pages(pages_from_documents(spark, sf_dir), resalt=False)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         F.explode("spans").alias("s"),
     ).select(
         "doc_id",
@@ -2529,7 +2529,7 @@ def pdf_regression_join(spark, sf_dir):
     )
     ext = extract_pages(pages_from_documents(spark, sf_dir), resalt=False)
     got = ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
     j = got.join(docs, "doc_id")
@@ -2559,7 +2559,7 @@ def html_extract_roundtrip(spark, sf_dir):
 
     ext = roundtrip_extract(spark, sf_dir, fmt="html")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -2579,10 +2579,7 @@ def mixed_corpus_extract(spark, sf_dir):
     pages = pages_from_documents(spark, sf_dir, fmt="mixed")
     ext = extract_pages(pages, prefilter=False, resalt=False)
     return (
-        ext.withColumn(
-            "doc_id",
-            F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long"),
-        )
+        ext.withColumn("doc_id", doc_id_from_url())
         .groupBy(
             F.when(F.col("doc_id") % 2 == 1, "html").otherwise("pdf").alias("fmt")
         )
@@ -2621,7 +2618,7 @@ def pdf_doc_metadata(spark, sf_dir):
         pages_from_documents(spark, sf_dir, fmt="pdf_labels"),
         resalt=False)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "doc_title",
         "created",
         "page_labels",
@@ -2650,7 +2647,7 @@ def pdf_annots_text(spark, sf_dir):
         pages_from_documents(spark, sf_dir, fmt="pdf_annot"), resalt=False
     )
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "annots_text",
     )
 
@@ -2677,7 +2674,7 @@ def pdf_attachments(spark, sf_dir):
         pages_from_documents(spark, sf_dir, fmt="pdf_annot"), resalt=False
     )
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "attachments",
     )
 
@@ -2719,7 +2716,7 @@ def pdf_outlines(spark, sf_dir):
         resalt=False
     )
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "outlines_text",
         "outline_pages",
     )
@@ -2741,7 +2738,7 @@ def pdf_kerned_wordbreak(spark, sf_dir):
 
     ext = columns_reading_order_extract(spark, sf_dir, fmt="pdf_kerned")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -2771,7 +2768,7 @@ def pdf_cjk_embedded_widths(spark, sf_dir):
 
     ext = columns_reading_order_extract(spark, sf_dir, fmt="pdf_cjk")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -2802,7 +2799,7 @@ def pdf_vertical_reading_order(spark, sf_dir):
     ext = columns_reading_order_extract(
         spark, sf_dir, fmt="pdf_vertical", layout="vertical")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -2832,7 +2829,7 @@ def pdf_rtl_reading_order(spark, sf_dir):
     ext = columns_reading_order_extract(
         spark, sf_dir, fmt="pdf_rtl", layout="rtl")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -2864,7 +2861,7 @@ def pdf_bidi_reading_order(spark, sf_dir):
     ext = columns_reading_order_extract(
         spark, sf_dir, fmt="pdf_bidi", layout="bidi")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -2885,7 +2882,7 @@ def pdf_post_glyph_names(spark, sf_dir):
 
     ext = roundtrip_extract(spark, sf_dir, fmt="pdf_post")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -2908,7 +2905,7 @@ def pdf_density_columns(spark, sf_dir):
     ext = columns_reading_order_extract(
         spark, sf_dir, fmt="pdf_narrow_gutter", layout="density")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -2952,8 +2949,7 @@ def pdf_table_cells(spark, sf_dir):
 
     ext = table_cells_extract(spark, sf_dir)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long")
-        .alias("doc_id"),
+        doc_id_from_url(),
         "row_idx", "col_idx", "cell_text",
     )
 
@@ -3022,8 +3018,7 @@ def _table_ragged_impl(spark, sf_dir):
 
     ext = table_cells_extract(spark, sf_dir, fmt="pdf_table_ragged")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long")
-        .alias("doc_id"),
+        doc_id_from_url(),
         "row_idx", "col_idx", "cell_text",
     )
 
@@ -3067,8 +3062,7 @@ def _table_header_impl(spark, sf_dir):
     ext = table_cells_extract(spark, sf_dir, fmt="pdf_table_header",
                               flagged=True)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long")
-        .alias("doc_id"),
+        doc_id_from_url(),
         "row_idx", "col_idx", "cell_text", "is_header",
     )
 
@@ -3121,8 +3115,7 @@ def _table_colspan_impl(spark, sf_dir):
     ext = table_cells_extract(spark, sf_dir, fmt="pdf_table_colspan",
                               spanned=True)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long")
-        .alias("doc_id"),
+        doc_id_from_url(),
         "row_idx", "col_idx", "cell_text", "col_span",
     )
 
@@ -3138,8 +3131,7 @@ def _table_sparse_impl(spark, sf_dir):
 
     ext = table_cells_extract(spark, sf_dir, fmt="pdf_table_sparse")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long")
-        .alias("doc_id"),
+        doc_id_from_url(),
         "row_idx", "col_idx", "cell_text",
     )
 
@@ -3166,8 +3158,7 @@ def _table_multipage_impl(spark, sf_dir):
     ext = table_cells_extract(spark, sf_dir, fmt="pdf_table_multipage",
                               continued=True)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long")
-        .alias("doc_id"),
+        doc_id_from_url(),
         "row_idx", "col_idx", "cell_text",
     )
 
@@ -3500,7 +3491,7 @@ def pdf_layout_mix_extract(spark, sf_dir):
 
     ext = columns_reading_order_extract(spark, sf_dir, fmt="pdf_layout_mix")
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -3526,7 +3517,7 @@ def pdf_link_uris(spark, sf_dir):
         pages_from_documents(spark, sf_dir, fmt="pdf_annot"), resalt=False
     )
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "links_uri",
     )
 
@@ -3744,7 +3735,7 @@ def html_doc_titles(spark, sf_dir):
     pages = pages_from_documents(spark, sf_dir, fmt="html")
     ext = extract_pages(pages, prefilter=False, resalt=False)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "doc_title",
         "doc_lang",
     )
@@ -4412,7 +4403,7 @@ def pdf_multipage_spans(spark, sf_dir):
         pages_from_documents(spark, sf_dir, fmt="pdf_multi"), resalt=False
     )
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         F.explode("spans").alias("s"),
     ).select(
         "doc_id",
@@ -4443,7 +4434,7 @@ def pdf_multipage_roundtrip(spark, sf_dir):
         pages_from_documents(spark, sf_dir, fmt="pdf_multi"), resalt=False
     )
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -4880,7 +4871,7 @@ def pdf_extract_skew_aware(spark, sf_dir):
     pages = pages_from_documents(spark, sf_dir)
     ext = extract_pages_skew_aware(pages, big_cutoff_bytes=2000)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 
@@ -4900,7 +4891,7 @@ def pdf_struct_reading_order(spark, sf_dir):
     ext = extract_pages_struct(
         pages_from_documents(spark, sf_dir, fmt="pdf_tagged"))
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "struct_text",
     )
 
@@ -4920,7 +4911,7 @@ def pdf_columns_reading_order(spark, sf_dir):
 
     ext = columns_reading_order_extract(spark, sf_dir)
     return ext.select(
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long").alias("doc_id"),
+        doc_id_from_url(),
         "text",
     )
 

@@ -520,10 +520,12 @@ def run_minhash_stream_dedup_once(
     parquet table under output_dir. Completes the
     streaming-equals-batch story for the dedup family: the drained
     output must equal dedup_incremental_minhash's batch answer
-    (test-pinned drain equivalence)."""
-    # static per stream: cache the index and its hot-band filter so no
-    # micro-batch re-reads the parquet or reruns the aggregation
-    index = spark.read.parquet(index_dir).persist()
+    (test-pinned drain equivalence). ``index_dir`` is a maintained
+    band index, read once through read_band_index (base + increments
+    − tombstones) before the drain starts."""
+    # static per stream: cache the live index and its hot-band filter so
+    # no micro-batch re-reads the parquet or reruns the aggregation
+    index = read_band_index(spark, index_dir).persist()
     hist_sized = sized_bands(index).persist()
     hist_sized.count()  # materialize both caches before the first batch
 
@@ -703,10 +705,11 @@ def run_curation_stream_once(
     timeout_s: Optional[int] = 120,
 ) -> bool:
     """Drain a (doc_id, text) parquet stream through curation_stream
-    against the static digest index at ``index_dir``, into the
+    against the maintained digest index at ``index_dir`` (its
+    read_digest_index live view, read once before the drain), into the
     transactional parquet file sink (exactly-once via the
     _spark_metadata manifest, like the standalone packer runner)."""
-    hist = spark.read.parquet(index_dir).persist()
+    hist = read_digest_index(spark, index_dir).select("digest").persist()
     hist.count()  # materialize before the first batch
     docs = _read_parquet_stream(spark, input_dir, _DOCS_SCHEMA)
     try:
@@ -802,7 +805,17 @@ def _read_live_index(spark: SparkSession, index_dir: str, schema: str,
     special-casing. The base stays bucketed from the last compaction
     and increments are small, so the tombstone anti-join is the only
     join on the read path and no full-index aggregation runs at read
-    cadence (that happens in compaction)."""
+    cadence (that happens in compaction).
+
+    A flat snapshot (parquet files loose at the top of ``index_dir``)
+    raises ValueError: reading it as "no base, no increments" would
+    mean no history, i.e. keep every duplicate."""
+    if os.path.isdir(index_dir) and any(
+            f.endswith(".parquet") for f in os.listdir(index_dir)):
+        raise ValueError(
+            f"{index_dir} holds loose parquet files: a maintained index "
+            "is base/ plus batch_id=N increments, so write a flat "
+            "snapshot to <index_dir>/base")
     paths = []
     base = os.path.join(index_dir, "base")
     if os.path.isdir(base):
@@ -1478,12 +1491,15 @@ def gram_hash_grams(docs: DataFrame, n: int = 20) -> DataFrame:
 
 
 def build_gram_index(docs: DataFrame, n: int = 20) -> DataFrame:
-    """Historic n-gram digest index from a (doc_id, text) corpus: the
-    DISTINCT digests of every overlapping word n-gram — the static
-    table the streaming excision joins against (the streaming sibling
-    of dedup_substring_spans' self-groupBy dup set; at 10^12 scale
-    this is written bucketed by digest once per corpus rebuild)."""
-    return gram_hash_grams(docs, n).select("h").distinct()
+    """Historic n-gram digest index from a (doc_id, text) corpus: one
+    (h, first_doc) row per DISTINCT digest of an overlapping word
+    n-gram, keeper = min doc_id — the maintained gram index's row
+    shape, written as its ``base``, which the streaming excision joins
+    against (the streaming sibling of dedup_substring_spans'
+    self-groupBy dup set; at 10^12 scale this is written bucketed by
+    digest once per corpus rebuild)."""
+    return gram_hash_grams(docs, n).groupBy("h").agg(
+        F.min("doc_id").alias("first_doc"))
 
 
 def covered_slots(spans: DataFrame, n: int) -> DataFrame:
@@ -1690,8 +1706,9 @@ def run_substring_excise_stream_once(
     other). Sink is EXACTLY-ONCE by the same batch_id=N subpath +
     overwrite contract as the minhash stream dedup (ADVICE r4 #2).
     Drain equals the batch function over the union of all inputs
-    (test-pinned)."""
-    index = spark.read.parquet(index_dir).persist()
+    (test-pinned). ``index_dir`` is a maintained gram index, read once
+    through read_gram_index before the drain starts."""
+    index = read_gram_index(spark, index_dir).select("h").persist()
     index.count()  # materialize before the first batch
 
     def excise(batch_df: DataFrame, batch_id: int) -> None:

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pdfspark.corpus import all_cases
 from pdfspark.pipeline import (
     PAGES_SCHEMA,
+    doc_id_from_url,
     error_breakdown,
     extract_pages,
     filter_pdf_rows,
@@ -118,10 +119,7 @@ def test_documents_roundtrip(spark):
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     expected = {r.doc_id: r.text for r in docs.collect()}
     pages = pages_from_documents(spark, SF_DIR)
-    out = extract_pages(pages).withColumn(
-        "doc_id",
-        F.regexp_extract("url", r"/(\d+)\.pdf$", 1).cast("long"),
-    )
+    out = extract_pages(pages).withColumn("doc_id", doc_id_from_url())
     rows = out.select("doc_id", "text", "error").collect()
     assert len(rows) == len(expected)
     for r in rows:

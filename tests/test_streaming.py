@@ -456,8 +456,9 @@ def test_minhash_stream_dedup_drain_equals_batch(spark, tmp_path):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .filter("doc_id < 300").select("doc_id", "text")
-    # historic index = the originals' bands (precomputed-table shape)
-    build_band_index(docs).write.mode("overwrite").parquet(idx_dir)
+    # historic index = the originals' bands, as a maintained index's base
+    build_band_index(docs).write.mode("overwrite").parquet(
+        f"{idx_dir}/base")
     # the new increment = the synthesized 80%-prefix mutants, split
     # into several parquet files so the drain spans micro-batches
     mutants = [
@@ -1016,6 +1017,7 @@ def test_substring_excise_stream_matches_batch(spark, tmp_path):
     touched)."""
     from pdfspark.streaming import (
         build_gram_index,
+        read_gram_index,
         run_substring_excise_stream_once,
         substring_excise_against_index,
     )
@@ -1031,7 +1033,8 @@ def test_substring_excise_stream_matches_batch(spark, tmp_path):
         [(1, f"history opens here {passage} and closes here"),
          (2, "another record with wholly different words inside")],
         "doc_id long, text string")
-    build_gram_index(hist, n).write.mode("overwrite").parquet(idx_dir)
+    build_gram_index(hist, n).write.mode("overwrite").parquet(
+        f"{idx_dir}/base")
 
     batches = [
         # span of the history passage embedded mid-doc
@@ -1053,7 +1056,7 @@ def test_substring_excise_stream_matches_batch(spark, tmp_path):
         (r.doc_id, r.text, r.removed_words)
         for r in spark.read.parquet(out_dir).collect()
     }
-    index = spark.read.parquet(idx_dir)
+    index = read_gram_index(spark, idx_dir).select("h")
     union = spark.createDataFrame(
         [row for chunk in batches for row in chunk],
         "doc_id long, text string")
@@ -1243,9 +1246,10 @@ def test_curation_stream_matches_batch_composition(spark, tmp_path):
     out_dir = str(tmp_path / "cout")
     ckpt = str(tmp_path / "cckpt")
     spark.createDataFrame(
-        [(hashlib.md5(dup_text.encode()).hexdigest(),),
-         (hashlib.md5(b"unrelated history text").hexdigest(),)],
-        "digest string").write.mode("overwrite").parquet(idx_dir)
+        [(hashlib.md5(dup_text.encode()).hexdigest(), 900),
+         (hashlib.md5(b"unrelated history text").hexdigest(), 901)],
+        "digest string, first_doc long").write.mode("overwrite").parquet(
+        f"{idx_dir}/base")
     for i, chunk in enumerate(batches):
         spark.createDataFrame(chunk, "doc_id long, text string") \
             .coalesce(1).write.mode("append").parquet(in_dir)
@@ -1393,6 +1397,81 @@ def test_band_index_tombstone_changes_decisions(spark, tmp_path):
         idx.unpersist(blocking=False)
     assert got[101] == (1, None)   # history tombstoned: admitted
     assert got[102] == (0, 2)      # history alive: still a dup
+
+
+def test_minhash_stream_reads_maintained_band_index(spark, tmp_path):
+    """The stream decision face drains against a MAINTAINED band index
+    (base + delta increment + tombstone), not a flat snapshot: the
+    drained decisions equal minhash_dedup_decisions against
+    read_band_index's live view, so delta rows dedup and tombstoned
+    history does not."""
+    from pdfspark.streaming import (build_band_index,
+                                    minhash_dedup_decisions,
+                                    read_band_index,
+                                    run_band_index_append_stream_once,
+                                    run_band_tombstone_stream_once,
+                                    run_minhash_stream_dedup_once)
+
+    import random
+
+    rng = random.Random(17)  # 40 docs, no two sharing a band
+    rows = [(i, " ".join(f"tok{rng.randrange(5000)}" for _ in range(60)))
+            for i in range(40)]
+    schema = "doc_id long, text string"
+    idx = str(tmp_path / "mbidx")
+    build_band_index(spark.createDataFrame(rows[:20], schema)) \
+        .write.parquet(f"{idx}/base")
+    spark.createDataFrame(rows[20:], schema).coalesce(1) \
+        .write.parquet(str(tmp_path / "mbadds"))
+    assert run_band_index_append_stream_once(
+        spark, str(tmp_path / "mbadds"), idx, str(tmp_path / "mbck_a"))
+    dead = [0, 25]
+    spark.createDataFrame([(i,) for i in dead], "hist_id long") \
+        .coalesce(1).write.parquet(str(tmp_path / "mbdels"))
+    assert run_band_tombstone_stream_once(
+        spark, str(tmp_path / "mbdels"), idx, str(tmp_path / "mbck_d"))
+
+    # the increment: byte copies of every historic doc, in two files
+    copies = [(d + 1000, t) for d, t in rows]
+    in_dir = str(tmp_path / "mbin")
+    for half in (copies[::2], copies[1::2]):
+        spark.createDataFrame(half, schema).coalesce(1) \
+            .write.mode("append").parquet(in_dir)
+    out = str(tmp_path / "mbout")
+    assert run_minhash_stream_dedup_once(
+        spark, in_dir, idx, out, str(tmp_path / "mbck"))
+
+    streamed = {(r.doc_id, r.dup_of, r.keep)
+                for r in spark.read.parquet(out).collect()}
+    live = read_band_index(spark, idx).persist()
+    try:
+        expected = {
+            (r.doc_id, r.dup_of, r.keep)
+            for r in minhash_dedup_decisions(
+                spark.createDataFrame(copies, schema), live).collect()}
+    finally:
+        live.unpersist(blocking=False)
+    assert streamed == expected
+    assert len(streamed) == len(copies)
+    dup_of = {d: h for d, h, _ in streamed}
+    assert any(20 <= (h or -1) < 40 for h in dup_of.values())  # delta
+    assert not set(dup_of.values()) & set(dead)  # tombstones subtracted
+
+
+def test_live_index_refuses_flat_snapshot(spark, tmp_path):
+    """A flat parquet snapshot at the index root is not a maintained
+    index: the live view raises instead of reading it as empty history
+    (which would keep every duplicate)."""
+    import re
+
+    from pdfspark.streaming import read_band_index, read_gram_index
+
+    idx = str(tmp_path / "flat")
+    spark.createDataFrame([(1, 0, "s")], "hist_id long, band int, sig string") \
+        .write.parquet(idx)
+    for read in (read_band_index, read_gram_index):
+        with pytest.raises(ValueError, match=re.escape(idx)):
+            read(spark, idx)
 
 
 def test_gram_index_compaction_cross_drain(spark, tmp_path):
@@ -2561,16 +2640,15 @@ def test_digest_index_maintenance_lifecycle(spark, tmp_path):
 
 def test_digest_index_feeds_curation_stream(spark, tmp_path):
     """Production composition of the fourth family: the curation
-    stream's hist_digests input is the maintained digest index's live
-    view (read_digest_index(...).select("digest"), written at drain
-    cadence). After a keeper takedown, a recrawl of the taken-down
-    content SURVIVES curation — it is no longer history — while a
-    copy of live history is still dropped by the digest anti-join."""
+    stream reads the maintained digest index directly (its
+    read_digest_index live view). After a keeper takedown, a recrawl
+    of the taken-down content SURVIVES curation — it is no longer
+    history — while a copy of live history is still dropped by the
+    digest anti-join."""
     import hashlib
     import os as _os
 
-    from pdfspark.streaming import (read_digest_index,
-                                    run_curation_stream_once,
+    from pdfspark.streaming import (run_curation_stream_once,
                                     run_digest_index_append_stream_once,
                                     run_digest_tombstone_stream_once)
 
@@ -2607,16 +2685,11 @@ def test_digest_index_feeds_curation_stream(spark, tmp_path):
     assert run_digest_tombstone_stream_once(
         spark, str(tmp_path / "cfdel"), idx, str(tmp_path / "cfckt"))
 
-    # drain-cadence handoff: live view → the curation stream's index
-    hist_dir = str(tmp_path / "cfhist")
-    read_digest_index(spark, idx).select("digest") \
-        .write.parquet(hist_dir)
-
     feed(str(tmp_path / "cfbatch"), [[(100, tx), (101, ty)]],
          "doc_id long, text string", t0=1_800_000_000)
     out = str(tmp_path / "cfout")
     assert run_curation_stream_once(
-        spark, str(tmp_path / "cfbatch"), hist_dir, out,
+        spark, str(tmp_path / "cfbatch"), idx, out,
         str(tmp_path / "cfckc"))
     kept = {r.doc_id for r in spark.read.parquet(out).collect()}
     assert 100 in kept       # recrawl of taken-down content survives

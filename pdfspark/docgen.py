@@ -434,8 +434,9 @@ def text_to_pdf_cjk_kerned(text: str, meta_id: int = 0,
     ops = []
     for row_start in range(0, len(words), words_per_line):
         line = words[row_start : row_start + words_per_line]
-        tj = " ".join(
-            f"<{w.encode('gbk').hex().upper()}> -400" for w in line
+        tj = " ".join(  # letters GBK lacks degrade to "?" like other fmts
+            f"<{w.encode('gbk', 'replace').hex().upper()}> -400"
+            for w in line
         )
         tj = tj.rsplit(" -400", 1)[0]  # no trailing kern
         y = 740 - 14 * (row_start // words_per_line)

@@ -17,7 +17,14 @@ from typing import Dict, List, Optional
 
 from pdfspark.kernel.filters import decode_stream
 from pdfspark.kernel.lexer import Lexer
-from pdfspark.kernel.objects import Name, PdfError, Reference, Stream
+from pdfspark.kernel.name_tree import walk_tree
+from pdfspark.kernel.objects import (
+    Name,
+    PdfError,
+    Reference,
+    Stream,
+    decode_text_string,
+)
 from pdfspark.kernel.xref import XrefTable, parse_xref_chain
 
 _MAX_RESOLVE_DEPTH = 64
@@ -42,6 +49,8 @@ class PdfDocument:
         self.trailer = self.xref.trailer
         self._cache: Dict[int, object] = {}
         self._objstm_cache: Dict[int, tuple] = {}
+        self._catalog: Optional[dict] = None
+        self._named_dests: Optional[Dict[str, object]] = None
         self.security = None
         enc = self.resolve(self.trailer.get("Encrypt"))
         if enc is not None:
@@ -245,14 +254,23 @@ class PdfDocument:
 
     # ------------------------------------------------------------ page tree
 
+    def catalog(self) -> dict:
+        """The document catalog (/Root), read once per document; every
+        catalog surface (pages, outlines, names, forms, labels, XMP,
+        structure) starts here. Raises ``catalog`` when /Root is not a
+        dictionary."""
+        if self._catalog is None:
+            catalog = self.resolve(self.trailer.get("Root"))
+            if not isinstance(catalog, dict):
+                raise PdfError("catalog", "missing /Root catalog")
+            self._catalog = catalog
+        return self._catalog
+
     def pages(self) -> List[dict]:
         """Walk the page tree worklist-style with a visited-set cycle guard
         (reference: `src/lib.rs:211-271`), materializing inheritable
         attributes (`src/page.rs:52-90`) into each leaf dict."""
-        catalog = self.resolve(self.trailer.get("Root"))
-        if not isinstance(catalog, dict):
-            raise PdfError("catalog", "missing /Root catalog")
-        root_ref = catalog.get("Pages")
+        root_ref = self.catalog().get("Pages")
         root = self.resolve(root_ref)
         if not isinstance(root, dict):
             raise PdfError("pages", "missing /Pages root")
@@ -319,10 +337,32 @@ class PdfDocument:
 
     # ------------------------------------------------------------- metadata
 
+    def named_destinations(self) -> Dict[str, object]:
+        """The named-destination table (PDF 12.3.2.3), built on first
+        use and then shared by every destination of the document: the
+        catalog /Dests dictionary (PDF 1.1 form), then the /Names /Dests
+        name tree in walk order. The first definition of a name wins;
+        values stay unresolved."""
+        if self._named_dests is None:
+            table: Dict[str, object] = {}
+            try:
+                catalog = self.catalog()
+                dests = self.get(catalog, "Dests")
+                if isinstance(dests, dict):
+                    table.update((str(k), v) for k, v in dests.items())
+                names = self.get(catalog, "Names")
+                if isinstance(names, dict):
+                    for k, v in walk_tree(self, names.get("Dests")):
+                        if v is not None:  # a null entry defines nothing
+                            table.setdefault(decode_text_string(k), v)
+            except PdfError:
+                pass
+            self._named_dests = table
+        return self._named_dests
+
     def lang(self) -> Optional[str]:
         try:
-            catalog = self.resolve(self.trailer.get("Root"))
-            v = self.get(catalog, "Lang") if isinstance(catalog, dict) else None
+            v = self.get(self.catalog(), "Lang")
             if isinstance(v, bytes):
                 return v.decode("latin-1", "replace")
             return str(v) if isinstance(v, (str, Name)) else None

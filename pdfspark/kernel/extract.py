@@ -44,7 +44,15 @@ from typing import Dict, List, NamedTuple, Optional, Tuple
 from pdfspark.kernel.content import tokenize_content
 from pdfspark.kernel.document import PdfDocument
 from pdfspark.kernel.fonts import Font, default_font, load_font
-from pdfspark.kernel.objects import Name, PdfError, PdfString, Reference, Stream
+from pdfspark.kernel.name_tree import walk_tree
+from pdfspark.kernel.objects import (
+    Name,
+    PdfError,
+    PdfString,
+    Reference,
+    Stream,
+    decode_text_string,
+)
 from pdfspark.kernel.textstate import (
     GraphicsState,
     IDENTITY,
@@ -56,10 +64,9 @@ from pdfspark.kernel.textstate import (
 
 NEWLINE_EPS = 0.1
 _MAX_FORM_DEPTH = 16
-# One shared per-page /Annots bomb-guard across ALL annotation walkers
-# (ADVICE r3 #3): with split caps (1024 vs 512) a page with 600
-# annotations reported its links/annot text but silently dropped a
-# FileAttachment sitting past index 511.
+# Per-page /Annots bomb-guard of the one annotation pass that feeds
+# annots_text, links_uri and attachments (ADVICE r3 #3: split caps once
+# dropped a FileAttachment past index 511 while its page's text stayed)
 _MAX_ANNOTS = 1024
 
 
@@ -163,13 +170,12 @@ def extract_text(buf: bytes, positions: bool = False,
         title, created = _doc_metadata(doc)
         annot_parts: List[str] = []
         link_parts: List[str] = []
+        att_parts = _embedded_files(doc)
         for page in pages:
-            annot_parts.extend(_page_annotations(doc, page))
-            link_parts.extend(_page_link_uris(doc, page))
+            _page_annots(doc, page, annot_parts, link_parts, att_parts)
         annot_parts.extend(_acroform_field_values(doc))
         annots = "\n".join(annot_parts) if annot_parts else None
         links = "\n".join(link_parts) if link_parts else None
-        att_parts = _attachment_entries(doc, pages)
         attachments = "\n".join(att_parts) if att_parts else None
         struct_text = (_struct_text(doc, pages, page_runs)
                        if structure else None)
@@ -193,62 +199,89 @@ def extract_text(buf: bytes, positions: bool = False,
         return ExtractResult(None, [], 0, "internal", None)
 
 
-def decode_text_string(raw) -> Optional[str]:
-    """PDF text string: UTF-16BE with BOM, UTF-8 with BOM (PDF 2.0
-    §7.9.2.2), else PDFDocEncoding (≈latin-1 over the printable range —
-    the divergent code points are rare in metadata and map acceptably)."""
-    if not isinstance(raw, (bytes, PdfString)):
-        return None
-    b = bytes(raw)
-    if b[:2] == b"\xfe\xff":
-        return b[2:].decode("utf-16-be", "replace")
-    if b[:3] == b"\xef\xbb\xbf":
-        return b[3:].decode("utf-8", "replace")
-    return b.decode("latin-1", "replace")
+def _page_annots(doc: PdfDocument, page: dict, texts: List[str],
+                 links: List[str], files: List[str]) -> None:
+    """One pass over the page's /Annots (reference annotation model:
+    `src/annotation/mod.rs:19`, subtype.rs, link.rs) feeding three
+    columns, each annotation resolved once:
 
+    - ``texts`` (annots_text): the /Contents of any annotation that
+      carries one (FreeText, Text/sticky-note, …), then a Widget's
+      field value (/V, inherited per ``_field_value``);
+    - ``links`` (links_uri): a /Link's URI action (`src/actions/uri.rs`)
+      — /A /S /URI first, the /PA web-capture original as fallback;
+      Dest-only (intra-document) links carry no URI and are skipped;
+    - ``files`` (attachments): a /FileAttachment's file specification
+      as "name:size".
 
-def _page_annotations(doc: PdfDocument, page: dict) -> List[str]:
-    """User-visible annotation text (reference annotation model:
-    `src/annotation/mod.rs:19`, subtype.rs): /Contents of any annotation
-    that carries one (FreeText, Text/sticky-note, …) plus AcroForm Widget
-    field values (/V). Page order; failures skip the annotation only."""
-    out: List[str] = []
+    A failure inside one annotation drops only that annotation's
+    remaining contribution to the column being read; the page's other
+    annotations and the other pages are unaffected."""
     try:
         annots = doc.get(page, "Annots")
-        if not isinstance(annots, list):
-            return out
-        for a in annots[:_MAX_ANNOTS]:  # bomb guard
-            try:
-                a = doc.resolve(a)
-                if not isinstance(a, dict):
-                    continue
-                contents = decode_text_string(doc.resolve(a.get("Contents")))
-                if contents:
-                    out.append(contents)
-                if str(doc.get(a, "Subtype") or "") == "Widget":
-                    v = doc.resolve(a.get("V"))
-                    # AcroForm inheritance (§12.7.3.1): a widget without
-                    # its own /V takes the nearest ancestor FIELD's value
-                    # (the /Fields tree the reference parses in
-                    # `src/catalog.rs`); bounded Parent chase
-                    node, depth = a, 0
-                    while v is None and depth < 16:
-                        node = doc.resolve(node.get("Parent"))
-                        if not isinstance(node, dict):
-                            break
-                        v = doc.resolve(node.get("V"))
-                        depth += 1
-                    if isinstance(v, Name):
-                        out.append(str(v))  # choice/radio export value
-                    else:
-                        field_val = decode_text_string(v)
-                        if field_val:
-                            out.append(field_val)
-            except PdfError:
-                continue
     except PdfError:
-        pass
-    return out
+        return
+    if not isinstance(annots, list):
+        return
+    for ref in annots[:_MAX_ANNOTS]:  # bomb guard
+        try:
+            a = doc.resolve(ref)
+        except PdfError:
+            continue
+        if not isinstance(a, dict):
+            continue
+        try:
+            subtype = str(doc.get(a, "Subtype") or "")
+        except PdfError:
+            subtype = ""
+        try:
+            contents = decode_text_string(doc.resolve(a.get("Contents")))
+            if contents:
+                texts.append(contents)
+            if subtype == "Widget":
+                value = _field_value(doc, a)
+                if value is not None:
+                    texts.append(value)
+        except PdfError:
+            pass
+        try:
+            if subtype == "Link":
+                for action_key in ("A", "PA"):
+                    act = doc.resolve(a.get(action_key))
+                    if isinstance(act, dict) \
+                            and str(doc.get(act, "S") or "") == "URI":
+                        uri = doc.resolve(act.get("URI"))
+                        if isinstance(uri, (bytes, PdfString)):
+                            # URIs are 7-bit ASCII by spec (§12.6.4.7);
+                            # tolerate 8-bit dirt as utf-8-with-fallback
+                            links.append(
+                                bytes(uri).decode("utf-8", "replace"))
+                            break
+            elif subtype == "FileAttachment":
+                entry = _filespec_entry(doc, doc.get(a, "FS"))
+                if entry:
+                    files.append(entry)
+        except PdfError:
+            pass
+
+
+def _field_value(doc: PdfDocument, field: dict) -> Optional[str]:
+    """A form field's value for annots_text: its /V, else the nearest
+    ancestor field's (AcroForm inheritance, §12.7.3.1 — the /Fields tree
+    the reference parses in `src/catalog.rs`) through at most 16 /Parent
+    hops. A Name (choice/radio export value) is returned as is, a text
+    string decoded — None when it is empty or there is no value."""
+    v = doc.resolve(field.get("V"))
+    node, depth = field, 0
+    while v is None and depth < 16:
+        node = doc.resolve(node.get("Parent"))
+        if not isinstance(node, dict):
+            break
+        v = doc.resolve(node.get("V"))
+        depth += 1
+    if isinstance(v, Name):
+        return str(v)
+    return decode_text_string(v) or None
 
 
 def _acroform_field_values(doc: PdfDocument) -> List[str]:
@@ -262,8 +295,7 @@ def _acroform_field_values(doc: PdfDocument) -> List[str]:
 
     out: List[str] = []
     try:
-        catalog = doc.resolve(doc.trailer.get("Root"))
-        af = doc.get(catalog, "AcroForm") if isinstance(catalog, dict) else None
+        af = doc.get(doc.catalog(), "AcroForm")
         if not isinstance(af, dict):
             return out
         fields = doc.get(af, "Fields")
@@ -279,83 +311,61 @@ def _acroform_field_values(doc: PdfDocument) -> List[str]:
                 if ref.object_number in seen:
                     continue
                 seen.add(ref.object_number)
-            try:
+            try:  # an unreadable field drops only its own value
                 node = doc.resolve(ref)
+                if not isinstance(node, dict):
+                    continue
+                kids = doc.get(node, "Kids")
+                if isinstance(kids, list) and kids:
+                    # intermediate node: its /V is the kids' INHERITED
+                    # value (§12.7.3.1) and surfaces through them —
+                    # re-emitting here would duplicate every inheriting
+                    # widget's value. An EMPTY /Kids array is a terminal
+                    # field (some producers emit it), so it falls
+                    # through to value emission.
+                    queue.extend(kids[:512])
+                    continue
+                if str(doc.get(node, "Subtype") or "") == "Widget":
+                    continue  # the page /Annots pass owns widget fields
+                value = _field_value(doc, node)
             except PdfError:
                 continue
-            if not isinstance(node, dict):
-                continue
-            kids = doc.get(node, "Kids")
-            if isinstance(kids, list) and kids:
-                # intermediate node: its /V is the kids' INHERITED value
-                # (§12.7.3.1) and surfaces through them — re-emitting here
-                # would duplicate every inheriting widget's value. An
-                # EMPTY /Kids array is a terminal field (some producers
-                # emit it), so it falls through to value emission.
-                queue.extend(kids[:512])
-                continue
-            if str(doc.get(node, "Subtype") or "") == "Widget":
-                continue  # the page /Annots walk owns widget-merged fields
-            v = doc.resolve(node.get("V"))
-            parent, depth = node, 0
-            while v is None and depth < 16:  # inherited value chase
-                parent = doc.resolve(parent.get("Parent"))
-                if not isinstance(parent, dict):
-                    break
-                v = doc.resolve(parent.get("V"))
-                depth += 1
-            if isinstance(v, Name):
-                out.append(str(v))
-            else:
-                s = decode_text_string(v)
-                if s:
-                    out.append(s)
+            if value is not None:
+                out.append(value)
     except PdfError:
         pass
     return out
 
 
-def _attachment_entries(doc: PdfDocument, pages: List[dict]) -> List[str]:
-    """Embedded-file inventory as "name:size" lines: the catalog's
-    /Names → /EmbeddedFiles name tree (reference walks the same trees,
-    `src/data_structures/name_tree.rs` via `src/catalog.rs` Names) in
-    key order, then /FileAttachment annotations in page order. Size
-    comes from /EF /F's /Params /Size, else the raw stream /Length —
-    the payload is never decoded (attachments can be huge; a crawl
-    pipeline wants the inventory, not the bytes, in this column)."""
-    from pdfspark.kernel.name_tree import flatten_name_tree
-
+def _embedded_files(doc: PdfDocument) -> List[str]:
+    """The document half of the attachments inventory: the catalog's
+    /Names → /EmbeddedFiles name tree (the reference walks the same
+    trees, `src/data_structures/name_tree.rs` via `src/catalog.rs`
+    Names) in key order, as "name:size" lines; FileAttachment
+    annotations follow in page order (``_page_annots``)."""
     out: List[str] = []
     try:
-        catalog = doc.resolve(doc.trailer.get("Root"))
-        names = doc.get(catalog, "Names") if isinstance(catalog, dict) else None
-        if isinstance(names, dict) and names.get("EmbeddedFiles") is not None:
-            for _k, v in flatten_name_tree(doc, names.get("EmbeddedFiles")):
-                entry = _filespec_entry(doc, doc.resolve(v))
-                if entry:
-                    out.append(entry)
-        for page in pages:
-            annots = doc.get(page, "Annots")
-            if not isinstance(annots, list):
-                continue
-            for aref in annots[:_MAX_ANNOTS]:
-                try:
-                    a = doc.resolve(aref)
-                except PdfError:
-                    continue
-                if (isinstance(a, dict)
-                        and str(doc.get(a, "Subtype") or "") == "FileAttachment"):
-                    entry = _filespec_entry(doc, doc.get(a, "FS"))
-                    if entry:
-                        out.append(entry)
+        names = doc.get(doc.catalog(), "Names")
     except PdfError:
-        pass
+        return out
+    if not isinstance(names, dict):
+        return out
+    for _k, v in walk_tree(doc, names.get("EmbeddedFiles")):
+        try:
+            entry = _filespec_entry(doc, doc.resolve(v))
+        except PdfError:
+            continue
+        if entry:
+            out.append(entry)
     return out
 
 
 def _filespec_entry(doc: PdfDocument, fs) -> Optional[str]:
     """One file specification (§7.11.3) → "name:size" ("name" when no
-    size is recoverable). /UF (Unicode) wins over /F per spec."""
+    size is recoverable). /UF (Unicode) wins over /F per spec. Size
+    comes from /EF /F's /Params /Size, else the raw stream /Length —
+    the payload is never decoded (attachments can be huge; a crawl
+    pipeline wants the inventory, not the bytes, in this column)."""
     if not isinstance(fs, dict):
         return None
     name = (decode_text_string(doc.resolve(fs.get("UF")))
@@ -379,43 +389,6 @@ def _filespec_entry(doc: PdfDocument, fs) -> Optional[str]:
     return f"{name}:{size}" if size is not None else name
 
 
-def _page_link_uris(doc: PdfDocument, page: dict) -> List[str]:
-    """Hyperlink targets: /Subtype /Link annotations whose action is a
-    URI action (reference: `src/annotation/link.rs` LinkAnnotation.a +
-    `src/actions/uri.rs` UriAction) — outbound links are first-class
-    crawl signal. /A /S /URI is the primary source; the /PA (web-capture
-    original URI) entry is the fallback the reference also models.
-    Dest-only (intra-document) links carry no URI and are skipped."""
-    out: List[str] = []
-    try:
-        annots = doc.get(page, "Annots")
-        if not isinstance(annots, list):
-            return out
-        for a in annots[:_MAX_ANNOTS]:  # bomb guard
-            try:
-                a = doc.resolve(a)
-                if not isinstance(a, dict):
-                    continue
-                if str(doc.get(a, "Subtype") or "") != "Link":
-                    continue
-                for action_key in ("A", "PA"):
-                    act = doc.resolve(a.get(action_key))
-                    if isinstance(act, dict) \
-                            and str(doc.get(act, "S") or "") == "URI":
-                        uri = doc.resolve(act.get("URI"))
-                        if isinstance(uri, (bytes, PdfString)):
-                            # URIs are 7-bit ASCII by spec (§12.6.4.7);
-                            # tolerate 8-bit dirt as utf-8-with-fallback
-                            out.append(
-                                bytes(uri).decode("utf-8", "replace"))
-                            break
-            except PdfError:
-                continue
-    except PdfError:
-        pass
-    return out
-
-
 def _outline_entries(doc: PdfDocument, pages: List[dict]) -> List[tuple]:
     """Pre-order (title, dest_page_index) pairs from the outline tree
     (reference: `src/catalog.rs:35-208` Outlines + `src/destination.rs`
@@ -423,14 +396,12 @@ def _outline_entries(doc: PdfDocument, pages: List[dict]) -> List[tuple]:
     resolves them to pages; we do, r7). Title selection is the pinned
     outlines policy unchanged (empty titles skipped); the page index
     resolves the item's /Dest — or its /A GoTo action's /D — through
-    explicit arrays, the catalog /Dests dict and the /Names /Dests
-    name tree, and is None when unresolvable. Cycle-guarded and
-    depth-capped — crawl PDFs contain malformed sibling chains."""
+    explicit arrays and the document's named-destination table
+    (``PdfDocument.named_destinations``), and is None when
+    unresolvable. Cycle-guarded and depth-capped — crawl PDFs contain
+    malformed sibling chains."""
     try:
-        catalog = doc.resolve(doc.trailer.get("Root"))
-        if not isinstance(catalog, dict):
-            return []
-        outlines = doc.get(catalog, "Outlines")
+        outlines = doc.get(doc.catalog(), "Outlines")
         if not isinstance(outlines, dict):
             return []
         idx_by_obj = {
@@ -467,7 +438,10 @@ def _walk_outline(doc, ref, entries: List[tuple], seen: set, depth: int,
             return
         if not isinstance(node, dict):
             return
-        t = decode_text_string(doc.resolve(node.get("Title")))
+        try:
+            t = decode_text_string(doc.resolve(node.get("Title")))
+        except PdfError:
+            t = None  # unreadable: skipped like an empty title
         if t:
             dest = node.get("Dest")
             if dest is None:
@@ -490,7 +464,7 @@ def _dest_page_index(doc, dest, idx_by_obj: dict, n_pages: int,
     """Resolve one destination to a 0-based page index, or None: an
     explicit array's first element (page Reference, or a bare integer
     page number as remote-style dests use), a dest dict's /D, or a
-    name/string looked up in the catalog (PDF 12.3.2.3). Bounded
+    name/string looked up in the named-destination table. Bounded
     indirection depth — a named dest resolving to another name, or a
     crafted chain of direct /D dicts, terminates instead of
     looping/recursing (one bad dest must never error the doc)."""
@@ -507,7 +481,7 @@ def _dest_page_index(doc, dest, idx_by_obj: dict, n_pages: int,
         key = d if isinstance(d, str) else decode_text_string(d)
         if not key:
             return None
-        target = _lookup_named_dest(doc, str(key))
+        target = doc.named_destinations().get(key)
         if target is None:
             return None
         return _dest_page_index(doc, target, idx_by_obj, n_pages,
@@ -525,68 +499,6 @@ def _dest_page_index(doc, dest, idx_by_obj: dict, n_pages: int,
             i = int(v)
             return i if 0 <= i < n_pages else None
     return None
-
-
-def _lookup_named_dest(doc, key: str):
-    """Named-destination lookup: the catalog /Dests dictionary (PDF
-    1.1 form), then the /Names /Dests name tree (/Names flat pairs
-    across /Kids recursion — cycle-guarded, depth-capped,
-    entry-budgeted; /Limits advisory and ignored)."""
-    try:
-        catalog = doc.resolve(doc.trailer.get("Root"))
-        if not isinstance(catalog, dict):
-            return None
-        dests = doc.get(catalog, "Dests")
-        if isinstance(dests, dict) and key in dests:
-            return dests[key]
-        names = doc.get(catalog, "Names")
-        if isinstance(names, dict):
-            tree = doc.get(names, "Dests")
-            found: list = [None]
-            _find_in_name_tree(doc, tree, key, found, set(), 0, [10_000])
-            return found[0]
-    except PdfError:
-        return None
-    return None
-
-
-def _find_in_name_tree(doc, node, key: str, found: list, seen: set,
-                       depth: int, budget: list) -> None:
-    if found[0] is not None or depth > 16 or not isinstance(node, dict):
-        return
-    try:
-        names = doc.resolve(node.get("Names"))
-    except PdfError:
-        names = None
-    if isinstance(names, list):
-        for i in range(0, len(names) - 1, 2):
-            if budget[0] <= 0:
-                return
-            budget[0] -= 1
-            try:
-                k = decode_text_string(doc.resolve(names[i]))
-            except PdfError:
-                continue
-            if k == key:
-                found[0] = names[i + 1]
-                return
-    try:
-        kids = doc.resolve(node.get("Kids"))
-    except PdfError:
-        return
-    if isinstance(kids, list):
-        for kid in kids[:256]:
-            if found[0] is not None:
-                return
-            if isinstance(kid, Reference):
-                if kid.object_number in seen:
-                    continue
-                seen.add(kid.object_number)
-            try:
-                _find_in_name_tree(doc, doc.resolve(kid), key, found,
-                                   seen, depth + 1, budget)
-            except PdfError:
-                continue
 
 
 _ROMAN_VALS = ((1000, "m"), (900, "cm"), (500, "d"), (400, "cd"),
@@ -615,38 +527,6 @@ def _label_number(style: str, v: int) -> str:
     return str(v)
 
 
-def _collect_page_label_nums(doc, node, out: dict, seen: set,
-                             depth: int, budget: list) -> None:
-    """Flatten a number tree's /Nums pairs across /Kids recursion
-    (reference shape: `src/data_structures/number_tree.rs`); /Limits
-    are advisory and ignored. Cycle-guarded via object numbers,
-    depth-capped, entry-budgeted."""
-    if depth > 16 or not isinstance(node, dict):
-        return
-    nums = doc.resolve(node.get("Nums"))
-    if isinstance(nums, list):
-        for i in range(0, len(nums) - 1, 2):
-            if budget[0] <= 0:
-                return
-            k = doc.resolve(nums[i])
-            v = doc.resolve(nums[i + 1])
-            if isinstance(k, (int, float)) and isinstance(v, dict):
-                out[int(k)] = v
-                budget[0] -= 1
-    kids = doc.resolve(node.get("Kids"))
-    if isinstance(kids, list):
-        for kid in kids[:256]:
-            if isinstance(kid, Reference):
-                if kid.object_number in seen:
-                    continue
-                seen.add(kid.object_number)
-            try:
-                _collect_page_label_nums(
-                    doc, doc.resolve(kid), out, seen, depth + 1, budget)
-            except PdfError:
-                continue
-
-
 def _page_labels_text(doc: PdfDocument, n_pages: int) -> Optional[str]:
     """Per-page display labels from the catalog /PageLabels number
     tree (PDF 12.4.2; the reference PARSES the field —
@@ -663,14 +543,17 @@ def _page_labels_text(doc: PdfDocument, n_pages: int) -> Optional[str]:
     import bisect
 
     try:
-        catalog = doc.resolve(doc.trailer.get("Root"))
-        if not isinstance(catalog, dict):
-            return None
-        tree = doc.get(catalog, "PageLabels")
+        tree = doc.get(doc.catalog(), "PageLabels")
         if not isinstance(tree, dict):
             return None
         ranges: dict = {}
-        _collect_page_label_nums(doc, tree, ranges, set(), 0, [10_000])
+        for k, v in walk_tree(doc, tree, "Nums"):
+            try:
+                v = doc.resolve(v)
+            except PdfError:
+                continue
+            if isinstance(v, dict):
+                ranges[int(k)] = v  # a repeated key: the last one wins
         keys = sorted(k for k in ranges if k >= 0)
         if not keys:
             return None
@@ -730,8 +613,7 @@ def _xmp_title(doc: PdfDocument) -> Optional[str]:
     item). Bounded: 1 MiB of decoded packet, regex spans capped; the
     three XML escapes XMP writers emit are unescaped."""
     try:
-        catalog = doc.resolve(doc.trailer.get("Root"))
-        meta = doc.get(catalog, "Metadata") if isinstance(catalog, dict) else None
+        meta = doc.get(doc.catalog(), "Metadata")
         if not isinstance(meta, Stream):
             return None
         data = doc.decode(meta)[: 1 << 20]
@@ -1122,9 +1004,7 @@ def _structure_mcid_order(doc: PdfDocument):
     inherited down the tree. Returns {page objnum: [mcid, ...]} in
     element order, or None when the document is untagged. Cycle-guarded
     and budget-capped for crawl dirt."""
-    catalog = doc.resolve(doc.trailer.get("Root"))
-    st = (doc.get(catalog, "StructTreeRoot")
-          if isinstance(catalog, dict) else None)
+    st = doc.get(doc.catalog(), "StructTreeRoot")
     if not isinstance(st, dict):
         return None
     order: Dict[Optional[int], List[int]] = {}

@@ -656,10 +656,7 @@ class Font:
                 len(glyphs),
                 sum(1 for g in glyphs if g.is_space),
             )
-        fast = self._fast
-        if fast is None:
-            fast = self._build_fast_tables()
-        chars, widths = fast
+        chars, widths = self._fast or self._build_fast_tables()
         return (
             "".join(map(chars.__getitem__, s)),
             sum(map(widths.__getitem__, s)),
@@ -668,6 +665,9 @@ class Font:
         )
 
     def _build_fast_tables(self):
+        """The simple font's 256-entry (chars, widths) decode tables —
+        ToUnicode, then the encoding, then the embedded cmap, else
+        U+FFFD — shared by ``decode`` and ``decode_fast``."""
         tu = self.tounicode
         chars = []
         widths = []
@@ -685,22 +685,9 @@ class Font:
         return self._fast
 
     def _decode_simple(self, s: bytes) -> List[Glyph]:
-        out = []
-        tu = self.tounicode
-        for code in s:
-            text = None
-            if tu is not None:
-                text = tu.get(1, code)
-            if text is None:
-                text = self.encoding_map.get(code)
-            if text is None and self.code_to_gid:
-                gid = self.code_to_gid.get(code)
-                if gid is not None:
-                    text = self.gid_to_uni.get(gid)
-            if text is None:
-                text = REPLACEMENT
-            out.append(Glyph(code, text, self._simple_width(code), code == 32))
-        return out
+        chars, widths = self._fast or self._build_fast_tables()
+        return [Glyph(code, chars[code], widths[code], code == 32)
+                for code in s]
 
     def _decode_codec(self, s: bytes) -> List[Glyph]:
         """Legacy predefined CJK CMap decode: the code bytes ARE a

@@ -1,131 +1,71 @@
-"""PDF name trees (PDF 32000 §7.9.6) — the catalog's /Names dictionaries
-(Dests, EmbeddedFiles, JavaScript, …).
+"""PDF name trees (§7.9.6) and number trees (§7.9.7) — the catalog's
+/Names dictionaries (Dests, EmbeddedFiles, …) and /PageLabels.
 
-Behavioral model: the reference's NameTree walker
-(`src/data_structures/name_tree.rs:15`; consumed from `src/catalog.rs:
-35-208` Names). A name tree is a balanced search tree: intermediate nodes
-carry /Kids + /Limits, leaves carry a flat /Names [key1 val1 key2 val2 …]
-array sorted by key. Both a point lookup (binary descent through Limits)
-and a full flatten are provided; the flatten is what the metadata surface
-uses. Cycle-guarded and depth-capped for crawl dirt.
+Behavioral model: the reference's NameTree / NumberTree walkers
+(`src/data_structures/name_tree.rs:15`, `number_tree.rs`; consumed from
+`src/catalog.rs:35-208`). Intermediate nodes carry /Kids + /Limits,
+leaves a flat [key1 val1 key2 val2 …] array — /Names (string keys) or
+/Nums (integer keys). Every consumer reads a whole tree, so there is one
+walker and no point lookup: /Limits are advisory and ignored.
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Tuple
+from typing import Iterator, Tuple
 
-from pdfspark.kernel.objects import PdfError, PdfString, Reference
+from pdfspark.kernel.objects import PdfError, Reference
 
-_MAX_DEPTH = 64
-_MAX_ENTRIES = 65536
+# one set of caps for every tree in the document surface
+_MAX_DEPTH = 16
+_MAX_ENTRIES = 10_000
+_MAX_KIDS = 256
 
-
-def _key_bytes(k) -> Optional[bytes]:
-    if isinstance(k, (bytes, PdfString)):
-        return bytes(k)
-    return None
+_KEY_TYPES = {"Names": bytes, "Nums": (int, float)}  # PdfString is bytes
 
 
-def flatten_name_tree(doc, node) -> List[Tuple[bytes, object]]:
-    """All (key, value) pairs of the tree, in key order. Values are left
-    unresolved when they are references (callers resolve on demand — a
-    tree of stream values must not decode everything eagerly)."""
-    out: List[Tuple[bytes, object]] = []
-    _flatten(doc, node, out, set(), 0)
-    return out
-
-
-def _flatten(doc, node, out, seen: set, depth: int) -> None:
-    if depth > _MAX_DEPTH or len(out) >= _MAX_ENTRIES:
-        return
-    if isinstance(node, Reference):
-        if node.object_number in seen:
-            return
-        seen.add(node.object_number)
-    try:
-        node = doc.resolve(node)
-    except PdfError:
-        return
-    if not isinstance(node, dict):
-        return
-    names = doc.get(node, "Names")
-    if isinstance(names, list):
-        for i in range(0, len(names) - 1, 2):
-            k = _key_bytes(doc.resolve(names[i]))
-            if k is not None and len(out) < _MAX_ENTRIES:
-                out.append((k, names[i + 1]))
-        return
-    kids = doc.get(node, "Kids")
-    if isinstance(kids, list):
-        for kid in kids:
-            _flatten(doc, kid, out, seen, depth + 1)
-
-
-def lookup_name_tree(doc, node, key: bytes):
-    """Point lookup: descend through /Limits like the reference's search
-    (`src/data_structures/name_tree.rs:15`); returns the (unresolved)
-    value or None."""
+def walk_tree(doc, node,
+              leaf_key: str = "Names") -> Iterator[Tuple[object, object]]:
+    """Yield the (key, value) pairs of a name tree (``leaf_key="Names"``)
+    or number tree (``"Nums"``) in document order: a node's own pairs,
+    then its /Kids depth-first. Keys are resolved and type-checked
+    (strings / numbers); values stay unresolved, so a tree of stream
+    values decodes nothing until a caller asks. Cycle-guarded on object
+    numbers, at most ``_MAX_DEPTH`` deep, ``_MAX_KIDS`` kids per node
+    and ``_MAX_ENTRIES`` pairs visited per tree; a node or key that
+    fails to resolve is skipped, never raised."""
+    key_types = _KEY_TYPES[leaf_key]
     seen: set = set()
-    depth = 0
-    while depth <= _MAX_DEPTH:
-        depth += 1
+    budget = [_MAX_ENTRIES]
+
+    def walk(node, depth: int):
+        if depth > _MAX_DEPTH or budget[0] <= 0:
+            return
         if isinstance(node, Reference):
             if node.object_number in seen:
-                return None
+                return
             seen.add(node.object_number)
         try:
             node = doc.resolve(node)
+            pairs = doc.get(node, leaf_key)
         except PdfError:
-            return None
-        if not isinstance(node, dict):
-            return None
-        names = doc.get(node, "Names")
-        if isinstance(names, list):
-            for i in range(0, len(names) - 1, 2):
-                if _key_bytes(doc.resolve(names[i])) == key:
-                    return names[i + 1]
-            return None
-        kids = doc.get(node, "Kids")
-        if not isinstance(kids, list):
-            return None
-        nxt = None
-        for kid in kids:
-            try:
-                kd = doc.resolve(kid)
-            except PdfError:
-                continue
-            lim = doc.get(kd, "Limits") if isinstance(kd, dict) else None
-            if isinstance(lim, list) and len(lim) >= 2:
-                lo = _key_bytes(doc.resolve(lim[0]))
-                hi = _key_bytes(doc.resolve(lim[1]))
-                if lo is not None and hi is not None and lo <= key <= hi:
-                    nxt = kid
-                    break
-            else:
-                nxt = kid  # malformed limits: fall through linearly
-                break
-        if nxt is None:
-            return None
-        node = nxt
-    return None
+            return
+        if isinstance(pairs, list):
+            for i in range(0, len(pairs) - 1, 2):
+                if budget[0] <= 0:
+                    return
+                budget[0] -= 1
+                try:
+                    k = doc.resolve(pairs[i])
+                except PdfError:
+                    continue
+                if isinstance(k, key_types):
+                    yield k, pairs[i + 1]
+        try:
+            kids = doc.get(node, "Kids")
+        except PdfError:
+            return
+        if isinstance(kids, list):
+            for kid in kids[:_MAX_KIDS]:
+                yield from walk(kid, depth + 1)
 
-
-def named_destinations(doc) -> Dict[bytes, object]:
-    """The catalog's /Names → /Dests tree flattened (plus the legacy
-    /Dests dictionary of pre-1.2 files), unresolved values."""
-    out: Dict[bytes, object] = {}
-    try:
-        catalog = doc.resolve(doc.trailer.get("Root"))
-        if not isinstance(catalog, dict):
-            return out
-        legacy = doc.get(catalog, "Dests")
-        if isinstance(legacy, dict):
-            for k, v in legacy.items():
-                out[str(k).encode("latin-1", "replace")] = v
-        names = doc.get(catalog, "Names")
-        if isinstance(names, dict) and names.get("Dests") is not None:
-            for k, v in flatten_name_tree(doc, names.get("Dests")):
-                out[k] = v
-    except PdfError:
-        pass
-    return out
+    return walk(node, 0)

@@ -22,7 +22,7 @@ materialized as Spark columns (SURVEY.md §1.1).
 
 from __future__ import annotations
 
-from typing import NamedTuple
+from typing import NamedTuple, Optional
 
 
 class Name(str):
@@ -38,6 +38,20 @@ class PdfString(bytes):
     """A PDF string's raw bytes (literal or hex source is irrelevant)."""
 
     __slots__ = ()
+
+
+def decode_text_string(raw) -> Optional[str]:
+    """PDF text string: UTF-16BE with BOM, UTF-8 with BOM (PDF 2.0
+    §7.9.2.2), else PDFDocEncoding (≈latin-1 over the printable range —
+    the divergent code points are rare in metadata and map acceptably)."""
+    if not isinstance(raw, (bytes, PdfString)):
+        return None
+    b = bytes(raw)
+    if b[:2] == b"\xfe\xff":
+        return b[2:].decode("utf-16-be", "replace")
+    if b[:3] == b"\xef\xbb\xbf":
+        return b[3:].decode("utf-8", "replace")
+    return b.decode("latin-1", "replace")
 
 
 class Reference(NamedTuple):

@@ -6,11 +6,7 @@ from pdfspark.docgen import text_to_pdf
 from pdfspark.fixtures import BASE14, PdfBuilder, _simple_show
 from pdfspark.kernel.document import PdfDocument
 from pdfspark.kernel.extract import extract_text
-from pdfspark.kernel.name_tree import (
-    flatten_name_tree,
-    lookup_name_tree,
-    named_destinations,
-)
+from pdfspark.kernel.name_tree import walk_tree
 
 
 def test_freetext_and_widget_annotations_extracted():
@@ -68,22 +64,30 @@ def _doc_with_name_tree():
           "/Names [(delta) 33 (zeta) 44] >>", num=61)
     b.add("<< /Kids [60 0 R 61 0 R] >>", num=62)
     b.add("<< /Dests 62 0 R >>", num=63)
-    root = b.add("<< /Type /Catalog /Pages 90 0 R /Names 63 0 R >>", num=91)
+    # a number tree whose second leaf lists its parent among its /Kids
+    b.add("<< /Nums [0 (a) 4 (b)] >>", num=64)
+    b.add("<< /Nums [9 (c)] /Kids [66 0 R] >>", num=65)
+    b.add("<< /Kids [64 0 R 65 0 R] >>", num=66)
+    root = b.add("<< /Type /Catalog /Pages 90 0 R /Names 63 0 R "
+                 "/PageLabels 66 0 R >>", num=91)
     return PdfDocument(b.build(root))
 
 
 def test_name_tree_flatten_and_lookup():
+    """The one tree walker: a /Limits-bearing name tree flattens in key
+    order, a number tree walks the same way, and a /Kids cycle ends."""
     doc = _doc_with_name_tree()
-    catalog = doc.resolve(doc.trailer.get("Root"))
+    catalog = doc.catalog()
     tree = doc.get(doc.get(catalog, "Names"), "Dests")
-    pairs = flatten_name_tree(doc, tree)
-    assert [(k, doc.resolve(v)) for k, v in pairs] == [
+    assert [(k, doc.resolve(v)) for k, v in walk_tree(doc, tree)] == [
         (b"alpha", 11), (b"beta", 22), (b"delta", 33), (b"zeta", 44)
     ]
-    assert doc.resolve(lookup_name_tree(doc, tree, b"delta")) == 33
-    assert lookup_name_tree(doc, tree, b"gamma") is None  # between limits
-    dests = named_destinations(doc)
-    assert set(dests) == {b"alpha", b"beta", b"delta", b"zeta"}
+    assert list(walk_tree(doc, catalog["PageLabels"], "Nums")) == [
+        (0, b"a"), (4, b"b"), (9, b"c")
+    ]
+    dests = doc.named_destinations()
+    assert dests == {"alpha": 11, "beta": 22, "delta": 33, "zeta": 44}
+    assert dests.get("gamma") is None  # between the leaves' limits
 
 
 def test_widget_inherits_value_from_parent_field():
@@ -252,3 +256,126 @@ def test_attachment_past_512_annots_is_inventoried():
     assert r.error is None and r.text == "busy page"
     assert r.attachments == "late.bin:7"
     assert r.annots is not None and r.annots.count("sticky") == 599
+
+
+def _deep_chain(b: PdfBuilder, first: int, leaf: str) -> None:
+    """Objects first … first+80 where each references the next and the
+    last holds ``leaf``: a chain past the resolver's depth cap."""
+    for k in range(first, first + 80):
+        b.add(f"{k + 1} 0 R", num=k)
+    b.add(leaf, num=first + 80)
+
+
+def test_deep_filespec_chain_drops_only_its_attachment():
+    """A FileAttachment whose /FS /UF sits behind a reference chain past
+    the resolver's depth cap loses only its own inventory line: the
+    valid attachment after it stays, and both /Contents still read."""
+    b = PdfBuilder()
+    b.add(BASE14, num=1)
+    b.add_stream("<< >>", _simple_show("two files").encode(), num=2)
+    _deep_chain(b, 200, "(deep.txt)")
+    b.add("<< /Type /Filespec /UF 200 0 R >>", num=10)
+    b.add_stream("<< /Type /EmbeddedFile /Params << /Size 2 >> >>", b"ok",
+                 num=11)
+    b.add("<< /Type /Filespec /F (ok.txt) /EF << /F 11 0 R >> >>", num=12)
+    b.add("<< /Type /Annot /Subtype /FileAttachment /Rect [0 0 9 9] "
+          "/FS 10 0 R /Contents (first) >>", num=20)
+    b.add("<< /Type /Annot /Subtype /FileAttachment /Rect [20 0 29 9] "
+          "/FS 12 0 R /Contents (second) >>", num=21)
+    b.add("<< /Type /Page /Parent 90 0 R /MediaBox [0 0 612 792] "
+          "/Resources << /Font << /F1 1 0 R >> >> /Contents 2 0 R "
+          "/Annots [20 0 R 21 0 R] >>", num=30)
+    b.add("<< /Type /Pages /Kids [30 0 R] /Count 1 >>", num=90)
+    root = b.add("<< /Type /Catalog /Pages 90 0 R >>", num=91)
+    r = extract_text(b.build(root))
+    assert r.error is None and r.text == "two files"
+    assert r.annots == "first\nsecond"
+    assert r.attachments == "ok.txt:2"
+
+
+def _bookmarks_into_name_tree_pdf(n_bookmarks: int, n_names: int = 10_000,
+                                  n_pages: int = 4) -> bytes:
+    """``n_bookmarks`` outline items, each targeting a /Dest name of a
+    ``n_names``-entry /Names /Dests tree (100 names per leaf); bookmark
+    i names entry (i·7919) mod n_names, which lands on page
+    entry mod ``n_pages``."""
+    b = PdfBuilder()
+    b.add(BASE14, num=1)
+    b.add_stream("<< >>", _simple_show("x").encode(), num=2)
+    pages = list(range(10, 10 + n_pages))
+    b.add(f"<< /Type /Pages /Kids [{' '.join(f'{p} 0 R' for p in pages)}] "
+          f"/Count {n_pages} >>", num=9)
+    for p in pages:
+        b.add("<< /Type /Page /Parent 9 0 R /MediaBox [0 0 612 792] "
+              "/Resources << /Font << /F1 1 0 R >> >> /Contents 2 0 R >>",
+              num=p)
+    leaves = []
+    for start in range(0, n_names, 100):
+        keys = range(start, min(start + 100, n_names))
+        pairs = " ".join(f"(n{k:05d}) [{pages[k % n_pages]} 0 R /Fit]"
+                         for k in keys)
+        leaves.append(b.add(f"<< /Limits [(n{keys[0]:05d}) "
+                            f"(n{keys[-1]:05d})] /Names [{pairs}] >>"))
+    tree = b.add(f"<< /Kids [{' '.join(f'{n} 0 R' for n in leaves)}] >>")
+    first = tree + 1
+    for i in range(n_bookmarks):
+        nxt = f" /Next {first + i + 1} 0 R" if i + 1 < n_bookmarks else ""
+        b.add(f"<< /Title (b{i}) /Dest (n{i * 7919 % n_names:05d}){nxt} >>",
+              num=first + i)
+    outlines = b.add(f"<< /Type /Outlines /First {first} 0 R >>")
+    root = b.add(f"<< /Type /Catalog /Pages 9 0 R /Outlines {outlines} 0 R "
+                 f"/Names << /Dests {tree} 0 R >> >>")
+    return b.build(root)
+
+
+def test_named_destinations_walk_the_tree_once(monkeypatch):
+    """Bookmarks share one named-destination table: visiting a tree
+    entry resolves its key string, so the string resolutions of a
+    512-bookmark × 10 000-name document stay within one pass over the
+    tree plus a few per bookmark (its title and its /Dest name) —
+    a per-bookmark tree search would cost millions."""
+    from pdfspark.kernel.objects import PdfString
+
+    n_bookmarks, n_names = 512, 10_000
+    pdf = _bookmarks_into_name_tree_pdf(n_bookmarks, n_names)
+    real = PdfDocument.resolve
+    visits = [0]
+
+    def counting_resolve(self, obj, depth=0):
+        if isinstance(obj, PdfString):
+            visits[0] += 1
+        return real(self, obj, depth)
+
+    monkeypatch.setattr(PdfDocument, "resolve", counting_resolve)
+    r = extract_text(pdf)
+    assert r.error is None
+    assert r.outline_pages == "\n".join(
+        str(i * 7919 % n_names % 4) for i in range(n_bookmarks))
+    assert visits[0] <= n_names + 4 * n_bookmarks, visits[0]
+
+
+def test_unreadable_bookmark_title_or_field_value_drops_only_itself():
+    """An outline item whose /Title, or an AcroForm field whose /V,
+    cannot be resolved is skipped; its siblings still read."""
+    b = PdfBuilder()
+    _deep_chain(b, 200, "(deep)")
+    b.add(BASE14, num=1)
+    b.add_stream("<< >>", _simple_show("x").encode(), num=2)
+    b.add("<< /Type /Page /Parent 90 0 R /MediaBox [0 0 612 792] "
+          "/Resources << /Font << /F1 1 0 R >> >> /Contents 2 0 R >>",
+          num=30)
+    b.add("<< /Type /Pages /Kids [30 0 R] /Count 1 >>", num=90)
+    b.add("<< /Title (A) /Dest [30 0 R /Fit] /Next 71 0 R >>", num=70)
+    b.add("<< /Title 200 0 R /Next 72 0 R >>", num=71)
+    b.add("<< /Title (C) >>", num=72)
+    b.add("<< /Type /Outlines /First 70 0 R >>", num=73)
+    b.add("<< /FT /Tx /T (a) /V (first) >>", num=60)
+    b.add("<< /FT /Tx /T (b) /V 200 0 R >>", num=61)
+    b.add("<< /FT /Tx /T (c) /V (third) >>", num=62)
+    root = b.add("<< /Type /Catalog /Pages 90 0 R /Outlines 73 0 R "
+                 "/AcroForm << /Fields [60 0 R 61 0 R 62 0 R] >> >>",
+                 num=91)
+    r = extract_text(b.build(root))
+    assert r.error is None and r.text == "x"
+    assert r.outlines == "A\nC" and r.outline_pages == "0\n-1"
+    assert r.annots == "first\nthird"

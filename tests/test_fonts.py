@@ -608,3 +608,44 @@ def test_post_table_garbage_never_raises():
 
     for junk in (b"", b"\x00" * 12, b"\x00\x01\x00\x00" + b"\xff" * 64):
         parse_ttf_post_names(junk)  # must not raise
+
+
+def test_simple_font_decode_paths_agree_across_corpus():
+    """decode() (per-glyph, positions path) and decode_fast() (batched
+    default) read one 256-entry table, so for every simple font of the
+    golden corpus they agree on text and advance sum for every code."""
+    from pdfspark.corpus import all_cases
+    from pdfspark.kernel.document import PdfDocument
+    from pdfspark.kernel.fonts import load_font
+    from pdfspark.kernel.objects import PdfError
+
+    codes = bytes(range(256))
+    checked = 0
+    for case in all_cases():
+        try:
+            doc = PdfDocument(case.pdf)
+            pages = doc.pages()
+        except PdfError:
+            continue
+        for page in pages:
+            try:
+                fonts = doc.get(doc.get(page, "Resources"), "Font")
+            except PdfError:
+                continue
+            if not isinstance(fonts, dict):
+                continue
+            for ref in fonts.values():
+                try:
+                    fd = doc.resolve(ref)
+                    font = load_font(doc, fd) if isinstance(fd, dict) else None
+                except PdfError:
+                    continue
+                if font is None or font.is_type0:
+                    continue
+                glyphs = font.decode(codes)
+                text, width_sum, n, n_spaces = font.decode_fast(codes)
+                assert text == "".join(g.text for g in glyphs), case.case_id
+                assert width_sum == sum(g.advance for g in glyphs)
+                assert (n, n_spaces) == (256, 1)
+                checked += 1
+    assert checked >= 50, checked

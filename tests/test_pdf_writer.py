@@ -156,6 +156,19 @@ def test_pins_cover_every_generator():
     assert sorted(_digests()) == sorted(PINS)
 
 
+def test_every_synth_fmt_degrades_unencodable_letters():
+    """Latin-1 letters a generator's target encoding lacks (GBK has no
+    ï, Æ or ø) degrade to "?" instead of raising, in every fmt."""
+    from pdfspark.kernel.extract import extract_document
+    from pdfspark.pipeline import _synth_page
+
+    text = "naïve Ærø café déjà vu"
+    for fmt in _SYNTH_FMTS:
+        for i in _IDS:
+            _url, payload = _synth_page(i, text, "en", fmt, 0)
+            assert extract_document(payload).error is None, (fmt, i)
+
+
 def test_docgen_writes_no_xref():
     """docgen builds objects only; fixtures.write_pdf is the one
     classic-xref writer, so no xref table or trailer is spelled in

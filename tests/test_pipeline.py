@@ -115,6 +115,19 @@ def test_no_worker_sys_path_bootstrap():
     assert offenders == []
 
 
+def test_document_surface_read_once():
+    """One catalog read (PdfDocument.catalog) and one /Annots pass per
+    page (extract._page_annots) behind the kernel's metadata columns."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "pdfspark"
+    readers = {str(p.relative_to(root)): p.read_text(encoding="utf-8")
+               .count('trailer.get("Root")') for p in sorted(root.rglob("*.py"))}
+    assert {k: n for k, n in readers.items() if n} == {"kernel/document.py": 1}
+    extract = (root / "kernel" / "extract.py").read_text(encoding="utf-8")
+    assert extract.count('"Annots"') == 1
+
+
 def test_documents_roundtrip(spark):
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     expected = {r.doc_id: r.text for r in docs.collect()}

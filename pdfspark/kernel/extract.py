@@ -68,6 +68,11 @@ _MAX_FORM_DEPTH = 16
 # annots_text, links_uri and attachments (ADVICE r3 #3: split caps once
 # dropped a FileAttachment past index 511 while its page's text stayed)
 _MAX_ANNOTS = 1024
+# Fonts a document keeps across its pages (_PageInterp._doc_font): past
+# this many the cache is emptied at the next page start, so a document
+# with a fresh font on every page holds one page's fonts plus at most
+# this many, not every font it ever showed
+_MAX_DOC_FONTS = 32
 
 
 class Span(NamedTuple):
@@ -143,10 +148,14 @@ def extract_text(buf: bytes, positions: bool = False,
         page_pos: List[List[tuple]] = []
         page_runs: List[list] = []
         soft_error: Optional[str] = None
+        font_cache: dict = {}  # one per document (_PageInterp._doc_font)
         for page in pages:
+            if len(font_cache) > _MAX_DOC_FONTS:
+                font_cache.clear()
             try:
                 txt, err, gp, runs = _extract_page(
-                    doc, page, positions=positions, mcids=structure)
+                    doc, page, font_cache, positions=positions,
+                    mcids=structure)
             except PdfError as e:
                 txt, err, gp, runs = "", e.code, None, None
             except RecursionError:
@@ -649,7 +658,8 @@ def extract_document(buf: bytes) -> ExtractResult:
 class _PageInterp:
     """Interpreter state for one page (+ nested Form XObjects)."""
 
-    def __init__(self, doc: PdfDocument, track_positions: bool = False,
+    def __init__(self, doc: PdfDocument, font_cache: dict,
+                 track_positions: bool = False,
                  track_mcids: bool = False) -> None:
         self.doc = doc
         self.out: List[str] = []
@@ -658,7 +668,8 @@ class _PageInterp:
         self.gs = GraphicsState()
         self.gs_stack: List[GraphicsState] = []
         self.ts = TextState()
-        self.font_cache: Dict[int, Font] = {}
+        # the document's fonts, shared by all its pages (_doc_font)
+        self.font_cache = font_cache
         self.soft_error: Optional[str] = None
         # opt-in geometry: (page-relative char offset, x, y) per glyph
         self.positions: Optional[List[tuple]] = [] if track_positions else None
@@ -881,23 +892,23 @@ class _PageInterp:
 
 
     def _load_font_cached(self, res: dict, name) -> Font:
-        doc = self.doc
-        fonts = doc.get(res, "Font") if isinstance(res, dict) else None
+        fonts = self.doc.get(res, "Font") if isinstance(res, dict) else None
         if not isinstance(fonts, dict):
             return default_font()
-        ref = fonts.get(str(name))
-        key = (
-            ref.object_number
-            if isinstance(ref, Reference)
-            else id(ref)
-        )
-        cached = self.font_cache.get(key)
-        if cached is not None:
-            return cached
-        fd = doc.resolve(ref)
-        font = load_font(doc, fd) if isinstance(fd, dict) else default_font()
-        self.font_cache[key] = font
-        return font
+        return self._doc_font(fonts.get(str(name)))
+
+    def _doc_font(self, ref) -> Font:
+        """The Font of a font entry, loaded once per DOCUMENT: keyed by
+        object number, or by id() of a direct dict — the entry holds that
+        dict, so its id cannot be reused while the cache lives."""
+        key = ref.object_number if isinstance(ref, Reference) else id(ref)
+        hit = self.font_cache.get(key)
+        if hit is None:
+            fd = self.doc.resolve(ref)
+            font = (load_font(self.doc, fd) if isinstance(fd, dict)
+                    else default_font())
+            hit = self.font_cache[key] = (ref, font)
+        return hit[1]
 
     def _apply_extgstate(self, res: dict, name) -> None:
         """G3: honor the /Font entry of an ExtGState dict
@@ -909,11 +920,10 @@ class _PageInterp:
         g = doc.resolve(egs.get(str(name)))
         if isinstance(g, dict):
             fent = doc.resolve(g.get("Font"))
-            if isinstance(fent, list) and len(fent) == 2:
-                fd = doc.resolve(fent[0])
-                if isinstance(fd, dict):
-                    self.ts.font = load_font(doc, fd)
-                    self.ts.font_size = float(doc.resolve(fent[1]) or 0)
+            if (isinstance(fent, list) and len(fent) == 2
+                    and isinstance(doc.resolve(fent[0]), dict)):
+                self.ts.font = self._doc_font(fent[0])
+                self.ts.font_size = float(doc.resolve(fent[1]) or 0)
 
     def _mcid(self) -> Optional[int]:
         return self.mc_stack[-1][0] if self.mc_stack else None
@@ -1105,11 +1115,12 @@ def _struct_text(doc: PdfDocument, pages: List[dict],
     return "\f".join(page_texts)
 
 
-def _extract_page(doc: PdfDocument, page: dict,
+def _extract_page(doc: PdfDocument, page: dict, font_cache: dict,
                   positions: bool = False, mcids: bool = False,
                   ) -> Tuple[str, Optional[str], Optional[list], Optional[list]]:
     content = doc.page_content(page)
-    interp = _PageInterp(doc, track_positions=positions, track_mcids=mcids)
+    interp = _PageInterp(doc, font_cache, track_positions=positions,
+                         track_mcids=mcids)
     resources = doc.get(page, "Resources")
     interp.run(content, resources if isinstance(resources, dict) else {})
     return ("".join(interp.out), interp.soft_error, interp.positions,

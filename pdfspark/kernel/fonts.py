@@ -587,7 +587,8 @@ class Glyph:
 
 class Font:
     """A resolved font ready for decode(). Built by ``load_font``; cached
-    per (document, resource name) like the reference's lazy font loads
+    per document (``extract._PageInterp._doc_font``) like the
+    reference's lazy font loads
     (`src/render/mod.rs:1056-1076`)."""
 
     __slots__ = (

@@ -13,8 +13,17 @@ mid-parse.
 
 Scale notes (100 TB / 1000-executor framing):
 - Salting: the salt ``pmod(xxhash64(url), P)`` randomizes giant-PDF
-  placement so no partition accumulates the skew tail; P should be chosen
-  ≈ 2-4× total cores. Rows are placed on partition ``salt`` directly
+  placement so no partition accumulates the skew tail. P is the
+  session's ``spark.sql.shuffle.partitions``. ``build_session`` sets it
+  to the core count, so a local run's Python stage is ONE wave: every
+  extra task pays the Arrow boundary and worker hand-off again, and a
+  second wave leaves cores idle behind its last task (salt-count sweep
+  on local[4], perfbench corpora, pass wall vs n=8, 8 interleaved
+  rounds: n=4 7-12% faster, n=16 9-22% and n=32 24-60% slower). On a
+  cluster whose size tail is heavy, P ≈ 2-4× total cores lets the
+  scheduler balance giant-PDF skew dynamically, at that fixed cost per
+  extra task; set the shuffle partitions (or ``nsalt``) to choose. Rows
+  are placed on partition ``salt`` directly
   (``repartitionById``): a hash-repartition on the salt would hash it a
   second time, and the P salt values then collide onto fewer than P
   partitions (8 salts on 4 of 8), which doubles the slowest task. AQE
@@ -46,9 +55,10 @@ def build_session(
     extra_conf: Optional[dict] = None,
 ) -> SparkSession:
     """Local-mode session tuned per /opt guide: AQE on, Arrow on, shuffle
-    partitions ≈ cores (not 200)."""
+    partitions = cores (not 200): the salted kernel stage then runs in
+    one wave (module docstring)."""
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle = shuffle_partitions or max(cores, 8)
+    shuffle = shuffle_partitions or cores
     # Scan split size (guide §6): the default 128m leaves a ~126 MB
     # multi-row-group parquet file as a ONE-task scan — at the driver's
     # sf1.0 that serializes every lineitem query on a single core. 16m
@@ -145,7 +155,9 @@ def read_pages(spark: SparkSession, source: str,
     """
     if fmt == "iceberg":
         return spark.read.format("iceberg").load(source)
-    return spark.read.format(fmt).load(source)
+    # the schema is fixed: given, the scan launches no schema-inference
+    # job (hive partition columns such as ``d=…/`` are still discovered)
+    return spark.read.schema(PAGES_SCHEMA).format(fmt).load(source)
 
 
 def write_output(df: DataFrame, target: str, fmt: str = "parquet",
@@ -370,7 +382,9 @@ def extract_pages(
     resalt: bool = True,
 ) -> DataFrame:
     """filter → salt/repartition → kernel. ``nsalt`` defaults to the
-    session's shuffle partitions (≈ 2-4× cores on a real cluster).
+    session's shuffle partitions: = cores from ``build_session`` (one
+    wave of Python tasks), ≈ 2-4× cores on a cluster with a heavy size
+    tail (module docstring).
 
     ``resalt=False`` skips the shuffle when the caller already distributed
     the rows (e.g. the generator salts by doc_id) — shuffling PDF bytes a
@@ -572,6 +586,15 @@ def error_breakdown(extracted: DataFrame) -> DataFrame:
 
 # --------------------------------------------------- checkpointed batch run
 
+# run_pipeline's lineage manifest: one row per completed partition key
+_MANIFEST_SCHEMA = T.StructType(
+    [
+        T.StructField("part_key", T.IntegerType()),
+        T.StructField("run_elapsed_s", T.DoubleType()),
+    ]
+)
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -604,7 +627,9 @@ def run_pipeline(
     )
     done_keys: set = set()
     try:
-        done = spark.read.parquet(out_manifest)
+        # known schemas: the reads launch no schema-inference job (a
+        # missing manifest still raises: nothing is done yet)
+        done = spark.read.schema(_MANIFEST_SCHEMA).parquet(out_manifest)
         done_keys = {r.part_key for r in done.select("part_key").distinct().collect()}
     except Exception:
         pass
@@ -637,7 +662,7 @@ def run_pipeline(
     )
     elapsed = time.time() - t0
 
-    written = spark.read.parquet(out_data)
+    written = spark.read.schema(EXTRACT_SCHEMA).parquet(out_data)
     # every run processes its ENTIRE todo, so afterwards every one of the
     # npart keys is complete — including keys with zero input rows. Record
     # them all: that makes the complete-manifest early exit above fire on
@@ -645,14 +670,7 @@ def run_pipeline(
     new_keys = [k for k in range(npart) if k not in done_keys]
     # lineage manifest: one row per completed partition key
     manifest_rows = spark.createDataFrame(
-        [(int(k), elapsed) for k in new_keys] or [],
-        T.StructType(
-            [
-                T.StructField("part_key", T.IntegerType()),
-                T.StructField("run_elapsed_s", T.DoubleType()),
-            ]
-        ),
-    )
+        [(int(k), elapsed) for k in new_keys], _MANIFEST_SCHEMA)
     manifest_rows.write.mode("append").parquet(out_manifest)
     # metrics: ONLY this run's partitions (part_id is a per-run task id —
     # aggregating across runs would blend unrelated executions), appended

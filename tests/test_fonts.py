@@ -649,3 +649,97 @@ def test_simple_font_decode_paths_agree_across_corpus():
                 assert (n, n_spaces) == (256, 1)
                 checked += 1
     assert checked >= 50, checked
+
+
+def test_embedded_font_loads_once_per_document(monkeypatch):
+    """A font shared by every page loads once per DOCUMENT, not once per
+    page: a 200-page PDF whose pages all show through one embedded
+    TrueType (FontFile2 + /Widths + /FontDescriptor, so not cacheable
+    process-wide) builds it once, and the text and spans equal those of
+    the pages extracted one by one."""
+    from pdfspark import docgen
+    from pdfspark.fixtures import stream_object, write_pdf
+    from pdfspark.kernel import fonts
+    from pdfspark.kernel.extract import Span, extract_text
+
+    page_texts = [f"Page {k} the quick brown fox jumps" for k in range(200)]
+    ttf = docgen._post_ttf()
+    nums = [docgen._page_num(k) for k in range(len(page_texts))]
+    objs = [(1, docgen._CATALOG % b""),
+            (2, b"<< /Type /Pages /Kids [%s] /Count %d >>"
+             % (b" ".join(b"%d 0 R" % p for p in nums), len(nums))),
+            (5, b"<< /Type /Font /Subtype /TrueType /BaseFont /PostOnly "
+                b"/FirstChar 32 /LastChar 122 /Widths [%s] "
+                b"/FontDescriptor 7 0 R >>" % b" ".join([b"500"] * 91)),
+            (7, b"<< /Type /FontDescriptor /FontName /PostOnly /Flags 4 "
+                b"/FontFile2 8 0 R >>"),
+            (8, stream_object("<< /Length1 %d >>" % len(ttf), ttf))]
+    for p, t in zip(nums, page_texts):
+        objs += [(p, docgen._page(p + 1)),
+                 (p + 1, docgen._flate(docgen._flow_ops(t)))]
+    pdf = write_pdf(objs, 1)
+
+    calls = []
+    uncached = fonts._load_font_uncached
+    monkeypatch.setattr(fonts, "_load_font_uncached",
+                        lambda doc, fd: calls.append(1) or uncached(doc, fd))
+    res = extract_text(pdf)
+    assert res.error is None and res.n_pages == 200
+    assert len(calls) == 1
+
+    expected = [extract_text(docgen.text_to_pdf_postfont(t)).text
+                for t in page_texts]
+    assert expected[0] == page_texts[0]
+    assert res.text == "\f".join(expected)
+    off, spans = 0, []
+    for i, t in enumerate(expected):
+        spans.append(Span(i, off, off + len(t)))
+        off += len(t) + 1
+    assert res.spans == spans
+
+
+def test_document_font_cache_is_bounded(monkeypatch):
+    """A document showing a different embedded font on every page keeps
+    at most ``_MAX_DOC_FONTS`` of them between pages, not all of them,
+    and each page still loads its font once with its text intact."""
+    from pdfspark import docgen
+    from pdfspark.fixtures import stream_object, write_pdf
+    from pdfspark.kernel import extract, fonts
+
+    n = 3 * extract._MAX_DOC_FONTS
+    page_texts = [f"Page {k} with its own font" for k in range(n)]
+    ttf = docgen._post_ttf()
+    nums = [docgen._page_num(k) for k in range(n)]
+    objs = [(1, docgen._CATALOG % b""),
+            (2, b"<< /Type /Pages /Kids [%s] /Count %d >>"
+             % (b" ".join(b"%d 0 R" % p for p in nums), n)),
+            (7, b"<< /Type /FontDescriptor /FontName /PostOnly /Flags 4 "
+                b"/FontFile2 8 0 R >>"),
+            (8, stream_object("<< /Length1 %d >>" % len(ttf), ttf))]
+    for k, (p, t) in enumerate(zip(nums, page_texts)):
+        font = 1000 + k
+        objs += [(p, docgen._page(p + 1).replace(b"/F1 5 0 R",
+                                                 b"/F1 %d 0 R" % font)),
+                 (p + 1, docgen._flate(docgen._flow_ops(t))),
+                 (font, b"<< /Type /Font /Subtype /TrueType /BaseFont "
+                        b"/PostOnly /FirstChar 32 /LastChar 122 /Widths [%s] "
+                        b"/FontDescriptor 7 0 R >>"
+                        % b" ".join([b"500"] * 91))]
+    pdf = write_pdf(objs, 1)
+
+    calls, held = [], []
+    uncached = fonts._load_font_uncached
+    monkeypatch.setattr(fonts, "_load_font_uncached",
+                        lambda doc, fd: calls.append(1) or uncached(doc, fd))
+    page = extract._extract_page
+
+    def counting_page(doc, pg, font_cache, **kw):
+        held.append(len(font_cache))
+        return page(doc, pg, font_cache, **kw)
+
+    monkeypatch.setattr(extract, "_extract_page", counting_page)
+    res = extract.extract_text(pdf)
+    assert res.error is None and res.n_pages == n
+    assert res.text == "\f".join(page_texts)
+    assert len(calls) == n
+    assert max(held) <= extract._MAX_DOC_FONTS

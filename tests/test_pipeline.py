@@ -240,6 +240,31 @@ def test_read_write_format_hooks(spark, tmp_path):
     assert read_pages(spark, p2).count() == pages.count()
 
 
+def test_read_pages_launches_no_job(spark, tmp_path):
+    """The pages schema is fixed, so read_pages gives it to the reader:
+    the scan launches no schema-inference job, and hive partition
+    columns (``d=…/``) are still discovered."""
+    from pdfspark.pipeline import read_pages, write_output
+
+    pages = pages_from_fixtures(spark)
+    flat, parted = str(tmp_path / "flat"), str(tmp_path / "parted")
+    write_output(pages, flat)
+    write_output(pages.withColumn("d", F.to_date("warc_ts")), parted,
+                 partition_by=["d"])
+    sc = spark.sparkContext
+    sc.setJobGroup("read_pages_no_job", "read_pages_no_job")
+    try:
+        back = read_pages(spark, flat)
+        back_parted = read_pages(spark, parted)
+        assert back.columns == PAGES_SCHEMA.names
+        assert back_parted.columns == PAGES_SCHEMA.names + ["d"]
+        assert sc.statusTracker().getJobIdsForGroup("read_pages_no_job") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert back.count() == back_parted.count() == pages.count()
+
+
 def test_run_pipeline_keeps_html_modality(spark, tmp_path):
     """ADVICE r1: the checkpointed batch path must not silently drop HTML
     rows — the kernel extracts them, so the prefilter must pass them."""

@@ -3,6 +3,7 @@ ones we'd want at 100 TB — filters pushed to the scan, column pruning,
 broadcast joins for dims, no stray exchanges on the no-shuffle paths."""
 
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -75,6 +76,35 @@ def test_extraction_salting_is_single_exchange(spark):
         tiers.setdefault(r.part_id, set()).add(r.pdf_bytes > cutoff)
     assert {True} in tiers.values() and {False} in tiers.values(), tiers
     assert all(len(t) == 1 for t in tiers.values()), tiers
+
+
+def test_extraction_salts_one_partition_per_task_slot(spark):
+    """``build_session``'s default shuffle partitions are the core count,
+    so the default salt count is one partition per task slot: local[4]
+    salts into 4 and the kernel stage runs in one wave; an explicit
+    nsalt is kept."""
+    from pdfspark.pipeline import build_session, extract_pages, pages_from_fixtures
+
+    def salt_partitions(df):
+        m = re.search(r"Exchange shufflepartitionidpassthrough\(.*\), "
+                      r"(\d+)\), REPARTITION_BY_NUM", plan_of(df))
+        assert m, plan_of(df)
+        return int(m.group(1))
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    # the session exists, so this applies build_session's settings to it
+    session = build_session(cores=4, app="pdfspark-tests")
+    try:
+        assert session.conf.get(key) == "4"
+        pages = pages_from_fixtures(session, copies=2)
+        assert salt_partitions(extract_pages(pages)) == 4
+        assert salt_partitions(extract_pages(pages, nsalt=8)) == 8
+        parts = {r.part_id for r in
+                 extract_pages(pages).select("part_id").collect()}
+        assert parts == {0, 1, 2, 3}, parts
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_roundtrip_is_single_fused_python_stage(spark):

@@ -22,7 +22,7 @@ Scale notes (100 TB / 1000-executor framing):
   rounds: n=4 7-12% faster, n=16 9-22% and n=32 24-60% slower). On a
   cluster whose size tail is heavy, P ≈ 2-4× total cores lets the
   scheduler balance giant-PDF skew dynamically, at that fixed cost per
-  extra task; set the shuffle partitions (or ``nsalt``) to choose. Rows
+  extra task; set the shuffle partitions to choose. Rows
   are placed on partition ``salt`` directly
   (``repartitionById``): a hash-repartition on the salt would hash it a
   second time, and the P salt values then collide onto fewer than P
@@ -377,29 +377,30 @@ def filter_supported_rows(pages: DataFrame,
 
 def extract_pages(
     pages: DataFrame,
-    nsalt: Optional[int] = None,
     prefilter: bool = True,
     resalt: bool = True,
 ) -> DataFrame:
-    """filter → salt/repartition → kernel. ``nsalt`` defaults to the
-    session's shuffle partitions: = cores from ``build_session`` (one
-    wave of Python tasks), ≈ 2-4× cores on a cluster with a heavy size
-    tail (module docstring).
+    """filter → salt/repartition → kernel. The one kernel placement,
+    chosen by what the caller holds:
 
-    ``resalt=False`` skips the shuffle when the caller already distributed
-    the rows (e.g. the generator salts by doc_id) — shuffling PDF bytes a
-    second time is pure cost; at 100 TB that exchange IS the bottleneck."""
-    spark = pages.sparkSession
+    - ``resalt=True``: a url-hash salt into the session's shuffle
+      partitions (= cores from ``build_session``: one wave of Python
+      tasks; ≈ 2-4× cores on a cluster with a heavy size tail, module
+      docstring).
+    - ``resalt=False``: the caller's own partitioning, when it already
+      distributed the rows (e.g. the generator salts by doc_id) —
+      shuffling PDF bytes a second time is pure cost; at 100 TB that
+      exchange IS the bottleneck."""
     if prefilter:
         pages = filter_pdf_rows(pages)
     pages = pages.select("url", "html")
     if resalt:
-        nsalt = nsalt or int(spark.conf.get("spark.sql.shuffle.partitions"))
+        salts = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         # giant-PDF skew: the url hash spreads the size tail uniformly;
         # one doc = one row, so partition cost ≈ sum of its doc sizes.
         # The salt IS the partition id (placed directly, no re-hash)
         pages = pages.repartitionById(
-            nsalt, F.pmod(F.xxhash64("url"), F.lit(nsalt)).cast("int"))
+            salts, F.pmod(F.xxhash64("url"), F.lit(salts)).cast("int"))
     return pages.mapInPandas(_extract_batches, EXTRACT_SCHEMA)
 
 
@@ -519,46 +520,6 @@ def table_cells_extract(spark: SparkSession, sf_dir: str,
                     .select("doc_id", "text", "lang"), cell_rows, schema)
 
 
-# big-tier key space of extract_pages_skew_aware, in multiples of nsalt
-_BIG_BUCKETS_FACTOR = 8
-
-
-def extract_pages_skew_aware(
-    pages: DataFrame,
-    nsalt: Optional[int] = None,
-    big_cutoff_bytes: int = 4 << 20,
-) -> DataFrame:
-    """Size-aware salting for giant PDFs (SURVEY.md §2B salting row).
-
-    Hash-salting alone spreads the *count* of docs uniformly, but one
-    100 MB outlier still pins its partition's wall-clock. Single-pass
-    scheme (one scan, one exchange — no DataFrame split that would
-    evaluate the source twice):
-
-    - small docs:  salt ∈ [0, nsalt)            (many docs per bucket)
-    - big docs:    salt ∈ [nsalt, nsalt + 8·nsalt)  (a key space 8× wider,
-      so with a realistic <1% big-doc fraction each bucket holds ~one
-      giant doc and a straggler is bounded by a single document)
-
-    Each salt value is its own partition (``repartitionById``), so a
-    small-tier bucket never shares a task with a giant-doc bucket.
-
-    At 100 TB the cutoff is tuned so the big tier is <1% of rows but
-    would otherwise dominate tail latency (crawl PDF sizes are log-normal
-    with a heavy tail).
-    """
-    spark = pages.sparkSession
-    nsalt = nsalt or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nbig = nsalt * _BIG_BUCKETS_FACTOR
-    pdf = filter_pdf_rows(pages).select("url", "html")
-    salt = F.when(
-        F.length("html") <= big_cutoff_bytes,
-        F.pmod(F.xxhash64("url"), F.lit(nsalt)),
-    ).otherwise(nsalt + F.pmod(F.xxhash64("url"), F.lit(nbig)))
-    return extract_pages(pdf.repartitionById(nsalt + nbig, salt.cast("int")),
-                         prefilter=False, resalt=False)
-
-
 # ------------------------------------------------- metrics / lineage tables
 
 def partition_metrics(extracted: DataFrame) -> DataFrame:
@@ -595,6 +556,14 @@ _MANIFEST_SCHEMA = T.StructType(
 )
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop ``FileSystem`` that
+    owns its scheme (local, ``hdfs://``, ``s3a://``, …) under the
+    session's Hadoop configuration."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -626,13 +595,12 @@ def run_pipeline(
         "part_key", F.pmod(F.xxhash64("url"), F.lit(npart)).cast("int")
     )
     done_keys: set = set()
-    try:
-        # known schemas: the reads launch no schema-inference job (a
-        # missing manifest still raises: nothing is done yet)
+    # a missing manifest means nothing is done yet; it is not read, so a
+    # clean first run logs no FileNotFoundException. Known schemas: the
+    # reads launch no schema-inference job
+    if _path_exists(spark, out_manifest):
         done = spark.read.schema(_MANIFEST_SCHEMA).parquet(out_manifest)
         done_keys = {r.part_key for r in done.select("part_key").distinct().collect()}
-    except Exception:
-        pass
     todo = keyed.filter(~F.col("part_key").isin(done_keys)) if done_keys else keyed
     if len(done_keys) >= npart:
         # every partition key is in the manifest: nothing to replay —

@@ -4861,15 +4861,16 @@ def text_compression_ratio(spark, sf_dir):
     oracle="SELECT doc_id, text FROM documents",
 )
 def pdf_extract_skew_aware(spark, sf_dir):
-    """The two-tier skew-aware salting path under the SAME byte-identity
-    oracle as the flagship roundtrip: a low cutoff forces real traffic
-    through BOTH the small-doc buckets and the widened giant-doc key
-    space, so the driver checks the skew machinery end-to-end, not just
-    the plain path."""
-    from pdfspark.pipeline import extract_pages_skew_aware, pages_from_documents
+    """The giant-PDF skew defence under the SAME byte-identity oracle as
+    the flagship roundtrip: the one registered query that drives
+    ``extract_pages``' url-hash salt exchange (one partition per
+    shuffle partition, so one wave of kernel tasks) instead of the
+    generator's doc_id partitioning, so the driver checks the salted
+    placement end-to-end (why there is no giant-document tier: CLAUDE.md,
+    one-wave bullet)."""
+    from pdfspark.pipeline import extract_pages, pages_from_documents
 
-    pages = pages_from_documents(spark, sf_dir)
-    ext = extract_pages_skew_aware(pages, big_cutoff_bytes=2000)
+    ext = extract_pages(pages_from_documents(spark, sf_dir))
     return ext.select(
         doc_id_from_url(),
         "text",

@@ -36,9 +36,10 @@ def main() -> None:
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .getOrCreate()
     )
-    from pdfspark.pipeline import run_pipeline
+    from pdfspark.pipeline import read_pages, run_pipeline
 
-    pages = spark.read.parquet(args.input)
+    # the known pages schema: the read launches no schema-inference job
+    pages = read_pages(spark, args.input)
     stats = run_pipeline(spark, pages, args.output, npart=args.npart)
     print(json.dumps(stats))
     spark.stop()

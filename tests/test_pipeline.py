@@ -174,6 +174,22 @@ def test_run_pipeline_resume_idempotent(spark, tmp_path):
     pages.unpersist()
 
 
+def test_path_exists_asks_the_filesystem(spark, tmp_path):
+    """run_pipeline reads its manifest only when it exists: a missing
+    directory is False (nothing done, nothing read), a present one True,
+    with or without a ``file://`` scheme."""
+    from pdfspark.pipeline import _path_exists
+
+    missing = tmp_path / "manifest"
+    assert not _path_exists(spark, str(missing))
+    assert not _path_exists(spark, missing.as_uri())
+    manifest = spark.createDataFrame([(0, 0.0)],
+                                     "part_key int, run_elapsed_s double")
+    manifest.write.parquet(str(missing))
+    assert _path_exists(spark, str(missing))
+    assert _path_exists(spark, missing.as_uri())
+
+
 def test_partial_manifest_resume(spark, tmp_path):
     """Simulate a crash after some partitions: pre-seed a partial manifest
     and check only the remainder is processed."""
@@ -206,22 +222,6 @@ def test_partial_manifest_resume(spark, tmp_path):
     assert ext.count() == n_supported
     assert ext.select("url").distinct().count() == n_supported
     pages.unpersist()
-
-
-def test_skew_aware_extraction_matches_plain(spark):
-    """Two-tier skew path must produce identical results to the plain
-    path; giant docs (t25) route through the one-doc-per-task tier."""
-    from pdfspark.pipeline import extract_pages_skew_aware
-
-    pages = pages_from_fixtures(spark)
-    plain = {r.url: (r.text, r.error) for r in extract_pages(pages).collect()}
-    skew = {
-        r.url: (r.text, r.error)
-        for r in extract_pages_skew_aware(
-            pages, nsalt=8, big_cutoff_bytes=2000
-        ).collect()
-    }
-    assert skew == plain
 
 
 def test_read_write_format_hooks(spark, tmp_path):

@@ -49,62 +49,77 @@ def test_extraction_no_shuffle_when_presalted(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_extraction_salting_is_single_exchange(spark):
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def salt_partitions(df) -> int:
+    """Partition count of the plan's url-hash salt exchange."""
+    m = re.search(r"Exchange shufflepartitionidpassthrough\(.*\), "
+                  r"(\d+)\), REPARTITION_BY_NUM", plan_of(df))
+    assert m, plan_of(df)
+    return int(m.group(1))
+
+
+@pytest.fixture
+def shuffle_partitions(spark):
+    """Set ``spark.sql.shuffle.partitions`` (the salt count) for one
+    test and restore it after."""
+    before = spark.conf.get(SHUFFLE_PARTITIONS)
+    yield lambda n: spark.conf.set(SHUFFLE_PARTITIONS, str(n))
+    spark.conf.set(SHUFFLE_PARTITIONS, before)
+
+
+def test_extraction_salting_is_single_exchange(spark, shuffle_partitions):
     """Salting is ONE exchange that places each row on its salt directly:
     a hash-repartition on the salt hashes it again and collides the salts
     onto fewer partitions (8 salts on 4 of 8)."""
-    from pdfspark.pipeline import (extract_pages, extract_pages_skew_aware,
-                                   pages_from_fixtures)
+    from pdfspark.pipeline import extract_pages, pages_from_fixtures
 
+    shuffle_partitions(8)
     pages = pages_from_fixtures(spark)
-    plan = plan_of(extract_pages(pages, resalt=True, nsalt=8))
+    plan = plan_of(extract_pages(pages, resalt=True))
     assert plan.count("Exchange") == 1, plan
     assert "shufflepartitionidpassthrough" in plan.lower(), plan
 
     pages = pages_from_fixtures(spark, copies=2)
     parts = {r.part_id for r in
-             extract_pages(pages, nsalt=8).select("part_id").collect()}
+             extract_pages(pages).select("part_id").collect()}
     assert len(parts) == 8, parts
 
-    # two-tier path: a small-tier bucket never shares a partition with a
-    # giant-doc bucket
-    cutoff = 2000
-    tiers: dict = {}
-    for r in extract_pages_skew_aware(
-            pages, nsalt=8, big_cutoff_bytes=cutoff).select(
-            "part_id", "pdf_bytes").collect():
-        tiers.setdefault(r.part_id, set()).add(r.pdf_bytes > cutoff)
-    assert {True} in tiers.values() and {False} in tiers.values(), tiers
-    assert all(len(t) == 1 for t in tiers.values()), tiers
 
-
-def test_extraction_salts_one_partition_per_task_slot(spark):
+def test_extraction_salts_one_partition_per_task_slot(spark, shuffle_partitions):
     """``build_session``'s default shuffle partitions are the core count,
-    so the default salt count is one partition per task slot: local[4]
-    salts into 4 and the kernel stage runs in one wave; an explicit
-    nsalt is kept."""
+    so the salt count is one partition per task slot: local[4] salts
+    into 4 and the kernel stage runs in one wave; a shuffle partition
+    count set on purpose is kept."""
     from pdfspark.pipeline import build_session, extract_pages, pages_from_fixtures
 
-    def salt_partitions(df):
-        m = re.search(r"Exchange shufflepartitionidpassthrough\(.*\), "
-                      r"(\d+)\), REPARTITION_BY_NUM", plan_of(df))
-        assert m, plan_of(df)
-        return int(m.group(1))
-
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
     # the session exists, so this applies build_session's settings to it
     session = build_session(cores=4, app="pdfspark-tests")
-    try:
-        assert session.conf.get(key) == "4"
-        pages = pages_from_fixtures(session, copies=2)
-        assert salt_partitions(extract_pages(pages)) == 4
-        assert salt_partitions(extract_pages(pages, nsalt=8)) == 8
-        parts = {r.part_id for r in
-                 extract_pages(pages).select("part_id").collect()}
-        assert parts == {0, 1, 2, 3}, parts
-    finally:
-        spark.conf.set(key, before)
+    assert session.conf.get(SHUFFLE_PARTITIONS) == "4"
+    pages = pages_from_fixtures(session, copies=2)
+    assert salt_partitions(extract_pages(pages)) == 4
+    parts = {r.part_id for r in
+             extract_pages(pages).select("part_id").collect()}
+    assert parts == {0, 1, 2, 3}, parts
+    shuffle_partitions(8)
+    assert salt_partitions(extract_pages(pages)) == 8
+
+
+def test_skew_query_salts_one_partition_per_slot(spark, shuffle_partitions):
+    """The registered skew query drives ``extract_pages``' url-hash salt:
+    its kernel stage plans exactly one partition per shuffle partition
+    (4 under ``build_session(cores=4)``; 32 at 32 cores)."""
+    from pdfspark.pipeline import build_session
+    from pdfspark.queries import QUERIES
+
+    # build_session resets the shared session's shuffle partitions; the
+    # fixture restores them
+    session = build_session(cores=4, app="pdfspark-tests")
+    assert session.conf.get(SHUFFLE_PARTITIONS) == "4"
+    df = QUERIES["pdf_extract_skew_aware"](session, SF_DIR)
+    assert salt_partitions(df) == 4
+    assert plan_of(df).lower().count("shufflepartitionidpassthrough") == 1
 
 
 def test_roundtrip_is_single_fused_python_stage(spark):
@@ -349,7 +364,7 @@ def test_shard_pack_sections_plan_shape(spark):
 
 
 def test_aqe_splits_skewed_join_partitions(spark):
-    """The third skew tool (after two-tier salting and hot-key caps):
+    """The third skew tool (after url-hash salting and hot-key caps):
     AQE's runtime skew-join split. One hot key holds ~90% of the fact
     rows; with skew thresholds scaled to the data, the final adaptive
     plan must mark the sort-merge join skew=true — proof the pipeline
